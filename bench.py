@@ -18,9 +18,11 @@ bracketing alone stamped a 4x transient "clean" because the contention
 fell BETWEEN two probes): (1) calib probes interleaved through the sweep
 flag host contention directly; (2) every query is also compared against
 the last COMMITTED clean run (HEAD:BENCH.json) and re-timed when it
-exceeds SPARK_GRAFT_REGRESS_FACTOR (default 2.5) x its prior clean
-time. BENCH.json carries the per-query adjudication ("regressions":
-noise vs reproduced), so a reader never needs cross-run forensics.
+exceeds REGRESS_FACTOR (2.5) x its prior clean time. BENCH.json carries
+the per-query adjudication ("regressions": noise vs reproduced), so a
+reader never needs cross-run forensics.
+
+The calibration and retry settings are the module constants below.
 """
 
 from __future__ import annotations
@@ -31,6 +33,12 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+CALIB_IDLE_S = 0.21  # matmul probe seconds on an idle host
+CALIB_FACTOR = 1.5  # probe > CALIB_FACTOR x idle marks a query contended
+CALIB_RETRIES = 2  # re-timing passes over flagged queries
+CALIB_RETRY_S = 150.0  # wall-clock budget for all re-timing passes
+REGRESS_FACTOR = 2.5  # > REGRESS_FACTOR x prior clean time is re-timed
 
 
 def load_prior_ref(
@@ -175,11 +183,7 @@ def main() -> None:
     # measurement with the cleaner stamp. BENCH.json then carries a
     # per-query calib stamp a reader can trust without cross-run forensics.
     PROBE_EVERY = 10
-    idle_s = float(os.environ.get("SPARK_GRAFT_CALIB_IDLE", "0.21"))
-    calib_thresh = round(
-        idle_s * float(os.environ.get("SPARK_GRAFT_CALIB_FACTOR", "1.5")), 3
-    )
-    retry_passes = int(os.environ.get("SPARK_GRAFT_CALIB_RETRIES", "2"))
+    calib_thresh = round(CALIB_IDLE_S * CALIB_FACTOR, 3)
 
     # Prior-run regression net (round-7 lesson: the driver's r07 run
     # stamped a 4x-transient q4_order_priority as "clean" — contention
@@ -190,7 +194,6 @@ def main() -> None:
     # is clean; the retry loop then re-times those too, keeping the
     # faster measurement (a transient re-times away; a real regression
     # reproduces and is reported as such).
-    regress_factor = float(os.environ.get("SPARK_GRAFT_REGRESS_FACTOR", "2.5"))
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     prior_ref, prior_src = load_prior_ref(repo_dir, calib_thresh)
 
@@ -245,14 +248,13 @@ def main() -> None:
     # of the flagged seconds live in a few expensive queries, so a
     # bounded retry rescues the numbers that matter without tripling
     # the bench when the whole sweep is contended.
-    retry_budget = float(os.environ.get("SPARK_GRAFT_CALIB_RETRY_S", "150"))
     t_retry0 = time.perf_counter()
     first_timing = dict(timings)  # pre-retry values, for the regress report
 
     def is_regressed(nm: str) -> bool:
-        return nm in prior_ref and timings[nm] > regress_factor * prior_ref[nm]
+        return nm in prior_ref and timings[nm] > REGRESS_FACTOR * prior_ref[nm]
 
-    for _ in range(retry_passes):
+    for _ in range(CALIB_RETRIES):
         flagged = sorted(
             (
                 nm
@@ -261,13 +263,13 @@ def main() -> None:
             ),
             key=lambda nm: -timings[nm],
         )
-        if not flagged or time.perf_counter() - t_retry0 > retry_budget:
+        if not flagged or time.perf_counter() - t_retry0 > CALIB_RETRY_S:
             break
         print(f"# calib retry: {len(flagged)} flagged "
               f"({sum(1 for nm in flagged if is_regressed(nm))} vs prior), "
-              f"budget {retry_budget:.0f}s", file=sys.stderr)
+              f"budget {CALIB_RETRY_S:.0f}s", file=sys.stderr)
         for nm in flagged:
-            if time.perf_counter() - t_retry0 > retry_budget:
+            if time.perf_counter() - t_retry0 > CALIB_RETRY_S:
                 print("# calib retry budget exhausted", file=sys.stderr)
                 break
             before = calib()
@@ -291,7 +293,7 @@ def main() -> None:
                 calibs[nm] = min(stamp, calibs[nm])
 
     regressions = adjudicate_regressions(
-        first_timing, timings, prior_ref, regress_factor
+        first_timing, timings, prior_ref, REGRESS_FACTOR
     )
     for nm, r in regressions.items():
         print(
@@ -313,10 +315,10 @@ def main() -> None:
         # single-thread matmul seconds before/after the sweep:
         # normalize cross-run comparisons on a noisy shared host
         "calib_matmul_s": [calib_before, probes[-1]],
-        "calib_idle_s": idle_s,
+        "calib_idle_s": CALIB_IDLE_S,
         "calib_threshold_s": calib_thresh,
         "n_calib_contended": n_contended,
-        "regress_factor": regress_factor,
+        "regress_factor": REGRESS_FACTOR,
         "prior_bench": prior_src,
         "n_regressions_flagged": len(regressions),
         "n_regressions_reproduced": sum(

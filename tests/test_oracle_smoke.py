@@ -12,9 +12,11 @@ which is exactly when new coverage should rotate in.
 
 from __future__ import annotations
 
+import sys
+
 import __spark_entry__ as entrymod
 
-from tools.check_oracle import sweep
+from tools import check_oracle
 
 STRIDE = 10
 
@@ -33,6 +35,16 @@ ALWAYS = [
     "lexical_semantic_agreement",
     "kmeans_clusters",
     "corpus_pipeline_e2e",
+    # twins built on the shared MinHash band-index / estimator CTEs and
+    # the shared logistic Newton solver
+    "incremental_near_dup",
+    "blocking_quality_eval",
+    "lsh_cost_advisor",
+    "minhash_estimate_error",
+    "minhash_perm_tradeoff",
+    "incremental_pipeline_e2e",
+    "logistic_irls_lang",
+    "ipw_click_uplift",
 ]
 
 
@@ -46,10 +58,22 @@ def smoke_set() -> list[str]:
 def test_oracle_smoke_subset(spark, sf_dir):
     only = smoke_set()
     assert len(only) >= 40
-    report = sweep(spark, sf_dir, only=only)
+    report = check_oracle.sweep(spark, sf_dir, only=only)
     assert set(report) == set(only)
     failures = {n: p for n, p in report.items() if p}
     assert not failures, (
         f"{len(failures)} oracle mismatches in smoke subset: "
         + "; ".join(f"{n}: {p}" for n, p in failures.items())
     )
+
+
+def test_check_oracle_rejects_unknown_query_names(
+    monkeypatch, capsys, sf_dir
+):
+    argv = ["check_oracle.py", sf_dir, "dedup_exact", "no_such_query"]
+    monkeypatch.setattr(sys, "argv", argv)
+    assert check_oracle.main() == 2
+    out = capsys.readouterr().out
+    assert "no_such_query" in out
+    assert "dedup_exact" not in out
+    assert "all queries match" not in out

@@ -11,6 +11,9 @@ inside CI (the test that turns a silent fixture/encoding drift into a
 red test run instead of a red round).
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Exits 0 when every checked query matches, 1 on a mismatch, and 2 when a
+named query is not registered.
 """
 
 from __future__ import annotations
@@ -140,6 +143,7 @@ def sweep(spark, sf_dir, only=None, verbose=False):
 
 
 def main() -> int:
+    import __spark_entry__ as entrymod
     from training_etl_demo_2_spark.session import get_spark
 
     argv = list(sys.argv[1:])
@@ -153,6 +157,10 @@ def main() -> int:
         del argv[i : i + 2]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
+    unknown = sorted(only - set(entrymod.queries()))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
 
     spark = get_spark(app_name="oracle-check")
     report = sweep(spark, sf_dir, only=only or None, verbose=True)

@@ -2356,7 +2356,6 @@ def nelson_aalen_churn_sql(churn_days: int = KM_CHURN_DAYS) -> str:
 # IPW causal uplift: confounder-adjusted click -> purchase effect
 # ---------------------------------------------------------------------------
 
-IPW_STEPS = 3
 IPW_X_SCALE = 10.0  # n_events / 10 keeps the propensity Hessian conditioned
 IPW_CLIP = 0.01  # positivity clipping: e(x) in [0.01, 0.99]
 
@@ -2368,10 +2367,11 @@ def ipw_click_uplift(t: dict[str, DataFrame]) -> DataFrame:
     E[Y|clicked] − E[Y|not] confounds treatment with activity (heavy
     users click more AND buy more). IPW reweights each user by
     1/P(treatment|activity) so the two arms match on the confounder,
-    with the propensity fit INSIDE the engine by the shared unrolled
-    Newton recurrence (``logistic_irls_lang``'s exact nano lattice:
-    treatment ~ total-event activity, 3 steps from β=0) and Hájek
-    normalization on the weighted means.
+    with the propensity fit INSIDE the engine by
+    ``validation._logistic_newton_beta``, the unrolled Newton solver
+    ``logistic_irls_lang`` also uses (treatment ~ total-event activity,
+    ``IRLS_STEPS`` steps from β=0), and Hájek normalization on the
+    weighted means.
 
     Exactness: per-user (T, Y, x) from one groupBy; every
     gradient/Hessian/weight term nano-rounded before any sum
@@ -2388,6 +2388,8 @@ def ipw_click_uplift(t: dict[str, DataFrame]) -> DataFrame:
     narrow map ⋈ ONE-ROW broadcast β + a 5-integer aggregate; final
     one-row fold. Output: one row (naive vs IPW uplift + the fit).
     """
+    from .validation import _logistic_newton_beta
+
     ev = t["events"]
     rows = ev.groupBy(
         F.col("user_id").alias("uid"), F.to_date("ts").alias("day")
@@ -2402,48 +2404,7 @@ def ipw_click_uplift(t: dict[str, DataFrame]) -> DataFrame:
     )
     dec = lambda c: c.cast("decimal(38,0)")
     nano = lambda e: F.floor(e * 1e9 + F.lit(0.5)).cast("long")
-    beta = None
-    for _ in range(IPW_STEPS):
-        if beta is not None:
-            cur = rows.crossJoin(F.broadcast(beta))
-            b0, b1 = F.col("b0"), F.col("b1")
-        else:
-            cur = rows
-            b0, b1 = F.lit(0.0), F.lit(0.0)
-        eta = b0 + b1 * F.col("x")
-        mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        w = mu * (F.lit(1.0) - mu)
-        tcol = F.col("tr").cast("double")
-        terms = cur.select(
-            nano(tcol - mu).alias("g0"),
-            nano((tcol - mu) * F.col("x")).alias("g1"),
-            nano(w).alias("h00"),
-            nano(w * F.col("x")).alias("h01"),
-            nano(w * F.col("x") * F.col("x")).alias("h11"),
-        )
-        agg = terms.groupBy().agg(
-            F.sum(dec(F.col("g0"))).alias("sg0"),
-            F.sum(dec(F.col("g1"))).alias("sg1"),
-            F.sum(dec(F.col("h00"))).alias("sh00"),
-            F.sum(dec(F.col("h01"))).alias("sh01"),
-            F.sum(dec(F.col("h11"))).alias("sh11"),
-        )
-        g0 = F.col("sg0").cast("double") / 1e9
-        g1 = F.col("sg1").cast("double") / 1e9
-        h00 = F.col("sh00").cast("double") / 1e9
-        h01 = F.col("sh01").cast("double") / 1e9
-        h11 = F.col("sh11").cast("double") / 1e9
-        det = h00 * h11 - h01 * h01
-        nb0 = (h11 * g0 - h01 * g1) / det
-        nb1 = (h00 * g1 - h01 * g0) / det
-        if beta is not None:
-            agg = agg.crossJoin(F.broadcast(beta))
-            beta = agg.select(
-                (F.col("b0") + nb0).alias("b0"),
-                (F.col("b1") + nb1).alias("b1"),
-            )
-        else:
-            beta = agg.select(nb0.alias("b0"), nb1.alias("b1"))
+    beta = _logistic_newton_beta(rows, "tr")
     scored = rows.crossJoin(F.broadcast(beta))
     e_raw = F.lit(1.0) / (
         F.lit(1.0) + F.exp(-(F.col("b0") + F.col("b1") * F.col("x")))
@@ -2493,52 +2454,11 @@ def ipw_click_uplift(t: dict[str, DataFrame]) -> DataFrame:
 
 
 def ipw_click_uplift_sql() -> str:
-    """Twin of ipw_click_uplift: per-user CTE + unrolled propensity
-    Newton steps (identical nano lattice) + clipped Hájek fold."""
-    steps = ["beta0 AS (SELECT 0.0 AS b0, 0.0 AS b1)"]
-    for i in range(IPW_STEPS):
-        steps.append(f"""terms{i} AS (
-        SELECT CAST(floor((tr - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * 1e9 + 0.5) AS BIGINT) AS g0,
-               CAST(floor((tr - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x)))) * x
-                          * 1e9 + 0.5) AS BIGINT) AS g1,
-               CAST(floor((1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * (1.0 - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * 1e9 + 0.5) AS BIGINT) AS h00,
-               CAST(floor((1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * (1.0 - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * x * 1e9 + 0.5) AS BIGINT) AS h01,
-               CAST(floor((1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * (1.0 - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * x * x * 1e9 + 0.5) AS BIGINT) AS h11
-        FROM rows, beta{i} b
-    ),
-    agg{i} AS (
-        SELECT sum(CAST(g0 AS HUGEINT)) AS sg0,
-               sum(CAST(g1 AS HUGEINT)) AS sg1,
-               sum(CAST(h00 AS HUGEINT)) AS sh00,
-               sum(CAST(h01 AS HUGEINT)) AS sh01,
-               sum(CAST(h11 AS HUGEINT)) AS sh11
-        FROM terms{i}
-    ),
-    beta{i + 1} AS (
-        SELECT b.b0 + ((CAST(sh11 AS DOUBLE)/1e9) * (CAST(sg0 AS DOUBLE)/1e9)
-                       - (CAST(sh01 AS DOUBLE)/1e9)
-                         * (CAST(sg1 AS DOUBLE)/1e9))
-                      / ((CAST(sh00 AS DOUBLE)/1e9)
-                         * (CAST(sh11 AS DOUBLE)/1e9)
-                         - (CAST(sh01 AS DOUBLE)/1e9)
-                           * (CAST(sh01 AS DOUBLE)/1e9)) AS b0,
-               b.b1 + ((CAST(sh00 AS DOUBLE)/1e9) * (CAST(sg1 AS DOUBLE)/1e9)
-                       - (CAST(sh01 AS DOUBLE)/1e9)
-                         * (CAST(sg0 AS DOUBLE)/1e9))
-                      / ((CAST(sh00 AS DOUBLE)/1e9)
-                         * (CAST(sh11 AS DOUBLE)/1e9)
-                         - (CAST(sh01 AS DOUBLE)/1e9)
-                           * (CAST(sh01 AS DOUBLE)/1e9)) AS b1
-        FROM agg{i}, beta{i} b
-    )""")
-    chain = ",\n    ".join(steps)
+    """Twin of ipw_click_uplift: per-user CTE + the shared unrolled
+    Newton steps (``validation._logistic_newton_sql``) + clipped Hájek
+    fold."""
+    from .validation import IRLS_STEPS, _logistic_newton_sql
+
     clip_lo, clip_hi = IPW_CLIP, 1.0 - IPW_CLIP
     e = (
         f"least(greatest(1.0/(1.0 + exp(-(b.b0 + b.b1 * x))), {clip_lo!r}), "
@@ -2553,7 +2473,7 @@ def ipw_click_uplift_sql() -> str:
                CAST(count(*) AS DOUBLE) / {IPW_X_SCALE!r} AS x
         FROM events GROUP BY user_id, CAST(ts AS DATE)
     ),
-    {chain},
+    {_logistic_newton_sql("tr")},
     scored AS (
         SELECT tr, y, b.b0 AS b0, b.b1 AS b1,
                CAST(floor(tr * y / {e} * 1e9 + 0.5) AS BIGINT) AS w1y,
@@ -2562,7 +2482,7 @@ def ipw_click_uplift_sql() -> str:
                     AS BIGINT) AS w0y,
                CAST(floor((1.0 - tr) / (1.0 - {e}) * 1e9 + 0.5)
                     AS BIGINT) AS w0
-        FROM rows, beta{IPW_STEPS} b
+        FROM rows, beta{IRLS_STEPS} b
     )
     SELECT CAST(count(*) AS BIGINT) AS n_units,
            CAST(sum(tr) AS BIGINT) AS n_treat,

@@ -347,15 +347,11 @@ def shingle_hashes(
     single-file test input would otherwise run it on one core."""
     df = spread_scan(df)
     tokens = F.split(F.col(text_col), " ")
-    # Composed hashing (optimization r10): hash each token once and fold
-    # shingle hashes from per-token (h, 31^len) — bit-identical to
-    # hashing the joined shingle string (tests/test_ngram_hash_compose)
-    # without ever materializing it. array_distinct on the HASHES equals
-    # the old distinct-strings-then-hash set: duplicate strings hash
-    # equal, and the (vanishingly rare) distinct-string hash collision
-    # was collapsed by the old global distinct anyway. That global
-    # .distinct() shuffle is gone too: each doc is ONE input row, so
-    # (doc_id, h) is already unique after the row-local array_distinct.
+    # word_ngram_hashes folds each joined shingle string. array_distinct
+    # on the HASHES equals the distinct-strings-then-hash set: duplicate
+    # strings hash equal. Each doc is ONE input row, so (doc_id, h) is
+    # already unique after the row-local array_distinct — no global
+    # .distinct() shuffle.
     sh = df.select(
         "doc_id",
         F.explode(F.array_distinct(word_ngram_hashes(tokens, n))).alias("h"),
@@ -556,11 +552,8 @@ def _shingle_arrays_from_tokens(toks_df: DataFrame, n: int) -> DataFrame:
     # Catalyst evaluate the whole ngram+hash+distinct chain twice
     # (Filter and Project don't share the subexpression — measured ~2x
     # on the map stage)
-    # Composed hashing (optimization r10): fold shingle hashes from
-    # per-token (h, 31^len) structs — bit-identical to hashing the
-    # joined shingle strings (the old inner array_distinct on STRINGS
-    # is subsumed: duplicate strings produce duplicate hashes, which
-    # the outer array_distinct on hashes already collapsed).
+    # array_distinct on the shingle HASHES needs no distinct on the
+    # strings first: duplicate shingle strings hash equal.
     return toks_df.filter(F.size(tokens) >= n).select(
         "doc_id",
         F.array_distinct(word_ngram_hashes(tokens, n)).alias("hs"),
@@ -599,8 +592,10 @@ def _band_key(cols: list[Column]) -> Column:
 
 
 def _band_relation(hs: DataFrame) -> DataFrame:
-    """(doc_id, band, bk) LSH band keys from a shingle-ARRAY relation
-    (:func:`_shingle_arrays` output) — signature mins and the band-key
+    """(doc_id, hs, band, bk) LSH band keys from a shingle-ARRAY relation
+    (:func:`_shingle_arrays` output), with each row's shingle array
+    passed through for callers that verify on it (column pruning drops
+    it everywhere else) — signature mins and the band-key
     fold are row-local projections, so the only row multiplication is
     the 8-rows-per-doc band posexplode. This relation IS the
     persistent-index format the incremental path probes, so every
@@ -608,7 +603,7 @@ def _band_relation(hs: DataFrame) -> DataFrame:
     ``incremental_near_dup``, the banding evaluators) must derive it
     identically — values are pinned against the r01 exploded-groupBy
     formulation by the oracle twins."""
-    sig = hs.select("doc_id", *_signature_cols())
+    sig = hs.select("doc_id", "hs", *_signature_cols())
     band_cols = [
         _band_key(
             [F.col(f"m{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
@@ -621,6 +616,7 @@ def _band_relation(hs: DataFrame) -> DataFrame:
     # neutral at sf0.1 and only adds materialization latency.
     return sig.select(
         "doc_id",
+        "hs",
         F.posexplode(F.array(*band_cols)).alias("band", "bk"),
     )
 
@@ -1038,10 +1034,10 @@ def substring_dup_stats(
     output (n_grams = 0, bp = 0).
     """
     toks = F.split(F.lower(F.col(text_col)), " ")
-    # composed per-token hashing (r10). Deliberately NOT persisted even
-    # though two branches consume it: the exploded gram relation is
-    # ~k× corpus-sized, so materializing it costs more than the second
-    # streaming pass at every scale (measured 0.68 vs 0.80 s at sf0.1;
+    # Deliberately NOT persisted even though two branches consume it:
+    # the exploded gram relation is ~k× corpus-sized, so materializing
+    # it costs more than the second streaming pass at every scale
+    # (measured 0.68 vs 0.80 s at sf0.1;
     # at 100 TB persisting a 5× corpus explode is memory-hostile).
     grams = spread_scan(df).select(
         "doc_id",
@@ -2296,25 +2292,10 @@ def blocking_quality_eval_sql(
 ) -> str:
     """Twin of blocking_quality_eval: same shingle/signature/band CTEs
     as the minhash oracle, same exact truth tier."""
-    from .oracle import (
-        _band_key_expr,
-        _shingles_cte,
-        _signature_exprs,
-    )
+    from .oracle import _minhash_bands_cte
 
-    band_rows = "\n        UNION ALL\n        ".join(
-        f"SELECT doc_id, {b} AS band, {_band_key_expr(b)} AS bk FROM sig"
-        for b in range(BANDS)
-    )
     return f"""
-    WITH {_shingles_cte(n)},
-    sig AS (
-        SELECT doc_id, {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    WITH {_minhash_bands_cte(n)},
     cand AS MATERIALIZED (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk
@@ -2557,21 +2538,10 @@ def lsh_cost_advisor(
 
 def lsh_cost_advisor_sql(n: int = DEFAULT_NGRAM) -> str:
     """Twin of lsh_cost_advisor over the minhash oracle band CTEs."""
-    from .oracle import _band_key_expr, _shingles_cte, _signature_exprs
+    from .oracle import _minhash_bands_cte
 
-    band_rows = "\n        UNION ALL\n        ".join(
-        f"SELECT doc_id, {b} AS band, {_band_key_expr(b)} AS bk FROM sig"
-        for b in range(BANDS)
-    )
     return f"""
-    WITH {_shingles_cte(n)},
-    sig AS (
-        SELECT doc_id, {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    WITH {_minhash_bands_cte(n)},
     occ AS (
         SELECT band, bk, CAST(count(*) AS BIGINT) AS c
         FROM bands GROUP BY 1, 2
@@ -3311,6 +3281,50 @@ def kcore_decomposition_sql(
 # ---------------------------------------------------------------------------
 
 
+def _verified_signature_pairs(
+    df: DataFrame, text_col: str, n: int, threshold: float
+) -> DataFrame:
+    """The verified near-dup pairs (doc_a, doc_b, jaccard) joined to both
+    documents' signatures: a0..a31 for doc_a, b0..b31 for doc_b.
+
+    ONE persisted shingle-array relation feeds the LSH tier and both
+    signature sides, so the corpus is tokenized and hashed once."""
+    hs = _shingle_arrays(df, text_col, n).transform(tracked_persist)
+    pairs = _minhash_pairs_from_arrays(hs, threshold)
+    sig = hs.select("doc_id", *_signature_cols())
+    sa = sig.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"m{i}").alias(f"a{i}") for i in range(NUM_PERM)],
+    )
+    sb = sig.select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"m{i}").alias(f"b{i}") for i in range(NUM_PERM)],
+    )
+    return pairs.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _agreement_estimate(k: int) -> Column:
+    """MinHash Jaccard estimate from the first ``k`` permutations: the
+    share of signature slots on which the pair agrees (a_i = b_i)."""
+    match = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(k)
+    )
+    return match.cast("long").cast("double") / k
+
+
+def _estimate_error_aggs(est: Column) -> list[Column]:
+    """The one-row fold of an estimate against the exact ``jaccard``:
+    (n_pairs, mean_exact, mean_est, bias, mae)."""
+    return [
+        F.count(F.lit(1)).cast("long").alias("n_pairs"),
+        F.round(F.avg("jaccard"), 6).alias("mean_exact"),
+        F.round(F.avg(est), 6).alias("mean_est"),
+        F.round(F.avg(est - F.col("jaccard")), 6).alias("bias"),
+        F.round(F.avg(F.abs(est - F.col("jaccard"))), 6).alias("mae"),
+    ]
+
+
 def minhash_estimate_error(
     df: DataFrame,
     text_col: str = "text",
@@ -3333,74 +3347,19 @@ def minhash_estimate_error(
     doc-keyed; the 32 equality sums are one narrow projection. Output:
     one row — (n_pairs, mean_exact, mean_est, bias, mae).
     """
-    # ONE persisted shingle-array relation (r10): the LSH tier and both
-    # signature sides derive from it — previously the corpus was
-    # tokenized+hashed three times (once inside minhash_lsh_pairs, once
-    # per unpersisted signature side).
-    hs = _shingle_arrays(df, text_col, n).transform(tracked_persist)
-    pairs = _minhash_pairs_from_arrays(hs, threshold)
-    sig = hs.select("doc_id", *_signature_cols())
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(NUM_PERM)],
+    scored = _verified_signature_pairs(df, text_col, n, threshold).select(
+        "jaccard", _agreement_estimate(NUM_PERM).alias("est")
     )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(NUM_PERM)],
-    )
-    match = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_PERM)
-    )
-    scored = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "jaccard",
-            (match.cast("long").cast("double") / NUM_PERM).alias("est"),
-        )
-    )
-    return scored.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.round(F.avg("jaccard"), 6).alias("mean_exact"),
-        F.round(F.avg("est"), 6).alias("mean_est"),
-        F.round(F.avg(F.col("est") - F.col("jaccard")), 6).alias("bias"),
-        F.round(F.avg(F.abs(F.col("est") - F.col("jaccard"))), 6).alias(
-            "mae"
-        ),
-    )
+    return scored.agg(*_estimate_error_aggs(F.col("est")))
 
 
 def minhash_estimate_error_sql(
     n: int = DEFAULT_NGRAM, threshold: float = 0.8
 ) -> str:
-    """Twin: the LSH pair CTE + signature self-join + identical folds."""
-    from .oracle import _shingles_cte, _signature_exprs, minhash_lsh_sql
-
-    match = " + ".join(
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
-        for i in range(NUM_PERM)
-    )
+    """Twin: the perm-curve twin's all-permutations arm."""
     return f"""
-    WITH pairs AS MATERIALIZED ({minhash_lsh_sql(n, threshold)}),
-    {_shingles_cte(n).lstrip()},
-    sig AS (
-        SELECT doc_id, {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    ),
-    scored AS (
-        SELECT p.jaccard,
-               CAST(({match}) AS DOUBLE) / {NUM_PERM} AS est
-        FROM pairs p
-        JOIN sig sa ON sa.doc_id = p.doc_a
-        JOIN sig sb ON sb.doc_id = p.doc_b
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-           round(avg(jaccard), 6) AS mean_exact,
-           round(avg(est), 6) AS mean_est,
-           round(avg(est - jaccard), 6) AS bias,
-           round(avg(abs(est - jaccard)), 6) AS mae
-    FROM scored
+    SELECT n_pairs, mean_exact, mean_est, bias, mae
+    FROM ({minhash_perm_tradeoff_sql(n, threshold, (NUM_PERM,))})
     """
 
 
@@ -3790,39 +3749,16 @@ def minhash_perm_tradeoff(
     |ks| conditional one-row folds over one joined relation.
     Output: (n_perms, n_pairs, mean_exact, mean_est, bias, mae).
     """
-    # ONE persisted shingle-array relation (r10), as in
-    # minhash_estimate_error: LSH tier + both signature sides share it.
-    hs = _shingle_arrays(df, text_col, n).transform(tracked_persist)
-    pairs = _minhash_pairs_from_arrays(hs, threshold)
-    sig = hs.select("doc_id", *_signature_cols())
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(NUM_PERM)],
+    joined = _verified_signature_pairs(df, text_col, n, threshold).transform(
+        tracked_persist
     )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(NUM_PERM)],
-    )
-    joined = pairs.join(sa, "doc_a").join(sb, "doc_b").transform(tracked_persist)
-    outs = []
-    for k in ks:
-        match = sum(
-            F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-            for i in range(k)
+    outs = [
+        joined.agg(
+            F.lit(k).cast("long").alias("n_perms"),
+            *_estimate_error_aggs(_agreement_estimate(k)),
         )
-        est = match.cast("long").cast("double") / k
-        outs.append(
-            joined.agg(
-                F.lit(k).cast("long").alias("n_perms"),
-                F.count(F.lit(1)).cast("long").alias("n_pairs"),
-                F.round(F.avg("jaccard"), 6).alias("mean_exact"),
-                F.round(F.avg(est), 6).alias("mean_est"),
-                F.round(F.avg(est - F.col("jaccard")), 6).alias("bias"),
-                F.round(F.avg(F.abs(est - F.col("jaccard"))), 6).alias(
-                    "mae"
-                ),
-            )
-        )
+        for k in ks
+    ]
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)
@@ -3833,37 +3769,29 @@ def minhash_perm_tradeoff_sql(
     n: int = DEFAULT_NGRAM, threshold: float = 0.8, ks: tuple = PERM_CURVE_KS
 ) -> str:
     """Twin: same pair CTE + signature joins, per-k prefix folds."""
-    from .oracle import _shingles_cte, _signature_exprs, minhash_lsh_sql
+    from .oracle import _signature_cte, minhash_lsh_sql
 
-    arms = []
-    for k in ks:
+    def arm(k: int) -> str:
         match = " + ".join(
             f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
             for i in range(k)
         )
-        arms.append(
-            f"""
+        est = f"CAST(({match}) AS DOUBLE) / {k}"
+        return f"""
     SELECT CAST({k} AS BIGINT) AS n_perms,
            CAST(count(*) AS BIGINT) AS n_pairs,
            round(avg(p.jaccard), 6) AS mean_exact,
-           round(avg(CAST(({match}) AS DOUBLE) / {k}), 6) AS mean_est,
-           round(avg(CAST(({match}) AS DOUBLE) / {k} - p.jaccard), 6)
-               AS bias,
-           round(avg(abs(CAST(({match}) AS DOUBLE) / {k} - p.jaccard)), 6)
-               AS mae
+           round(avg({est}), 6) AS mean_est,
+           round(avg({est} - p.jaccard), 6) AS bias,
+           round(avg(abs({est} - p.jaccard)), 6) AS mae
     FROM pairs p
     JOIN sig sa ON sa.doc_id = p.doc_a
     JOIN sig sb ON sb.doc_id = p.doc_b"""
-        )
-    joined = " UNION ALL ".join(arms)
+
     return f"""
     WITH pairs AS MATERIALIZED ({minhash_lsh_sql(n, threshold)}),
-    {_shingles_cte(n).lstrip()},
-    sig AS MATERIALIZED (
-        SELECT doc_id, {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    )
-    {joined}
+    {_signature_cte(n)}
+    {" UNION ALL ".join(arm(k) for k in ks)}
     """
 
 

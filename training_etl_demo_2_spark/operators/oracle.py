@@ -4,6 +4,32 @@ The Spark implementations in ``dedup.py``/``similarity.py`` use pure
 integer/double arithmetic precisely so these SQL twins can reproduce
 them bit-for-bit; the LSH coefficients are imported from dedup.py, so
 engine and oracle can never drift apart.
+
+Shared CTEs: each MinHash formula has one SQL definition here, and
+every twin that needs it (here, in dedup.py and in
+plans/corpus_pipeline.py) builds on it:
+
+* ``_shingles_cte``: ``sh(doc_id, h)``, distinct shingle hashes;
+* ``_signature_cte``: adds ``sig(doc_id, m0..m31)``;
+* ``_minhash_bands_cte``: adds ``bands(doc_id, band, bk)``, the LSH
+  band index, for twins with their own candidate rule (incremental
+  probe, blocking evaluation, cost advisor, composed pipeline);
+* ``_lsh_candidates_cte``: adds ``cand(doc_a, doc_b)``, the banded
+  self-join candidates.
+
+The signature-agreement estimator twins share one per-k arm
+(``dedup.minhash_perm_tradeoff_sql``); the logistic Newton steps are
+``validation._logistic_newton_sql``.
+
+The twins share constants with the engine, never text. Each side
+keeps one definition per formula, but the engine computes signatures
+row-locally (``array_min(transform(...))`` over a shingle array,
+posexploded band keys) while these twins explode the shingles, take
+``min`` per ``GROUP BY doc_id`` and union one SELECT per band. The
+differential therefore still compares two independent formulations, so
+a bug in one generator cannot pass by appearing on both sides. This
+deliberately narrows the aim of one generator shared by the engine and
+its DuckDB twin to one generator per side.
 """
 
 from __future__ import annotations
@@ -269,26 +295,50 @@ def _band_key_expr(b: int) -> str:
     return expr
 
 
-def minhash_lsh_sql(n: int = DEFAULT_NGRAM, threshold: float = 0.8) -> str:
+def _signature_cte(n: int = DEFAULT_NGRAM, table: str = "documents") -> str:
+    """CTE chain ``sh`` → ``sig(doc_id, m0..m31)``: the shingle
+    relation of ``table`` and its MinHash signature per document.
+    MATERIALIZED because every consumer reads ``sig`` more than once
+    (the band union reads it once per band), and DuckDB would otherwise
+    recompute the 32-min aggregate per reference."""
+    return f"""{_shingles_cte(n, table)},
+    sig AS MATERIALIZED (
+        SELECT doc_id,
+               {_signature_exprs()}
+        FROM sh GROUP BY doc_id
+    )"""
+
+
+def _minhash_bands_cte(
+    n: int = DEFAULT_NGRAM, table: str = "documents"
+) -> str:
+    """CTE chain ``sh`` → ``sig`` → ``bands(doc_id, band, bk)``: the LSH
+    band index of ``table`` (``documents``, or a CTE with the same
+    ``doc_id``/``text`` columns)."""
     band_rows = "\n        UNION ALL\n        ".join(
         f"SELECT doc_id, {b} AS band, {_band_key_expr(b)} AS bk FROM sig"
         for b in range(BANDS)
     )
-    return f"""
-    WITH {_shingles_cte(n)},
-    sig AS (
-        SELECT doc_id,
-               {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    ),
+    return f"""{_signature_cte(n, table)},
     bands AS (
         {band_rows}
-    ),
+    )"""
+
+
+def _lsh_candidates_cte(n: int = DEFAULT_NGRAM) -> str:
+    """CTE chain ending in ``cand(doc_a, doc_b)``: the banded MinHash
+    candidate pairs shared by every verify tier."""
+    return f"""{_minhash_bands_cte(n)},
     cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk
         WHERE a.doc_id < b.doc_id
-    ),
+    )"""
+
+
+def minhash_lsh_sql(n: int = DEFAULT_NGRAM, threshold: float = 0.8) -> str:
+    return f"""
+    WITH {_lsh_candidates_cte(n)},
     {_jaccard_sql('JOIN cand c ON c.doc_a = s.doc_a AND c.doc_b = s.doc_b', threshold)}
     """
 
@@ -411,7 +461,7 @@ def simhash_sql() -> str:
 def simhash_pairs_sql(max_hamming: int = 3) -> str:
     # (h >> s) & mask: DuckDB's >> is arithmetic, but the mask discards
     # sign-extension, so this extracts band bits exactly as the engine.
-    band_rows = "\n        UNION ALL\n        ".join(
+    bands = "\n        UNION ALL\n        ".join(
         f"SELECT doc_id, simhash, {b} AS band, "
         f"(simhash >> {b * SIMHASH_BAND_BITS}) & {2 ** SIMHASH_BAND_BITS - 1} "
         f"AS bk FROM fp"
@@ -420,7 +470,7 @@ def simhash_pairs_sql(max_hamming: int = 3) -> str:
     return f"""
     WITH {_simhash_cte()},
     bands AS (
-        {band_rows}
+        {bands}
     ),
     pairs AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -591,20 +641,8 @@ def incremental_near_dup_sql(
     """Twin of dedup.incremental_near_dup over the parity-split
     registered query: incoming = odd doc_ids probed against the
     even-doc_id corpus band index."""
-    band_rows = "\n        UNION ALL\n        ".join(
-        f"SELECT doc_id, {b} AS band, {_band_key_expr(b)} AS bk FROM sig"
-        for b in range(BANDS)
-    )
     return f"""
-    WITH {_shingles_cte(n)},
-    sig AS (
-        SELECT doc_id,
-               {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    WITH {_minhash_bands_cte(n)},
     cand AS (
         SELECT DISTINCT a.doc_id AS doc_new, b.doc_id AS doc_old
         FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk
@@ -745,30 +783,6 @@ def winnowing_fingerprints_sql(n: int = 4, w: int = 5) -> str:
     LEFT JOIN per_doc ON ng.doc_id = per_doc.doc_id
     LEFT JOIN shared ON ng.doc_id = shared.doc_id
     """
-
-
-def _lsh_candidates_cte(n: int = DEFAULT_NGRAM) -> str:
-    """CTE chain producing ``cand(doc_a, doc_b)`` — the banded MinHash
-    candidate pairs shared by every verify tier (extracted from
-    minhash_lsh_sql so new verify metrics reuse the identical index)."""
-    band_rows = "\n        UNION ALL\n        ".join(
-        f"SELECT doc_id, {b} AS band, {_band_key_expr(b)} AS bk FROM sig"
-        for b in range(BANDS)
-    )
-    return f"""{_shingles_cte(n)},
-    sig AS (
-        SELECT doc_id,
-               {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        {band_rows}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk
-        WHERE a.doc_id < b.doc_id
-    )"""
 
 
 def dedup_edit_distance_sql(

@@ -3334,6 +3334,97 @@ IRLS_STEPS = 3
 IRLS_X_SCALE = 1000.0  # n_chars / 1000 keeps the Hessian well-conditioned
 
 
+def _logistic_newton_beta(rows: DataFrame, target: str) -> DataFrame:
+    """One-row (b0, b1): the 1-D logistic fit of the 0/1 column
+    ``target`` on the double column ``x`` of ``rows``, by ``IRLS_STEPS``
+    unrolled Newton steps from β = (0, 0). Each step is one map over
+    the rows ⋈ the broadcast one-row β (gradient/Hessian terms
+    nano-rounded to integers), one 5-cell decimal aggregate and a
+    closed-form 2×2 solve on the 1-row result."""
+    dec = lambda c: c.cast("decimal(38,0)")
+    nano = lambda e: F.floor(e * 1e9 + F.lit(0.5)).cast("long")
+    y = F.col(target).cast("double")
+    beta = None
+    for _ in range(IRLS_STEPS):
+        if beta is not None:
+            cur = rows.crossJoin(F.broadcast(beta))
+            b0, b1 = F.col("b0"), F.col("b1")
+        else:
+            cur = rows
+            b0, b1 = F.lit(0.0), F.lit(0.0)
+        eta = b0 + b1 * F.col("x")
+        mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+        w = mu * (F.lit(1.0) - mu)
+        terms = cur.select(
+            nano(y - mu).alias("g0"),
+            nano((y - mu) * F.col("x")).alias("g1"),
+            nano(w).alias("h00"),
+            nano(w * F.col("x")).alias("h01"),
+            nano(w * F.col("x") * F.col("x")).alias("h11"),
+        )
+        agg = terms.groupBy().agg(
+            F.sum(dec(F.col("g0"))).alias("sg0"),
+            F.sum(dec(F.col("g1"))).alias("sg1"),
+            F.sum(dec(F.col("h00"))).alias("sh00"),
+            F.sum(dec(F.col("h01"))).alias("sh01"),
+            F.sum(dec(F.col("h11"))).alias("sh11"),
+        )
+        g0 = F.col("sg0").cast("double") / 1e9
+        g1 = F.col("sg1").cast("double") / 1e9
+        h00 = F.col("sh00").cast("double") / 1e9
+        h01 = F.col("sh01").cast("double") / 1e9
+        h11 = F.col("sh11").cast("double") / 1e9
+        det = h00 * h11 - h01 * h01
+        nb0 = (h11 * g0 - h01 * g1) / det
+        nb1 = (h00 * g1 - h01 * g0) / det
+        if beta is not None:
+            agg = agg.crossJoin(F.broadcast(beta))
+            beta = agg.select(
+                (F.col("b0") + nb0).alias("b0"),
+                (F.col("b1") + nb1).alias("b1"),
+            )
+        else:
+            beta = agg.select(nb0.alias("b0"), nb1.alias("b1"))
+    return beta
+
+
+def _logistic_newton_sql(target: str) -> str:
+    """Twin of :func:`_logistic_newton_beta`: the CTE chain
+    beta0 .. beta{IRLS_STEPS} over a ``rows(target, x)`` CTE, with the
+    identical nano-term lattice and 2×2 closed-form update."""
+    mu = "1.0/(1.0 + exp(-(b.b0 + b.b1 * x)))"
+    w = f"({mu}) * (1.0 - {mu})"
+    nano = lambda e: f"CAST(floor({e} * 1e9 + 0.5) AS BIGINT)"
+    d = lambda c: f"(CAST({c} AS DOUBLE)/1e9)"
+    det = f"({d('sh00')} * {d('sh11')} - {d('sh01')} * {d('sh01')})"
+    steps = ["beta0 AS (SELECT 0.0 AS b0, 0.0 AS b1)"]
+    for i in range(IRLS_STEPS):
+        steps.append(f"""terms{i} AS (
+        SELECT {nano(f"({target} - {mu})")} AS g0,
+               {nano(f"({target} - {mu}) * x")} AS g1,
+               {nano(w)} AS h00,
+               {nano(f"{w} * x")} AS h01,
+               {nano(f"{w} * x * x")} AS h11
+        FROM rows, beta{i} b
+    ),
+    agg{i} AS (
+        SELECT sum(CAST(g0 AS HUGEINT)) AS sg0,
+               sum(CAST(g1 AS HUGEINT)) AS sg1,
+               sum(CAST(h00 AS HUGEINT)) AS sh00,
+               sum(CAST(h01 AS HUGEINT)) AS sh01,
+               sum(CAST(h11 AS HUGEINT)) AS sh11
+        FROM terms{i}
+    ),
+    beta{i + 1} AS (
+        SELECT b.b0 + ({d('sh11')} * {d('sg0')} - {d('sh01')} * {d('sg1')})
+                      / {det} AS b0,
+               b.b1 + ({d('sh00')} * {d('sg1')} - {d('sh01')} * {d('sg0')})
+                      / {det} AS b1
+        FROM agg{i}, beta{i} b
+    )""")
+    return ",\n    ".join(steps)
+
+
 def logistic_irls_lang(t: dict[str, DataFrame]) -> DataFrame:
     """Logistic regression of P(lang = 'en') on document length,
     trained INSIDE the engine by ``IRLS_STEPS`` unrolled Newton steps —
@@ -3364,49 +3455,7 @@ def logistic_irls_lang(t: dict[str, DataFrame]) -> DataFrame:
     )
     dec = lambda c: c.cast("decimal(38,0)")
     nano = lambda e: F.floor(e * 1e9 + F.lit(0.5)).cast("long")
-    beta = None  # (b0, b1) one-row DF
-    spark_b0, spark_b1 = F.lit(0.0), F.lit(0.0)
-    cur = rows
-    for _ in range(IRLS_STEPS):
-        if beta is not None:
-            cur = rows.crossJoin(F.broadcast(beta))
-            b0, b1 = F.col("b0"), F.col("b1")
-        else:
-            b0, b1 = spark_b0, spark_b1
-        eta = b0 + b1 * F.col("x")
-        mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        w = mu * (F.lit(1.0) - mu)
-        terms = cur.select(
-            nano((F.col("y") - mu)).alias("g0"),
-            nano((F.col("y") - mu) * F.col("x")).alias("g1"),
-            nano(w).alias("h00"),
-            nano(w * F.col("x")).alias("h01"),
-            nano(w * F.col("x") * F.col("x")).alias("h11"),
-        )
-        agg = terms.groupBy().agg(
-            F.sum(dec(F.col("g0"))).alias("sg0"),
-            F.sum(dec(F.col("g1"))).alias("sg1"),
-            F.sum(dec(F.col("h00"))).alias("sh00"),
-            F.sum(dec(F.col("h01"))).alias("sh01"),
-            F.sum(dec(F.col("h11"))).alias("sh11"),
-        )
-        g0 = F.col("sg0").cast("double") / 1e9
-        g1 = F.col("sg1").cast("double") / 1e9
-        h00 = F.col("sh00").cast("double") / 1e9
-        h01 = F.col("sh01").cast("double") / 1e9
-        h11 = F.col("sh11").cast("double") / 1e9
-        det = h00 * h11 - h01 * h01
-        nb0 = (h11 * g0 - h01 * g1) / det
-        nb1 = (h00 * g1 - h01 * g0) / det
-        if beta is not None:
-            prev = beta
-            agg = agg.crossJoin(F.broadcast(prev))
-            beta = agg.select(
-                (F.col("b0") + nb0).alias("b0"),
-                (F.col("b1") + nb1).alias("b1"),
-            )
-        else:
-            beta = agg.select(nb0.alias("b0"), nb1.alias("b1"))
+    beta = _logistic_newton_beta(rows, "y")
     scored = rows.crossJoin(F.broadcast(beta))
     eta = F.col("b0") + F.col("b1") * F.col("x")
     mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
@@ -3445,57 +3494,13 @@ def logistic_irls_lang(t: dict[str, DataFrame]) -> DataFrame:
 def logistic_irls_lang_sql() -> str:
     """Twin of logistic_irls_lang: beta0..betaN unrolled CTEs with the
     identical nano-term lattice and 2×2 closed-form update."""
-    steps = ["beta0 AS (SELECT 0.0 AS b0, 0.0 AS b1)"]
-    for i in range(IRLS_STEPS):
-        steps.append(f"""terms{i} AS (
-        SELECT CAST(floor((y - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * 1e9 + 0.5) AS BIGINT) AS g0,
-               CAST(floor((y - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x)))) * x
-                          * 1e9 + 0.5) AS BIGINT) AS g1,
-               CAST(floor((1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * (1.0 - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * 1e9 + 0.5) AS BIGINT) AS h00,
-               CAST(floor((1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * (1.0 - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * x * 1e9 + 0.5) AS BIGINT) AS h01,
-               CAST(floor((1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * (1.0 - 1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))
-                          * x * x * 1e9 + 0.5) AS BIGINT) AS h11
-        FROM rows, beta{i} b
-    ),
-    agg{i} AS (
-        SELECT sum(CAST(g0 AS HUGEINT)) AS sg0,
-               sum(CAST(g1 AS HUGEINT)) AS sg1,
-               sum(CAST(h00 AS HUGEINT)) AS sh00,
-               sum(CAST(h01 AS HUGEINT)) AS sh01,
-               sum(CAST(h11 AS HUGEINT)) AS sh11
-        FROM terms{i}
-    ),
-    beta{i + 1} AS (
-        SELECT b.b0 + ((CAST(sh11 AS DOUBLE)/1e9) * (CAST(sg0 AS DOUBLE)/1e9)
-                       - (CAST(sh01 AS DOUBLE)/1e9)
-                         * (CAST(sg1 AS DOUBLE)/1e9))
-                      / ((CAST(sh00 AS DOUBLE)/1e9)
-                         * (CAST(sh11 AS DOUBLE)/1e9)
-                         - (CAST(sh01 AS DOUBLE)/1e9)
-                           * (CAST(sh01 AS DOUBLE)/1e9)) AS b0,
-               b.b1 + ((CAST(sh00 AS DOUBLE)/1e9) * (CAST(sg1 AS DOUBLE)/1e9)
-                       - (CAST(sh01 AS DOUBLE)/1e9)
-                         * (CAST(sg0 AS DOUBLE)/1e9))
-                      / ((CAST(sh00 AS DOUBLE)/1e9)
-                         * (CAST(sh11 AS DOUBLE)/1e9)
-                         - (CAST(sh01 AS DOUBLE)/1e9)
-                           * (CAST(sh01 AS DOUBLE)/1e9)) AS b1
-        FROM agg{i}, beta{i} b
-    )""")
-    chain = ",\n    ".join(steps)
     return f"""
     WITH rows AS (
         SELECT CAST(lang = 'en' AS BIGINT) AS y,
                CAST(n_chars AS DOUBLE) / {IRLS_X_SCALE!r} AS x
         FROM documents
     ),
-    {chain},
+    {_logistic_newton_sql("y")},
     scored AS (
         SELECT y,
                CAST(floor((y * ln(1.0/(1.0 + exp(-(b.b0 + b.b1 * x))))

@@ -271,21 +271,10 @@ def incremental_pipeline_e2e_sql(
     Jaccard verify, same packer recurrence."""
     from ..operators.curation import pack_sequences_sql
     from ..operators.dedup import DEFAULT_NGRAM
-    from ..operators.oracle import (
-        BANDS,
-        NORMALIZE,
-        ROLLING_HASH,
-        _band_key_expr,
-        _shingles_cte,
-        _signature_exprs,
-    )
+    from ..operators.oracle import NORMALIZE, ROLLING_HASH, _minhash_bands_cte
     from ..operators.text import gopher_quality_rules_sql
 
     fp = ROLLING_HASH.format(s=NORMALIZE.format(s="text"))
-    band_rows = "\n        UNION ALL\n        ".join(
-        f"SELECT doc_id, {b} AS band, {_band_key_expr(b)} AS bk FROM sig"
-        for b in range(BANDS)
-    )
     return f"""
     WITH inc AS MATERIALIZED (
         SELECT * FROM documents WHERE doc_id % {mod} = 0
@@ -313,15 +302,7 @@ def incremental_pipeline_e2e_sql(
         UNION ALL
         SELECT doc_id, text FROM corpus
     ),
-    {_shingles_cte(DEFAULT_NGRAM, table="uni")},
-    sig AS (
-        SELECT doc_id,
-               {_signature_exprs()}
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    {_minhash_bands_cte(DEFAULT_NGRAM, table="uni")},
     cand AS (
         SELECT DISTINCT a.doc_id AS doc_new, b.doc_id AS doc_old
         FROM bands a JOIN bands b ON a.band = b.band AND a.bk = b.bk

@@ -860,30 +860,19 @@ def stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed incremental answer must equal the batch-vs-index answer.
     """
     from ..operators.dedup import (
-        BANDS,
         DEFAULT_NGRAM,
-        ROWS_PER_BAND,
-        _band_key,
+        _band_relation,
         _shingle_arrays,
-        _signature_cols,
     )
     from ..cache import tracked_persist
 
-    band_cols = [
-        _band_key(
-            [F.col(f"m{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-        ).alias(f"bk{b}")
-        for b in range(BANDS)
-    ]
-
     def banded(df: DataFrame, id_alias: str, hs_alias: str) -> DataFrame:
-        sig = _shingle_arrays(df, "text", DEFAULT_NGRAM).select(
-            "doc_id", "hs", *_signature_cols()
-        )
-        return sig.select(
+        hs = _shingle_arrays(df, "text", DEFAULT_NGRAM)
+        return _band_relation(hs).select(
             F.col("doc_id").alias(id_alias),
             F.col("hs").alias(hs_alias),
-            F.posexplode(F.array(*band_cols)).alias("band", "bk"),
+            "band",
+            "bk",
         )
 
     corpus = (
