@@ -8,6 +8,7 @@ import pytest
 
 from training_etl_demo_2_spark.operators import multimodal
 from training_etl_demo_2_spark.streaming import windowed
+from training_etl_demo_2_spark.streaming.fixture_queries import _replay_to_table
 
 
 def test_payload_roundtrip(tables):
@@ -92,14 +93,11 @@ def test_streaming_windowed_matches_batch(spark, sf_dir, tmp_path):
     stream = windowed.read_events_stream(spark, str(events_dir / "p"))
     assert stream.isStreaming
     result = windowed.events_windowed(stream)
-    q = windowed.run_stream_to_memory(result, "ev_hourly_test")
-    try:
-        got = {
-            (r.hour, r.event_type): (r.n_events, r.sum_value)
-            for r in spark.sql("SELECT * FROM ev_hourly_test").collect()
-        }
-    finally:
-        q.stop()
+    _replay_to_table(result, "ev_hourly_test")
+    got = {
+        (r.hour, r.event_type): (r.n_events, r.sum_value)
+        for r in spark.sql("SELECT * FROM ev_hourly_test").collect()
+    }
     want = {
         (r.hour, r.event_type): (r.n_events, r.sum_value)
         for r in events_hourly({"events": events}).collect()
@@ -116,11 +114,8 @@ def test_streaming_session_window(spark, sf_dir, tmp_path):
     events.write.mode("overwrite").parquet(str(events_dir / "p"))
     stream = windowed.read_events_stream(spark, str(events_dir / "p"))
     result = windowed.events_sessions(stream)
-    q = windowed.run_stream_to_memory(result, "ev_sessions_test")
-    try:
-        rows = spark.sql("SELECT * FROM ev_sessions_test").collect()
-    finally:
-        q.stop()
+    _replay_to_table(result, "ev_sessions_test")
+    rows = spark.sql("SELECT * FROM ev_sessions_test").collect()
     assert len(rows) > 0
     assert all(r.session_start <= r.session_end for r in rows)
 

@@ -14,9 +14,11 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 import __spark_entry__ as entrymod
 
-from tools import check_oracle
+from tools import check_oracle, explain_all
 
 STRIDE = 10
 
@@ -45,6 +47,21 @@ ALWAYS = [
     "incremental_pipeline_e2e",
     "logistic_irls_lang",
     "ipw_click_uplift",
+    # queries on the shared HLL register/fold and CMS cell-map helpers
+    # and the one stream-stream join
+    "hll_user_estimate",
+    "hll_source_overlap",
+    "hll_rollup_merge",
+    "sketch_user_stats",
+    "data_profile_lineitem_approx",
+    "stream_hll_users",
+    "heavy_hitters_cms",
+    "cms_join_estimate",
+    "cms_error_audit",
+    "cms_rollup_merge",
+    "stream_click_attribution",
+    "stream_click_funnel_loss",
+    "stream_funnel_two_sided",
 ]
 
 
@@ -67,12 +84,13 @@ def test_oracle_smoke_subset(spark, sf_dir):
     )
 
 
-def test_check_oracle_rejects_unknown_query_names(
-    monkeypatch, capsys, sf_dir
-):
-    argv = ["check_oracle.py", sf_dir, "dedup_exact", "no_such_query"]
+@pytest.mark.parametrize(
+    "tool", [check_oracle, explain_all], ids=["check_oracle", "explain_all"]
+)
+def test_tool_rejects_unknown_query_names(tool, monkeypatch, capsys, sf_dir):
+    argv = ["tool.py", sf_dir, "dedup_exact", "no_such_query"]
     monkeypatch.setattr(sys, "argv", argv)
-    assert check_oracle.main() == 2
+    assert tool.main() == 2
     out = capsys.readouterr().out
     assert "no_such_query" in out
     assert "dedup_exact" not in out

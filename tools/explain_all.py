@@ -2,6 +2,8 @@
 
 Usage: python tools/explain_all.py [sf_dir] [query ...]
 
+Exits 2, before Spark starts, when a named query is not registered.
+
 Audit checklist per plan (what to look for):
   * PushedFilters on parquet scans (predicates reached the source)
   * ReadSchema lists only needed columns (pruning reached the source)
@@ -19,14 +21,20 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def main() -> int:
     import __spark_entry__ as entrymod
     from training_etl_demo_2_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    queries = entrymod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+
     spark = get_spark(app_name="explain")
-    for name, fn in entrymod.queries().items():
+    for name, fn in queries.items():
         if only and name not in only:
             continue
         print(f"\n{'=' * 70}\n## {name}\n{'=' * 70}")
@@ -36,7 +44,8 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted"))
         except Exception as e:  # keep auditing the rest
             print(f"(failed: {e})")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -66,17 +66,6 @@ def word_ngrams(tokens: Column, n: int) -> Column:
     )
 
 
-def char_shingles(col: str | Column, k: int = 5) -> Column:
-    """Character k-gram shingles of normalized text (distinct not
-    applied). Same short-input guard as word_ngrams."""
-    c = normalize_text(col)
-    make = F.transform(
-        F.sequence(F.lit(1), F.length(c) - (k - 1)),
-        lambda i: F.substring(c, i, k),
-    )
-    return F.when(F.length(c) >= k, make).otherwise(F.array().cast("array<string>"))
-
-
 def rolling_hash(col: str | Column, base: int = 31, mod: int = FNV_MOD) -> Column:
     """Polynomial rolling hash of a string: fold (acc*base + ascii(ch)) % mod.
 

@@ -231,12 +231,6 @@ def tfidf_top_terms_sql(k: int = 3) -> str:
 # --- similarity -----------------------------------------------------------
 
 
-def _cosine_pairs_cte(left_filter: str = "") -> str:
-    return f"""
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-    """
-
-
 def brute_topk_sql(k: int = 5, query_pred: str = "vec_id < 20") -> str:
     return f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),

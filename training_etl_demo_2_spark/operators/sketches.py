@@ -17,7 +17,7 @@ against the exact answer and checks merge-consistency invariants.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..cache import tracked_cache
 
@@ -186,14 +186,49 @@ def events_histogram_quantiles_sql(
 # ---------------------------------------------------------------------------
 
 # Deterministic pairwise-independent hash rows: bucket_d(h) =
-# ((CMS_A[d]*h + CMS_B[d]) % P) % CMS_W. Plain integer arithmetic
-# (products < P^2 < 2^63), so engine and oracle agree bit-for-bit —
-# unlike the HLL sketches above, the CMS is fully oracle-checkable.
+# ((a_d*h + b_d) % P) % CMS_W with a_d, b_d from CMS_A / CMS_B. Plain
+# integer arithmetic (products < P^2 < 2^63), so engine and oracle
+# agree bit-for-bit — unlike the HLL sketches above, the CMS is fully
+# oracle-checkable. The cell map has one definition per side:
+# ``_cms_cells`` (engine) and ``_cms_cells_sql`` (DuckDB twins); every
+# CMS grid and probe below goes through them.
 CMS_P = 1_000_000_007
 CMS_D = 4
 CMS_W = 1024
 CMS_A = [((i + 1) * 2_654_435_761) % CMS_P for i in range(CMS_D)]
 CMS_B = [((i + 1) * 60_013 + 7) % CMS_P for i in range(CMS_D)]
+
+
+def _cms_cells(src: DataFrame, *keep: str) -> DataFrame:
+    """(keep..., d, b): every row of ``src`` (which carries the item
+    hash ``h``) exploded to its CMS_D grid cells, b = bucket_d(h)."""
+    cells = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(d).alias("d"),
+                    (((F.lit(CMS_A[d]) * F.col("h") + F.lit(CMS_B[d]))
+                      % CMS_P) % CMS_W).alias("b"),
+                )
+                for d in range(CMS_D)
+            ]
+        )
+    ).alias("db")
+    return src.select(*keep, cells).select(
+        *keep, F.col("db.d").alias("d"), F.col("db.b").alias("b")
+    )
+
+
+def _cms_cells_sql(src: str, *keep: str) -> str:
+    """Twin of ``_cms_cells``: one ``SELECT keep..., d, b FROM src`` arm
+    per hash row, UNION ALL'd."""
+    cols = "".join(f"{k}, " for k in keep)
+    return " UNION ALL ".join(
+        f"SELECT {cols}{d} AS d, "
+        f"((({CMS_A[d]} * h + {CMS_B[d]}) % {CMS_P}) % {CMS_W}) AS b"
+        f" FROM {src}"
+        for d in range(CMS_D)
+    )
 
 
 def cms_word_estimates(docs: DataFrame, k: int = 20) -> DataFrame:
@@ -219,22 +254,7 @@ def cms_word_estimates(docs: DataFrame, k: int = 20) -> DataFrame:
     ).filter(F.col("w") != "")
     hashed = words.select("w", rolling_hash(F.col("w")).alias("h"))
 
-    rows = hashed.select(
-        "h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        (((F.lit(CMS_A[d]) * F.col("h") + F.lit(CMS_B[d]))
-                          % CMS_P) % CMS_W).alias("b"),
-                    )
-                    for d in range(CMS_D)
-                ]
-            )
-        ).alias("db"),
-    ).select(F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-    grid = rows.groupBy("d", "b").agg(
+    grid = _cms_cells(hashed).groupBy("d", "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
 
@@ -244,22 +264,7 @@ def cms_word_estimates(docs: DataFrame, k: int = 20) -> DataFrame:
         .orderBy(F.desc("true_cnt"), F.asc("w"))
         .limit(k)
     )
-    probes = true_counts.select(
-        "w",
-        "true_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        (((F.lit(CMS_A[d]) * F.col("h") + F.lit(CMS_B[d]))
-                          % CMS_P) % CMS_W).alias("b"),
-                    )
-                    for d in range(CMS_D)
-                ]
-            )
-        ).alias("db"),
-    ).select("w", "true_cnt", F.col("db.d").alias("d"), F.col("db.b").alias("b"))
+    probes = _cms_cells(true_counts, "w", "true_cnt")
     return (
         probes.join(F.broadcast(grid), ["d", "b"])
         .groupBy("w", "true_cnt")
@@ -272,19 +277,6 @@ def cms_word_estimates_sql(k: int = 20) -> str:
     from .oracle import ROLLING_HASH
 
     h = ROLLING_HASH.format(s="w")
-    bucket = "((({a} * h + {b}) % {p}) % {w})"
-    rows_union = " UNION ALL ".join(
-        f"SELECT {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=CMS_W)
-        + " AS b FROM hashed"
-        for d in range(CMS_D)
-    )
-    probe_union = " UNION ALL ".join(
-        f"SELECT w, true_cnt, {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=CMS_W)
-        + " AS b FROM topk"
-        for d in range(CMS_D)
-    )
     return f"""
     WITH words AS (
         SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents
@@ -292,7 +284,7 @@ def cms_word_estimates_sql(k: int = 20) -> str:
     hashed AS (SELECT w, {h} AS h FROM words WHERE w != ''),
     grid AS (
         SELECT d, b, CAST(count(*) AS BIGINT) AS c
-        FROM ({rows_union}) GROUP BY d, b
+        FROM ({_cms_cells_sql("hashed")}) GROUP BY d, b
     ),
     topk AS (
         SELECT w, h, CAST(count(*) AS BIGINT) AS true_cnt
@@ -300,7 +292,8 @@ def cms_word_estimates_sql(k: int = 20) -> str:
         ORDER BY true_cnt DESC, w ASC LIMIT {k}
     )
     SELECT p.w AS word, p.true_cnt, CAST(min(g.c) AS BIGINT) AS cms_est
-    FROM ({probe_union}) p JOIN grid g USING (d, b)
+    FROM ({_cms_cells_sql("topk", "w", "true_cnt")}) p
+    JOIN grid g USING (d, b)
     GROUP BY p.w, p.true_cnt
     """
 
@@ -328,20 +321,8 @@ def cms_join_size_estimate(
     """
     def grid(df: DataFrame, key: str) -> DataFrame:
         return (
-            df.select(F.col(key).cast("long").alias("h"))
-            .select(
-                F.explode(
-                    F.array(*[
-                        F.struct(
-                            F.lit(d).alias("d"),
-                            (((F.lit(CMS_A[d]) * F.col("h") + F.lit(CMS_B[d]))
-                              % CMS_P) % CMS_W).alias("b"),
-                        )
-                        for d in range(CMS_D)
-                    ])
-                ).alias("cell")
-            )
-            .groupBy(F.col("cell.d").alias("d"), F.col("cell.b").alias("b"))
+            _cms_cells(df.select(F.col(key).cast("long").alias("h")))
+            .groupBy("d", "b")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
 
@@ -364,29 +345,16 @@ def cms_join_size_estimate(
 def cms_join_size_sql(
     fact_sql: str, dim_sql: str, fact_key: str, dim_key: str
 ) -> str:
-    bucket = "((({a} * h + {b}) % {p}) % {w})"
-    rows_a = "\n            UNION ALL\n            ".join(
-        f"SELECT {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=CMS_W)
-        + " AS b FROM ka"
-        for d in range(CMS_D)
-    )
-    rows_b = "\n            UNION ALL\n            ".join(
-        f"SELECT {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=CMS_W)
-        + " AS b FROM kb"
-        for d in range(CMS_D)
-    )
     return f"""
     WITH ka AS (SELECT CAST({fact_key} AS BIGINT) AS h FROM ({fact_sql})),
     kb AS (SELECT CAST({dim_key} AS BIGINT) AS h FROM ({dim_sql})),
     ga AS (
         SELECT d, b, CAST(count(*) AS BIGINT) AS ca
-        FROM ({rows_a}) GROUP BY d, b
+        FROM ({_cms_cells_sql("ka")}) GROUP BY d, b
     ),
     gb AS (
         SELECT d, b, CAST(count(*) AS BIGINT) AS cb
-        FROM ({rows_b}) GROUP BY d, b
+        FROM ({_cms_cells_sql("kb")}) GROUP BY d, b
     ),
     est AS (
         SELECT CAST(min(ip) AS BIGINT) AS est_join_size
@@ -410,6 +378,12 @@ def cms_join_size_sql(
 # twin reproduces the ESTIMATE bit-for-bit: the register sum
 # Σ 2^(RHO_BITS+1−ρ_j) is kept as an exact INTEGER (order-invariant),
 # and only the final α·m²·2^(RHO_BITS+1)/S division is floating point.
+# Each formula has one definition per side, used by every HLL query in
+# this module and by streaming.fixture_queries.stream_hll_users:
+# * hash -> rho -> per-register max: ``_hll_registers`` (engine),
+#   ``_hll_regs_sql`` (twins, rho via ``_hll_rho_cases``);
+# * register-sum fold and FFGM estimate with small-range correction:
+#   ``_hll_fold`` (engine), ``_hll_fold_sql`` (twins).
 HLL_P_BITS = 10  # m = 1024 registers (~1024 B, ±3.2% RSE)
 HLL_M = 1 << HLL_P_BITS
 HLL_P1 = 1_000_000_007
@@ -455,47 +429,39 @@ def _hll_rho_cases(u_expr: str) -> str:
     return f"CASE\n{whens}\n            ELSE {HLL_RHO_BITS + 1} END"
 
 
-def hll_user_estimate(t: dict[str, DataFrame]) -> DataFrame:
-    """Per-event-type distinct-user estimate from an EXPLICIT-register
-    HyperLogLog (Flajolet-Furic-Gandouet-Meunier 2007) built on the
-    engine's own 2-universal hash — next to the exact answer and the
-    error in basis points, so the sketch's accuracy contract is
-    itself a verified query.
-
-    Two independent 3-round multiply-mod/xor-shift mixes give the
-    register index (mod m) and an exact 2^20-uniform u whose
-    ρ = leading-zero rank comes from integer threshold comparisons
-    (no float log2).
-    Small-range correction (E ≤ 2.5m, V > 0 → m·ln(m/V)) applied as
-    in the paper.
-
-    Scale shape: one groupBy to (type, register) — ≤ m rows per type
-    regardless of corpus size — then a ≤ m-row per-type fold. The
-    register relation IS the mergeable sketch: day-partitioned copies
-    union by max(rho). The exact-distinct branch exists only to grade
-    the estimate and is the thing you'd drop at 100 TB.
-    """
-    ev = t["events"]
-    uid = F.col("user_id").cast("long")
-    h_idx = _hll_mix_spark(uid, HLL_IDX_SEED)
-    h_rho = _hll_mix_spark(uid, HLL_RHO_SEED)
-    hashed = ev.select(
-        "event_type",
-        (h_idx % HLL_M).alias("idx"),
-        (h_rho % (1 << HLL_RHO_BITS)).alias("u"),
+def _hll_registers(df: DataFrame, value: Column, *group) -> DataFrame:
+    """(group..., idx, mrho): the HLL register relation of the long
+    Column ``value`` per ``group`` (names or aliased Columns). Two
+    independent mixes give the register index (mod m) and an exact
+    2^20-uniform u; rho = leading-zero rank of u from integer threshold
+    comparisons (no float log2); each register keeps max(rho). The
+    relation IS the mergeable sketch: copies union by max(mrho)."""
+    hashed = df.select(
+        *group,
+        (_hll_mix_spark(value, HLL_IDX_SEED) % HLL_M).alias("idx"),
+        (_hll_mix_spark(value, HLL_RHO_SEED) % (1 << HLL_RHO_BITS)).alias("u"),
     )
     rho = F.lit(HLL_RHO_BITS + 1)
     for k in range(HLL_RHO_BITS):
         rho = F.when(F.col("u") >= (1 << k), HLL_RHO_BITS - k).otherwise(rho)
-    regs = hashed.groupBy("event_type", "idx").agg(F.max(rho).alias("mrho"))
+    return hashed.groupBy(*hashed.columns[:-1]).agg(F.max(rho).alias("mrho"))
+
+
+def _hll_fold(regs: DataFrame, *group: str) -> DataFrame:
+    """(group..., v_empty, s_int, est) from a (group..., idx, mrho)
+    register relation: v_empty empty registers, s_int the exact integer
+    register sum (empty registers contribute 2^(RHO_BITS+1)), est the
+    FFGM estimate with small-range correction (E ≤ 2.5m and V > 0 →
+    m·ln(m/V)). One double division after the order-invariant integer
+    fold, so the twin (``_hll_fold_sql``) agrees exactly."""
     top = HLL_RHO_BITS + 1
-    per_type = regs.groupBy("event_type").agg(
+    per = regs.groupBy(*group).agg(
         F.count(F.lit(1)).alias("n_regs"),
         F.sum(F.expr(f"shiftleft(1L, {top} - mrho)"))
         .cast("long")
         .alias("s_used"),
     )
-    v = F.lit(HLL_M) - F.col("n_regs")  # empty registers contribute 2^top
+    v = F.lit(HLL_M) - F.col("n_regs")
     s_int = F.col("s_used") + v * (1 << top)
     e_raw = F.lit(HLL_ALPHA * HLL_M * HLL_M * (1 << top)) / s_int.cast(
         "double"
@@ -504,20 +470,88 @@ def hll_user_estimate(t: dict[str, DataFrame]) -> DataFrame:
         (e_raw <= 2.5 * HLL_M) & (v > 0),
         F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
     ).otherwise(e_raw)
+    return per.select(
+        *group, v.alias("v_empty"), s_int.alias("s_int"), est.alias("est")
+    )
+
+
+def _hll_regs_sql(name: str, value: str, source: str, *keys: str) -> str:
+    """Twin of ``_hll_registers``: the CTE pair ``h_{name}`` (keys...,
+    idx, u) over ``FROM {source}`` and ``{name}`` (keys..., idx, mrho),
+    materialized (≤ m rows per key)."""
+    cols = "".join(f"{k}, " for k in keys)
+    return f"""h_{name} AS (
+        SELECT {cols}{_hll_mix_sql(value, HLL_IDX_SEED)} % {HLL_M} AS idx,
+               {_hll_mix_sql(value, HLL_RHO_SEED)}
+                   % {1 << HLL_RHO_BITS} AS u
+        FROM {source}
+    ),
+    {name} AS MATERIALIZED (
+        SELECT {cols}idx, max({_hll_rho_cases("u")}) AS mrho
+        FROM h_{name} GROUP BY {cols}idx
+    )"""
+
+
+def _hll_fold_sql(regs: str, *keys: str) -> str:
+    """Twin of ``_hll_fold``: a SELECT of (keys..., v_empty, s_int, est)
+    over the register relation ``regs`` — same integer fold, same
+    double sequence."""
+    top = HLL_RHO_BITS + 1
+    cols = "".join(f"{k}, " for k in keys)
+    group = f" GROUP BY {', '.join(keys)}" if keys else ""
+    e_raw = (
+        f"(CAST({HLL_ALPHA!r} AS DOUBLE) * {HLL_M} * {HLL_M}"
+        f" * (CAST(1 AS BIGINT) << {top})) / CAST(s_int AS DOUBLE)"
+    )
+    return f"""
+        SELECT {cols}v_empty, s_int,
+               CASE WHEN {e_raw} <= 2.5 * {HLL_M} AND v_empty > 0
+                    THEN CAST({HLL_M} AS DOUBLE)
+                         * ln(CAST({HLL_M} AS DOUBLE)
+                              / CAST(v_empty AS DOUBLE))
+                    ELSE {e_raw}
+               END AS est
+        FROM (
+            SELECT {cols}{HLL_M} - count(*) AS v_empty,
+                   CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)
+                       + ({HLL_M} - count(*)) * (CAST(1 AS BIGINT) << {top})
+                       AS s_int
+            FROM {regs}{group}
+        )"""
+
+
+def hll_user_estimate(t: dict[str, DataFrame]) -> DataFrame:
+    """Per-event-type distinct-user estimate from an EXPLICIT-register
+    HyperLogLog (Flajolet-Furic-Gandouet-Meunier 2007) built on the
+    engine's own 2-universal hash — next to the exact answer and the
+    error in basis points, so the sketch's accuracy contract is
+    itself a verified query.
+
+    Registers from ``_hll_registers``, estimate (with the paper's
+    small-range correction) from ``_hll_fold``.
+
+    Scale shape: one groupBy to (type, register) — ≤ m rows per type
+    regardless of corpus size — then a ≤ m-row per-type fold. The
+    register relation IS the mergeable sketch: day-partitioned copies
+    union by max(rho). The exact-distinct branch exists only to grade
+    the estimate and is the thing you'd drop at 100 TB.
+    """
+    ev = t["events"]
+    regs = _hll_registers(ev, F.col("user_id").cast("long"), "event_type")
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_users")
     )
-    joined = per_type.join(exact, "event_type")
+    joined = _hll_fold(regs, "event_type").join(exact, "event_type")
     err_bp = (
-        F.abs(est - F.col("exact_users").cast("double"))
+        F.abs(F.col("est") - F.col("exact_users").cast("double"))
         * 10000.0
         / F.col("exact_users")
     )
     return joined.select(
         "event_type",
-        v.cast("long").alias("v_empty"),
-        s_int.cast("long").alias("s_int"),
-        F.round(est, 6).alias("est_r6"),
+        "v_empty",
+        "s_int",
+        F.round("est", 6).alias("est_r6"),
         "exact_users",
         F.floor(err_bp + F.lit(0.5)).cast("long").alias("err_bp"),
     )
@@ -526,83 +560,25 @@ def hll_user_estimate(t: dict[str, DataFrame]) -> DataFrame:
 def hll_user_estimate_sql() -> str:
     """Twin of hll_user_estimate: identical hash, integer rho chain,
     integer register sum, identical double formulas."""
-    top = HLL_RHO_BITS + 1
-    rho_sql = _hll_rho_cases("u")
     return f"""
-    WITH hashed AS (
-        SELECT event_type,
-               {_hll_mix_sql("user_id", HLL_IDX_SEED)} % {HLL_M} AS idx,
-               {_hll_mix_sql("user_id", HLL_RHO_SEED)}
-                   % {1 << HLL_RHO_BITS} AS u
-        FROM events
-    ),
-    regs AS (
-        SELECT event_type, idx,
-               max({rho_sql}) AS mrho
-        FROM hashed GROUP BY 1, 2
-    ),
-    per_type AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_regs,
-               CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)
-                   AS s_used
-        FROM regs GROUP BY 1
-    ),
+    WITH {_hll_regs_sql("regs", "user_id", "events", "event_type")},
     exact AS (
         SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT)
                    AS exact_users
         FROM events GROUP BY 1
     ),
-    calc AS (
-        SELECT p.event_type,
-               {HLL_M} - p.n_regs AS v_empty,
-               p.s_used + ({HLL_M} - p.n_regs) * (CAST(1 AS BIGINT) << {top})
-                   AS s_int,
-               e.exact_users
-        FROM per_type p JOIN exact e ON p.event_type = e.event_type
-    ),
-    est AS (
-        SELECT *,
-               CASE WHEN (CAST({HLL_ALPHA!r} AS DOUBLE) * {HLL_M} * {HLL_M}
-                          * (CAST(1 AS BIGINT) << {top}))
-                         / CAST(s_int AS DOUBLE) <= 2.5 * {HLL_M}
-                         AND v_empty > 0
-                    THEN CAST({HLL_M} AS DOUBLE)
-                         * ln(CAST({HLL_M} AS DOUBLE)
-                              / CAST(v_empty AS DOUBLE))
-                    ELSE (CAST({HLL_ALPHA!r} AS DOUBLE) * {HLL_M} * {HLL_M}
-                          * (CAST(1 AS BIGINT) << {top}))
-                         / CAST(s_int AS DOUBLE)
-               END AS e_val
-        FROM calc
-    )
-    SELECT event_type, CAST(v_empty AS BIGINT) AS v_empty, s_int,
-           round(e_val, 6) AS est_r6, exact_users,
-           CAST(floor(abs(e_val - exact_users) * 10000.0 / exact_users
+    est AS ({_hll_fold_sql("regs", "event_type")})
+    SELECT f.event_type, CAST(f.v_empty AS BIGINT) AS v_empty, f.s_int,
+           round(f.est, 6) AS est_r6, e.exact_users,
+           CAST(floor(abs(f.est - e.exact_users) * 10000.0 / e.exact_users
                       + 0.5) AS BIGINT) AS err_bp
-    FROM est
+    FROM est f JOIN exact e ON f.event_type = e.event_type
     """
 
 
 # ---------------------------------------------------------------------------
 # HLL set operations: pairwise audience overlap between event types
 # ---------------------------------------------------------------------------
-
-
-def _hll_est(n_regs, s_used):
-    """FFGM estimate (+ small-range correction) from a register fold:
-    the one shared double sequence both engines and every HLL query
-    in this module follow."""
-    top = HLL_RHO_BITS + 1
-    v = F.lit(HLL_M) - n_regs
-    s_int = s_used + v * (1 << top)
-    e_raw = F.lit(HLL_ALPHA * HLL_M * HLL_M * (1 << top)) / s_int.cast(
-        "double"
-    )
-    return F.when(
-        (e_raw <= 2.5 * HLL_M) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
-    ).otherwise(e_raw)
 
 
 def hll_source_overlap(t: dict[str, DataFrame]) -> DataFrame:
@@ -624,26 +600,10 @@ def hll_source_overlap(t: dict[str, DataFrame]) -> DataFrame:
     at 100 TB. Output: one row per unordered type pair.
     """
     ev = t["events"]
-    uid = F.col("user_id").cast("long")
-    hashed = ev.select(
-        "event_type",
-        (_hll_mix_spark(uid, HLL_IDX_SEED) % HLL_M).alias("idx"),
-        (_hll_mix_spark(uid, HLL_RHO_SEED) % (1 << HLL_RHO_BITS)).alias("u"),
-    )
-    rho = F.lit(HLL_RHO_BITS + 1)
-    for k in range(HLL_RHO_BITS):
-        rho = F.when(F.col("u") >= (1 << k), HLL_RHO_BITS - k).otherwise(rho)
-    regs = hashed.groupBy("event_type", "idx").agg(F.max(rho).alias("mrho"))
+    regs = _hll_registers(ev, F.col("user_id").cast("long"), "event_type")
     regs.transform(tracked_cache)
-    top = HLL_RHO_BITS + 1
-    per_type = regs.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_regs"),
-        F.sum(F.expr(f"shiftleft(1L, {top} - mrho)"))
-        .cast("long")
-        .alias("s_used"),
-    )
-    est_t = per_type.select(
-        "event_type", _hll_est(F.col("n_regs"), F.col("s_used")).alias("e")
+    est_t = _hll_fold(regs, "event_type").select(
+        "event_type", F.col("est").alias("e")
     )
     types = regs.select("event_type").distinct()
     pairs = (
@@ -666,22 +626,13 @@ def hll_source_overlap(t: dict[str, DataFrame]) -> DataFrame:
     pr_b = pairs.join(regs_r, F.col("tb") == F.col("rt")).select(
         "ta", "tb", "idx", "mrho"
     )
-    union_fold = (
+    union_regs = (
         pr_a.unionByName(pr_b)
         .groupBy("ta", "tb", "idx")
         .agg(F.max("mrho").alias("mrho"))
-        .groupBy("ta", "tb")
-        .agg(
-            F.count(F.lit(1)).alias("n_regs"),
-            F.sum(F.expr(f"shiftleft(1L, {top} - mrho)"))
-            .cast("long")
-            .alias("s_used"),
-        )
-        .select(
-            "ta",
-            "tb",
-            _hll_est(F.col("n_regs"), F.col("s_used")).alias("e_union"),
-        )
+    )
+    union_fold = _hll_fold(union_regs, "ta", "tb").select(
+        "ta", "tb", F.col("est").alias("e_union")
     )
     # exact branch (grading only)
     ut = ev.select("user_id", "event_type").distinct()
@@ -752,39 +703,11 @@ def hll_source_overlap(t: dict[str, DataFrame]) -> DataFrame:
 def hll_source_overlap_sql() -> str:
     """Twin of hll_source_overlap: identical register algebra and
     inclusion-exclusion double sequence."""
-    top = HLL_RHO_BITS + 1
-    rho_sql = _hll_rho_cases("u")
-    est = (
-        "CASE WHEN (CAST({alpha} AS DOUBLE) * {m} * {m} * {two_top})"
-        "          / CAST(s_used + ({m} - n_regs) * {two_top} AS DOUBLE)"
-        "          <= 2.5 * {m} AND {m} - n_regs > 0"
-        "     THEN CAST({m} AS DOUBLE)"
-        "          * ln(CAST({m} AS DOUBLE) / CAST({m} - n_regs AS DOUBLE))"
-        "     ELSE (CAST({alpha} AS DOUBLE) * {m} * {m} * {two_top})"
-        "          / CAST(s_used + ({m} - n_regs) * {two_top} AS DOUBLE)"
-        " END"
-    ).format(alpha=repr(HLL_ALPHA), m=HLL_M, two_top=1 << top)
     return f"""
-    WITH hashed AS (
-        SELECT event_type,
-               {_hll_mix_sql("user_id", HLL_IDX_SEED)} % {HLL_M} AS idx,
-               {_hll_mix_sql("user_id", HLL_RHO_SEED)}
-                   % {1 << HLL_RHO_BITS} AS u
-        FROM events
-    ),
-    regs AS MATERIALIZED (
-        SELECT event_type, idx, max({rho_sql}) AS mrho
-        FROM hashed GROUP BY 1, 2
-    ),
-    per_type AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_regs,
-               CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)
-                   AS s_used
-        FROM regs GROUP BY 1
-    ),
+    WITH {_hll_regs_sql("regs", "user_id", "events", "event_type")},
     est_t AS MATERIALIZED (
-        SELECT event_type, {est} AS e FROM per_type
+        SELECT event_type, est AS e
+        FROM ({_hll_fold_sql("regs", "event_type")})
     ),
     pairs AS (
         SELECT a.event_type AS ta, b.event_type AS tb
@@ -798,15 +721,9 @@ def hll_source_overlap_sql() -> str:
         JOIN regs r ON r.event_type = p.ta OR r.event_type = p.tb
         GROUP BY 1, 2, 3
     ),
-    union_fold AS (
-        SELECT ta, tb,
-               CAST(count(*) AS BIGINT) AS n_regs,
-               CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)
-                   AS s_used
-        FROM union_regs GROUP BY 1, 2
-    ),
     union_est AS (
-        SELECT ta, tb, {est} AS e_union FROM union_fold
+        SELECT ta, tb, est AS e_union
+        FROM ({_hll_fold_sql("union_regs", "ta", "tb")})
     ),
     ut AS MATERIALIZED (
         SELECT DISTINCT user_id, event_type FROM events
@@ -868,42 +785,15 @@ def hll_rollup_merge(t: dict[str, DataFrame]) -> DataFrame:
     """
     ev = t["events"]
     uid = F.col("user_id").cast("long")
-    hashed = ev.select(
-        F.to_date("ts").alias("d"),
-        (_hll_mix_spark(uid, HLL_IDX_SEED) % HLL_M).alias("idx"),
-        (_hll_mix_spark(uid, HLL_RHO_SEED) % (1 << HLL_RHO_BITS)).alias("u"),
-    )
-    rho = F.lit(HLL_RHO_BITS + 1)
-    for k in range(HLL_RHO_BITS):
-        rho = F.when(F.col("u") >= (1 << k), HLL_RHO_BITS - k).otherwise(rho)
-    regs_day = hashed.groupBy("d", "idx").agg(F.max(rho).alias("mrho"))
+    regs_day = _hll_registers(ev, uid, F.to_date("ts").alias("d"))
     merged = regs_day.groupBy("idx").agg(F.max("mrho").alias("mrho"))
-    direct = hashed.groupBy("idx").agg(F.max(rho).alias("mrho"))
-    top = HLL_RHO_BITS + 1
+    direct = _hll_registers(ev, uid)
 
-    def _est_fold(regs, *group):
-        per = regs.groupBy(*group).agg(
-            F.count(F.lit(1)).alias("n_regs"),
-            F.sum(F.expr(f"shiftleft(1L, {top} - mrho)"))
-            .cast("long")
-            .alias("s_used"),
-        )
-        v = F.lit(HLL_M) - F.col("n_regs")
-        s_int = F.col("s_used") + v * (1 << top)
-        e_raw = F.lit(HLL_ALPHA * HLL_M * HLL_M * (1 << top)) / s_int.cast(
-            "double"
-        )
-        est = F.when(
-            (e_raw <= 2.5 * HLL_M) & (v > 0),
-            F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
-        ).otherwise(e_raw)
-        return per.select(*group, est.alias("est"))
-
-    daily_sum = _est_fold(regs_day, "d").agg(
+    daily_sum = _hll_fold(regs_day, "d").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.round(F.sum("est"), 6).alias("sum_daily_est"),
     )
-    merged_est = _est_fold(merged).select(
+    merged_est = _hll_fold(merged).select(
         F.round(F.col("est"), 6).alias("merged_est")
     )
     mism = (
@@ -938,60 +828,21 @@ def hll_rollup_merge(t: dict[str, DataFrame]) -> DataFrame:
 
 def hll_rollup_merge_sql() -> str:
     """Twin: identical hash/rho/register algebra at each level."""
-    top = HLL_RHO_BITS + 1
-    rho_sql = _hll_rho_cases("u")
-    est_sql = (
-        f"CASE WHEN (CAST({HLL_ALPHA!r} AS DOUBLE) * {HLL_M} * {HLL_M}"
-        f" * (CAST(1 AS BIGINT) << {top})) / CAST(s_int AS DOUBLE)"
-        f" <= 2.5 * {HLL_M} AND v_empty > 0"
-        f" THEN CAST({HLL_M} AS DOUBLE)"
-        f" * ln(CAST({HLL_M} AS DOUBLE) / v_empty)"
-        f" ELSE (CAST({HLL_ALPHA!r} AS DOUBLE) * {HLL_M} * {HLL_M}"
-        f" * (CAST(1 AS BIGINT) << {top})) / CAST(s_int AS DOUBLE) END"
-    )
-    fold = (
-        f"SELECT CAST(count(*) AS BIGINT) AS n_regs,"
-        f" CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)"
-        f" AS s_used"
-    )
+    by_day = "(SELECT user_id, CAST(ts AS DATE) AS d FROM events)"
     return f"""
-    WITH hashed AS (
-        SELECT CAST(ts AS DATE) AS d,
-               {_hll_mix_sql("user_id", HLL_IDX_SEED)} % {HLL_M} AS idx,
-               {_hll_mix_sql("user_id", HLL_RHO_SEED)}
-                   % {1 << HLL_RHO_BITS} AS u
-        FROM events
-    ),
-    regs_day AS MATERIALIZED (
-        SELECT d, idx, max({rho_sql}) AS mrho FROM hashed GROUP BY 1, 2
-    ),
+    WITH {_hll_regs_sql("regs_day", "user_id", by_day, "d")},
     merged AS MATERIALIZED (
         SELECT idx, max(mrho) AS mrho FROM regs_day GROUP BY idx
     ),
-    direct AS (
-        SELECT idx, max({rho_sql}) AS mrho FROM hashed GROUP BY idx
-    ),
-    day_folds AS (
-        SELECT d, n_regs, s_used,
-               {HLL_M} - n_regs AS v_empty,
-               s_used + ({HLL_M} - n_regs) * (CAST(1 AS BIGINT) << {top})
-                   AS s_int
-        FROM (SELECT d, {fold.replace("SELECT ", "")}
-              FROM regs_day GROUP BY d)
-    ),
+    {_hll_regs_sql("direct", "user_id", "events")},
     daily AS (
         SELECT CAST(count(*) AS BIGINT) AS n_days,
-               round(sum({est_sql}), 6) AS sum_daily_est
-        FROM day_folds
+               round(sum(est), 6) AS sum_daily_est
+        FROM ({_hll_fold_sql("regs_day", "d")})
     ),
-    merged_fold AS (
-        SELECT n_regs, s_used,
-               {HLL_M} - n_regs AS v_empty,
-               s_used + ({HLL_M} - n_regs) * (CAST(1 AS BIGINT) << {top})
-                   AS s_int
-        FROM ({fold} FROM merged)
+    mest AS (
+        SELECT round(est, 6) AS merged_est FROM ({_hll_fold_sql("merged")})
     ),
-    mest AS (SELECT round({est_sql}, 6) AS merged_est FROM merged_fold),
     mism AS (
         SELECT CAST(count(*) AS BIGINT) AS mismatched_registers
         FROM merged m FULL OUTER JOIN direct x ON m.idx = x.idx
@@ -1014,13 +865,12 @@ def hll_rollup_merge_sql() -> str:
 # ---------------------------------------------------------------------------
 
 
-def cms_error_audit(docs: DataFrame, width: int = CMS_W) -> DataFrame:
+def cms_error_audit(docs: DataFrame) -> DataFrame:
     """Grades the count-min sketch against exact counts over the WHOLE
     vocabulary — the sketch-accuracy twin of ``minhash_estimate_error``
     (every sketch this engine ships gets an error audit before anyone
-    trusts it at 100 TB). ``width`` is the grid width under test:
-    shrinking it below the vocabulary forces collisions, which is how
-    the audit (and its planted tests) exercise the over-estimate path.
+    trusts it at 100 TB), on the same CMS_D x CMS_W grid every CMS
+    query here builds.
 
     Output, one row per log2(true count) bucket: (bucket, n_words,
     n_exact, sum_overest, max_overest) — n_exact counts words the
@@ -1041,36 +891,14 @@ def cms_error_audit(docs: DataFrame, width: int = CMS_W) -> DataFrame:
     ).filter(F.col("w") != "")
     hashed = words.select("w", rolling_hash(F.col("w")).alias("h"))
 
-    def _cells(src: DataFrame, keep: list[str]) -> DataFrame:
-        return src.select(
-            *keep,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(d).alias("d"),
-                            (
-                                (
-                                    (F.lit(CMS_A[d]) * F.col("h") + F.lit(CMS_B[d]))
-                                    % CMS_P
-                                )
-                                % width
-                            ).alias("b"),
-                        )
-                        for d in range(CMS_D)
-                    ]
-                )
-            ).alias("db"),
-        ).select(*keep, F.col("db.d").alias("d"), F.col("db.b").alias("b"))
-
-    grid = _cells(hashed, []).groupBy("d", "b").agg(
+    grid = _cms_cells(hashed).groupBy("d", "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
     vocab = hashed.groupBy("w", "h").agg(
         F.count(F.lit(1)).cast("long").alias("true_cnt")
     )
     est = (
-        _cells(vocab, ["w", "true_cnt"])
+        _cms_cells(vocab, "w", "true_cnt")
         .join(F.broadcast(grid), ["d", "b"])
         .groupBy("w", "true_cnt")
         .agg(F.min("c").cast("long").alias("est"))
@@ -1092,25 +920,12 @@ def cms_error_audit(docs: DataFrame, width: int = CMS_W) -> DataFrame:
     )
 
 
-def cms_error_audit_sql(width: int = CMS_W) -> str:
+def cms_error_audit_sql() -> str:
     """Twin: same grid/probe CTEs as cms_word_estimates_sql minus the
     LIMIT, bucketed by length(bin(cnt))−1, identical folds."""
     from .oracle import ROLLING_HASH
 
     h = ROLLING_HASH.format(s="w")
-    bucket = "((({a} * h + {b}) % {p}) % {w})"
-    rows_union = " UNION ALL ".join(
-        f"SELECT {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=width)
-        + " AS b FROM hashed"
-        for d in range(CMS_D)
-    )
-    probe_union = " UNION ALL ".join(
-        f"SELECT w, true_cnt, {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=width)
-        + " AS b FROM vocab"
-        for d in range(CMS_D)
-    )
     return f"""
     WITH words AS (
         SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents
@@ -1118,7 +933,7 @@ def cms_error_audit_sql(width: int = CMS_W) -> str:
     hashed AS (SELECT w, {h} AS h FROM words WHERE w != ''),
     grid AS (
         SELECT d, b, CAST(count(*) AS BIGINT) AS c
-        FROM ({rows_union}) GROUP BY d, b
+        FROM ({_cms_cells_sql("hashed")}) GROUP BY d, b
     ),
     vocab AS (
         SELECT w, h, CAST(count(*) AS BIGINT) AS true_cnt
@@ -1126,7 +941,8 @@ def cms_error_audit_sql(width: int = CMS_W) -> str:
     ),
     est AS (
         SELECT p.w, p.true_cnt, CAST(min(g.c) AS BIGINT) AS est
-        FROM ({probe_union}) p JOIN grid g USING (d, b)
+        FROM ({_cms_cells_sql("vocab", "w", "true_cnt")}) p
+        JOIN grid g USING (d, b)
         GROUP BY p.w, p.true_cnt
     )
     SELECT CAST(length(bin(true_cnt)) - 1 AS BIGINT) AS bucket,
@@ -1168,23 +984,7 @@ def cms_rollup_merge(t: dict[str, DataFrame]) -> DataFrame:
         .filter(F.col("w") != "")
         .select("source", "w", rolling_hash(F.col("w")).alias("h"))
     )
-    arms = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("d"),
-                    (
-                        ((F.lit(CMS_A[d]) * F.col("h") + F.lit(CMS_B[d]))
-                         % CMS_P) % CMS_W
-                    ).alias("b"),
-                )
-                for d in range(CMS_D)
-            ]
-        )
-    ).alias("db")
-    rows = hashed.select("source", arms).select(
-        "source", F.col("db.d").alias("d"), F.col("db.b").alias("b")
-    )
+    rows = _cms_cells(hashed, "source")
     per_src = rows.groupBy("source", "d", "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
@@ -1213,9 +1013,7 @@ def cms_rollup_merge(t: dict[str, DataFrame]) -> DataFrame:
         .orderBy(F.desc("true_cnt"), F.asc("w"))
         .limit(1)
     )
-    probe = top1.select(
-        "w", "true_cnt", arms
-    ).select("w", "true_cnt", F.col("db.d").alias("d"), F.col("db.b").alias("b"))
+    probe = _cms_cells(top1, "w", "true_cnt")
     est_m = (
         probe.join(F.broadcast(merged), ["d", "b"])
         .groupBy("w", "true_cnt")
@@ -1249,26 +1047,13 @@ def cms_rollup_merge_sql() -> str:
     from .oracle import ROLLING_HASH
 
     h = ROLLING_HASH.format(s="w")
-    bucket = "((({a} * h + {b}) % {p}) % {w})"
-    rows_union = " UNION ALL ".join(
-        f"SELECT source, {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=CMS_W)
-        + " AS b FROM hashed"
-        for d in range(CMS_D)
-    )
-    probe_union = " UNION ALL ".join(
-        f"SELECT w, true_cnt, {d} AS d, "
-        + bucket.format(a=CMS_A[d], b=CMS_B[d], p=CMS_P, w=CMS_W)
-        + " AS b FROM top1"
-        for d in range(CMS_D)
-    )
     return f"""
     WITH words AS (
         SELECT source, unnest(string_split(lower(text), ' ')) AS w
         FROM documents
     ),
     hashed AS (SELECT source, w, {h} AS h FROM words WHERE w != ''),
-    rows_rel AS ({rows_union}),
+    rows_rel AS ({_cms_cells_sql("hashed", "source")}),
     per_src AS (
         SELECT source, d, b, CAST(count(*) AS BIGINT) AS c
         FROM rows_rel GROUP BY 1, 2, 3
@@ -1291,7 +1076,7 @@ def cms_rollup_merge_sql() -> str:
         FROM hashed GROUP BY w, h
         ORDER BY true_cnt DESC, w ASC LIMIT 1
     ),
-    probe AS ({probe_union}),
+    probe AS ({_cms_cells_sql("top1", "w", "true_cnt")}),
     est_m AS (
         SELECT p.w, p.true_cnt, CAST(min(m.c) AS BIGINT) AS est_merged
         FROM probe p JOIN merged m USING (d, b) GROUP BY 1, 2
@@ -1332,38 +1117,6 @@ def cms_rollup_merge_sql() -> str:
 # one shuffle of registers, never of values).
 
 
-def _hll_rho_col() -> "F.Column":
-    """rho from the u column via integer threshold comparisons."""
-    rho = F.lit(HLL_RHO_BITS + 1)
-    for k in range(HLL_RHO_BITS):
-        rho = F.when(F.col("u") >= (1 << k), HLL_RHO_BITS - k).otherwise(rho)
-    return rho
-
-
-def _hll_estimate_from_regs(regs: DataFrame, group: list[str]) -> DataFrame:
-    """(group..., est): the FFGM estimate (with small-range correction)
-    from a (group..., idx, mrho) register relation. Integer register
-    sum (order-invariant) -> one double division, so engine and oracle
-    agree exactly."""
-    top = HLL_RHO_BITS + 1
-    per = regs.groupBy(*group).agg(
-        F.count(F.lit(1)).alias("n_regs"),
-        F.sum(F.expr(f"shiftleft(1L, {top} - mrho)"))
-        .cast("long")
-        .alias("s_used"),
-    )
-    v = F.lit(HLL_M) - F.col("n_regs")
-    s_int = F.col("s_used") + v * (1 << top)
-    e_raw = F.lit(HLL_ALPHA * HLL_M * HLL_M * (1 << top)) / s_int.cast(
-        "double"
-    )
-    est = F.when(
-        (e_raw <= 2.5 * HLL_M) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
-    ).otherwise(e_raw)
-    return per.select(*group, est.alias("est"))
-
-
 def user_stats_register_hll(t: dict[str, DataFrame]) -> DataFrame:
     """Per-event-type approximate distinct users (engine-owned
     register HLL, deterministic cross-engine) next to the event count —
@@ -1375,16 +1128,8 @@ def user_stats_register_hll(t: dict[str, DataFrame]) -> DataFrame:
     are the mergeable incremental state.
     """
     ev = t["events"]
-    uid = F.col("user_id").cast("long")
-    hashed = ev.select(
-        "event_type",
-        (_hll_mix_spark(uid, HLL_IDX_SEED) % HLL_M).alias("idx"),
-        (_hll_mix_spark(uid, HLL_RHO_SEED) % (1 << HLL_RHO_BITS)).alias("u"),
-    )
-    regs = hashed.groupBy("event_type", "idx").agg(
-        F.max(_hll_rho_col()).alias("mrho")
-    )
-    est = _hll_estimate_from_regs(regs, ["event_type"])
+    regs = _hll_registers(ev, F.col("user_id").cast("long"), "event_type")
+    est = _hll_fold(regs, "event_type")
     counts = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events")
     )
@@ -1401,43 +1146,15 @@ def user_stats_register_hll(t: dict[str, DataFrame]) -> DataFrame:
 
 def user_stats_register_hll_sql() -> str:
     """Twin: identical hash, rho chain, register fold, double formula."""
-    top = HLL_RHO_BITS + 1
-    rho_sql = _hll_rho_cases("u")
-    est = (
-        "CASE WHEN (CAST({alpha} AS DOUBLE) * {m} * {m} * {two_top})"
-        "          / CAST(s_used + ({m} - n_regs) * {two_top} AS DOUBLE)"
-        "          <= 2.5 * {m} AND {m} - n_regs > 0"
-        "     THEN CAST({m} AS DOUBLE)"
-        "          * ln(CAST({m} AS DOUBLE) / CAST({m} - n_regs AS DOUBLE))"
-        "     ELSE (CAST({alpha} AS DOUBLE) * {m} * {m} * {two_top})"
-        "          / CAST(s_used + ({m} - n_regs) * {two_top} AS DOUBLE)"
-        " END"
-    ).format(alpha=repr(HLL_ALPHA), m=HLL_M, two_top=1 << top)
     return f"""
-    WITH hashed AS (
-        SELECT event_type,
-               {_hll_mix_sql("user_id", HLL_IDX_SEED)} % {HLL_M} AS idx,
-               {_hll_mix_sql("user_id", HLL_RHO_SEED)}
-                   % {1 << HLL_RHO_BITS} AS u
-        FROM events
-    ),
-    regs AS (
-        SELECT event_type, idx, max({rho_sql}) AS mrho
-        FROM hashed GROUP BY 1, 2
-    ),
-    per_type AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_regs,
-               CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)
-                   AS s_used
-        FROM regs GROUP BY 1
-    ),
+    WITH {_hll_regs_sql("regs", "user_id", "events", "event_type")},
+    est AS ({_hll_fold_sql("regs", "event_type")}),
     counts AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS n_events
         FROM events GROUP BY 1
     )
-    SELECT c.event_type, round({est}, 6) AS approx_users_r6, c.n_events
-    FROM counts c JOIN per_type p ON p.event_type = c.event_type
+    SELECT c.event_type, round(p.est, 6) AS approx_users_r6, c.n_events
+    FROM counts c JOIN est p ON p.event_type = c.event_type
     ORDER BY c.event_type
     """
 
@@ -1523,13 +1240,7 @@ def hll_column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFram
     )
     p1 = F.lit(HLL_P1)
     vn = ((F.col("v") % p1) + p1) % p1
-    hashed = vals.select(
-        "c",
-        (_hll_mix_spark(vn, HLL_IDX_SEED) % HLL_M).alias("idx"),
-        (_hll_mix_spark(vn, HLL_RHO_SEED) % (1 << HLL_RHO_BITS)).alias("u"),
-    )
-    regs = hashed.groupBy("c", "idx").agg(F.max(_hll_rho_col()).alias("mrho"))
-    est = _hll_estimate_from_regs(regs, ["c"]).select(
+    est = _hll_fold(_hll_registers(vals, vn, "c"), "c").select(
         F.col("c").alias("col_name"), F.round("est", 6).alias("n_distinct_est_r6")
     )
 
@@ -1584,39 +1295,14 @@ def hll_column_profile_sql(
 ) -> str:
     """Twin of hll_column_profile: per column, the identical canon ->
     normalize -> mix -> register fold -> estimate chain, UNION ALL'd."""
-    top = HLL_RHO_BITS + 1
-    est = (
-        "CASE WHEN (CAST({alpha} AS DOUBLE) * {m} * {m} * {two_top})"
-        "          / CAST(s_used + ({m} - n_regs) * {two_top} AS DOUBLE)"
-        "          <= 2.5 * {m} AND {m} - n_regs > 0"
-        "     THEN CAST({m} AS DOUBLE)"
-        "          * ln(CAST({m} AS DOUBLE) / CAST({m} - n_regs AS DOUBLE))"
-        "     ELSE (CAST({alpha} AS DOUBLE) * {m} * {m} * {two_top})"
-        "          / CAST(s_used + ({m} - n_regs) * {two_top} AS DOUBLE)"
-        " END"
-    ).format(alpha=repr(HLL_ALPHA), m=HLL_M, two_top=1 << top)
     ctes, rows = [], []
     for c, kind in kinds.items():
         canon = _profile_canon_sql(c, kind)
         vn = f"((({canon}) % {HLL_P1}) + {HLL_P1}) % {HLL_P1}"
-        rho_sql = _hll_rho_cases("u")
         ctes.append(f"""
-    h_{c} AS (
-        SELECT {_hll_mix_sql(f"({vn})", HLL_IDX_SEED)} % {HLL_M} AS idx,
-               {_hll_mix_sql(f"({vn})", HLL_RHO_SEED)}
-                   % {1 << HLL_RHO_BITS} AS u
-        FROM {table} WHERE {c} IS NOT NULL
-    ),
-    g_{c} AS (
-        SELECT idx, max({rho_sql}) AS mrho FROM h_{c} GROUP BY idx
-    ),
+    {_hll_regs_sql(f"g_{c}", f"({vn})", f"{table} WHERE {c} IS NOT NULL")},
     e_{c} AS (
-        SELECT round({est}, 6) AS est FROM (
-            SELECT CAST(count(*) AS BIGINT) AS n_regs,
-                   CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)
-                       AS s_used
-            FROM g_{c}
-        )
+        SELECT round(est, 6) AS est FROM ({_hll_fold_sql(f"g_{c}")})
     )""")
         is_num = kind in ("int", "cents")
         mn = (

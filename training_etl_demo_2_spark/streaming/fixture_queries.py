@@ -581,12 +581,13 @@ def stream_click_funnel_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, millisecond-floored. The oracle twin applies the same
     cutoff to the batch left join.
     """
-    from .stateful import correlate_streams_outer
+    from .stateful import correlate_streams
 
     src = read_events_stream_fixture(spark, sf_dir)
-    joined = correlate_streams_outer(
+    joined = correlate_streams(
         src.filter(F.col("event_type") == "click"),
         src.filter(F.col("event_type") == "purchase"),
+        how="left",
         max_gap="1 hour",
     )
     out = joined.select(
@@ -644,97 +645,25 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch registers IDENTICAL, so the comparison is hash-exact, not
     approximate — a full-oracle streaming row, not rows-only.
     """
-    from ..operators.sketches import (
-        HLL_ALPHA,
-        HLL_IDX_SEED,
-        HLL_M,
-        HLL_RHO_BITS,
-        HLL_RHO_SEED,
-        _hll_mix_spark,
-    )
+    from ..operators.sketches import _hll_fold, _hll_registers
 
     ev = read_events_stream_fixture(spark, sf_dir)
-    uid = F.col("user_id").cast("long")
-    hashed = ev.select(
-        (_hll_mix_spark(uid, HLL_IDX_SEED) % HLL_M).alias("idx"),
-        (_hll_mix_spark(uid, HLL_RHO_SEED) % (1 << HLL_RHO_BITS)).alias("u"),
-    )
-    rho = F.lit(HLL_RHO_BITS + 1)
-    for k in range(HLL_RHO_BITS):
-        rho = F.when(F.col("u") >= (1 << k), HLL_RHO_BITS - k).otherwise(rho)
-    regs = hashed.groupBy("idx").agg(F.max(rho).alias("mrho"))
+    regs = _hll_registers(ev, F.col("user_id").cast("long"))
     _replay_to_table(regs, "gate_stream_hll_users")
-    drained = spark.table("gate_stream_hll_users")
-    top = HLL_RHO_BITS + 1
-    per = drained.agg(
-        F.count(F.lit(1)).alias("n_regs"),
-        F.sum(F.expr(f"shiftleft(1L, {top} - mrho)"))
-        .cast("long")
-        .alias("s_used"),
-    )
-    v = F.lit(HLL_M) - F.col("n_regs")
-    s_int = F.col("s_used") + v * (1 << top)
-    e_raw = F.lit(HLL_ALPHA * HLL_M * HLL_M * (1 << top)) / s_int.cast(
-        "double"
-    )
-    est = F.when(
-        (e_raw <= 2.5 * HLL_M) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v.cast("double")),
-    ).otherwise(e_raw)
-    return per.select(
-        v.cast("long").alias("v_empty"),
-        s_int.cast("long").alias("s_int"),
-        F.round(est, 6).alias("est_r6"),
+    return _hll_fold(spark.table("gate_stream_hll_users")).select(
+        "v_empty", "s_int", F.round("est", 6).alias("est_r6")
     )
 
 
 def _stream_hll_oracle() -> str:
-    from ..operators.sketches import (
-        HLL_ALPHA,
-        HLL_IDX_SEED,
-        HLL_M,
-        HLL_RHO_BITS,
-        HLL_RHO_SEED,
-        _hll_mix_sql,
-        _hll_rho_cases,
-    )
+    from ..operators.sketches import _hll_fold_sql, _hll_regs_sql
 
-    top = HLL_RHO_BITS + 1
     return f"""
-    WITH hashed AS (
-        SELECT {_hll_mix_sql("user_id", HLL_IDX_SEED)} % {HLL_M} AS idx,
-               {_hll_mix_sql("user_id", HLL_RHO_SEED)}
-                   % {1 << HLL_RHO_BITS} AS u
-        FROM events
-    ),
-    regs AS (
-        SELECT idx, max({_hll_rho_cases("u")}) AS mrho
-        FROM hashed GROUP BY idx
-    ),
-    fold AS (
-        SELECT CAST(count(*) AS BIGINT) AS n_regs,
-               CAST(sum(CAST(1 AS BIGINT) << ({top} - mrho)) AS BIGINT)
-                   AS s_used
-        FROM regs
-    ),
-    calc AS (
-        SELECT {HLL_M} - n_regs AS v_empty,
-               s_used + ({HLL_M} - n_regs) * (CAST(1 AS BIGINT) << {top})
-                   AS s_int
-        FROM fold
-    )
+    WITH {_hll_regs_sql("regs", "user_id", "events")}
     SELECT CAST(v_empty AS BIGINT) AS v_empty,
            CAST(s_int AS BIGINT) AS s_int,
-           round(CASE WHEN (CAST({HLL_ALPHA!r} AS DOUBLE) * {HLL_M}
-                            * {HLL_M} * (CAST(1 AS BIGINT) << {top}))
-                           / CAST(s_int AS DOUBLE) <= 2.5 * {HLL_M}
-                           AND v_empty > 0
-                      THEN CAST({HLL_M} AS DOUBLE)
-                           * ln(CAST({HLL_M} AS DOUBLE) / v_empty)
-                      ELSE (CAST({HLL_ALPHA!r} AS DOUBLE) * {HLL_M}
-                            * {HLL_M} * (CAST(1 AS BIGINT) << {top}))
-                           / CAST(s_int AS DOUBLE) END, 6) AS est_r6
-    FROM calc
+           round(est, 6) AS est_r6
+    FROM ({_hll_fold_sql("regs")})
     """
 
 
@@ -756,12 +685,13 @@ def stream_funnel_two_sided(spark: SparkSession, sf_dir: str) -> DataFrame:
     the <= edge is empirically pinned by a planted boundary test),
     where W = min(max click ts, max purchase ts) − 2h, ms-floored.
     """
-    from .stateful import correlate_streams_full_outer
+    from .stateful import correlate_streams
 
     src = read_events_stream_fixture(spark, sf_dir)
-    joined = correlate_streams_full_outer(
+    joined = correlate_streams(
         src.filter(F.col("event_type") == "click"),
         src.filter(F.col("event_type") == "purchase"),
+        how="full",
         max_gap="1 hour",
     )
     out = joined.select(

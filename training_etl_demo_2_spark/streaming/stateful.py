@@ -179,17 +179,46 @@ def anomaly_stream(
 def correlate_streams(
     clicks: DataFrame,
     purchases: DataFrame,
+    how: str = "inner",
     max_gap: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Stream-stream inner join: purchases attributed to a prior click
-    by the same user within ``max_gap``.
+    """Stream-stream join of clicks and purchases by the same user, the
+    purchase landing inside ``max_gap`` after the click. ``how`` is
+    ``"inner"`` (attribution), ``"left"`` (funnel loss: every click) or
+    ``"full"`` (two-sided funnel: every click and every purchase);
+    ``user_id`` is the click's user, or the purchase's on a
+    purchase-only row.
 
     Both sides are watermarked and the join carries a time-range
     predicate — the two conditions Spark needs to BOUND the join state
-    (each side buffers only rows younger than watermark+gap). Without
-    them a stream-stream join grows state forever; with them this is
-    the standard attribution/correlation shape at any scale.
+    (each side buffers only rows younger than watermark+gap, for every
+    ``how``). Without them a stream-stream join grows state forever;
+    with them this is the standard attribution/correlation shape at
+    any scale.
+
+    Emission rules (empirically pinned by the fixture queries
+    stream_click_attribution, stream_click_funnel_loss and
+    stream_funnel_two_sided):
+
+    * matched rows emit as found (all three join types);
+    * outer rows are generated by STATE EXPIRY, so emission timing is
+      part of the semantics, not just the matched set. The global
+      watermark W follows Spark's min-of-inputs policy — both sides
+      watermark independently (max event time seen on THAT side minus
+      the delay, millisecond floor) and the join state uses the
+      MINIMUM;
+    * ``left`` and ``full``: an unmatched click emits iff
+      ``click_ts + max_gap < W`` (left state expires when no on-time
+      purchase can still land inside the gap);
+    * ``full``: an unmatched purchase emits iff ``purchase_ts <= W``
+      (its matching clicks satisfy click_ts < purchase_ts, so once the
+      watermark reaches purchase_ts no on-time click can precede it).
+
+    On an unbounded stream W keeps advancing and every unmatched row
+    eventually emits; on a bounded replay rows younger than the final
+    W are withheld — by design, they could still match if the stream
+    resumed.
     """
     from pyspark.sql import functions as F
 
@@ -213,8 +242,9 @@ def correlate_streams(
             purchase_ts <= click_ts + INTERVAL {max_gap}
             """
         ),
+        how,
     ).select(
-        F.col("c_user").alias("user_id"),
+        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
         "click_id",
         "purchase_id",
         "click_ts",
@@ -468,127 +498,6 @@ def cusum_alarm_stream(
         CUSUM_STATE,
         "update",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def correlate_streams_outer(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    max_gap: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER join — ``correlate_streams`` plus the
-    funnel-loss half: a click with no purchase inside ``max_gap`` still
-    emits (purchase columns null) once the watermark proves no match
-    can arrive. This is the capability inner joins lack: the null row
-    is generated by STATE EXPIRY, so emission timing is part of the
-    semantics, not just the matched set.
-
-    Emission rule (empirically pinned, see stream_click_funnel_loss):
-    the global watermark follows Spark's min-of-inputs policy — both
-    sides watermark independently (max event time seen on THAT side
-    minus the delay, millisecond floor) and the join state uses the
-    MINIMUM, so an unmatched click emits iff
-    ``click_ts + max_gap < min(max_click_ts, max_purchase_ts) − delay``.
-    On an unbounded stream that boundary keeps advancing and every
-    unmatched click eventually emits; on a bounded replay the tail
-    younger than the final watermark is withheld — by design, those
-    clicks could still match if the stream resumed.
-
-    State bound: identical to the inner join (each side buffers only
-    rows younger than watermark+gap).
-    """
-    from pyspark.sql import functions as F
-
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return c.join(
-        p,
-        F.expr(
-            f"""
-            c_user = p_user AND
-            purchase_ts > click_ts AND
-            purchase_ts <= click_ts + INTERVAL {max_gap}
-            """
-        ),
-        "leftOuter",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
-    )
-
-
-def correlate_streams_full_outer(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    max_gap: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream FULL OUTER join — completes the join family
-    (inner: ``correlate_streams``, left: ``correlate_streams_outer``):
-    unmatched CLICKS and unmatched PURCHASES both emit null-padded
-    rows on state expiry. The report shape is "every click and every
-    purchase, attributed or provably orphaned" — the two-sided funnel
-    audit neither one-sided join can produce.
-
-    Emission rules (empirically pinned in the gate twin, same
-    min-of-inputs global watermark W as the left-outer — per-side max
-    event time minus delay, millisecond floor, then min):
-
-    * unmatched click emits iff ``click_ts + max_gap < W`` (identical
-      to the left-outer rule — left state expires when no on-time
-      purchase can still land inside the gap);
-    * unmatched purchase emits iff ``purchase_ts <= W`` (its matching
-      clicks satisfy click_ts < purchase_ts, so once the watermark
-      reaches purchase_ts no on-time click can precede it).
-
-    On a bounded replay rows younger than the final W are withheld on
-    both sides — by design, they could still match on resume. State
-    bound: identical to the inner join on both sides.
-    """
-    from pyspark.sql import functions as F
-
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return c.join(
-        p,
-        F.expr(
-            f"""
-            c_user = p_user AND
-            purchase_ts > click_ts AND
-            purchase_ts <= click_ts + INTERVAL {max_gap}
-            """
-        ),
-        "fullOuter",
-    ).select(
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
     )
 
 

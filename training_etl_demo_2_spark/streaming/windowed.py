@@ -92,19 +92,3 @@ def events_sessions(
             "sum_value",
         )
     )
-
-
-def run_stream_to_memory(
-    result: DataFrame, query_name: str, timeout_s: float = 120.0
-):
-    """Drive a streaming DataFrame to a memory sink until all available
-    input is processed (test/batch-replay helper)."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
