@@ -40,6 +40,9 @@ def test_write_partitioned_dynamic_overwrite(spark, tmp_path):
 
     from training_etl_demo_2_spark import io as io_mod
 
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)  # never set: the case that used to leak
+    prior = spark.conf.get(key)
     path = str(tmp_path / "part_tbl")
     df = spark.createDataFrame(
         [("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 3)],
@@ -47,10 +50,13 @@ def test_write_partitioned_dynamic_overwrite(spark, tmp_path):
     )
     io_mod.write_partitioned(df, path, ["day"])
     assert spark.read.parquet(path).count() == 3
+    # the write's dynamic mode does not leak into the session
+    assert spark.conf.get(key) == prior
 
     # dynamic overwrite of ONE day must leave the other day intact
     redo = spark.createDataFrame([("2024-01-02", 99)], "day string, v int")
     io_mod.write_partitioned(redo, path, ["day"])
+    assert spark.conf.get(key) == prior
     # hive partition values are type-inferred on read (day -> date)
     got = {
         (str(r["day"]), r["v"]) for r in spark.read.parquet(path).collect()

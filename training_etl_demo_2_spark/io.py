@@ -148,7 +148,9 @@ def write_partitioned(
             spark.conf.set(key, "dynamic")
         df.write.partitionBy(*partition_by).mode(mode).parquet(path)
     finally:
-        if prev is not None:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
             spark.conf.set(key, prev)
 
 
