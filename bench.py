@@ -39,6 +39,7 @@ CALIB_FACTOR = 1.5  # probe > CALIB_FACTOR x idle marks a query contended
 CALIB_RETRIES = 2  # re-timing passes over flagged queries
 CALIB_RETRY_S = 150.0  # wall-clock budget for all re-timing passes
 REGRESS_FACTOR = 2.5  # > REGRESS_FACTOR x prior clean time is re-timed
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"  # when SPARK_GRAFT_SF_DIR is unset
 
 
 def load_prior_ref(
@@ -106,65 +107,26 @@ def adjudicate_regressions(
     }
 
 
-def chunk_per_query_lines(
-    queries: dict[str, float], sf_val, limit: int = 4000
-) -> list[dict]:
-    """Split the per-query timing table into JSON-line dicts that each
-    serialize under ``limit`` bytes. Merging every chunk's ``queries``
-    reconstructs the full table exactly."""
-    chunks: list[dict[str, float]] = [{}]
-    base = len(json.dumps({
-        "metric": "per_query_wall_seconds", "unit": "sec",
-        "sf": sf_val, "chunk": 99, "n_chunks": 99, "queries": {},
-    }))
-    size = base
-    for nm, t in queries.items():
-        entry = len(json.dumps({nm: t})) + 2
-        if chunks[-1] and size + entry > limit:
-            chunks.append({})
-            size = base
-        chunks[-1][nm] = t
-        size += entry
-    return [
-        {
-            "metric": "per_query_wall_seconds", "unit": "sec",
-            "sf": sf_val, "chunk": i + 1, "n_chunks": len(chunks),
-            "queries": part,
-        }
-        for i, part in enumerate(chunks)
-    ]
-
-
-def main() -> None:
-    import __spark_entry__ as entrymod
-    from training_etl_demo_2_spark.session import codegen_compiles, get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
-
-    spark = get_spark(app_name="bench")
-    # Host calibration: the bench box is time-shared and its effective
-    # CPU speed swings ~4-10x between runs (measured). A fixed
-    # single-thread BLAS burst taken before and after the sweep gives
-    # the reader a normalization denominator for cross-run comparisons.
+def calib() -> float:
+    """Seconds of a fixed single-thread BLAS burst. The bench box is
+    time-shared and its effective CPU speed swings ~4-10x between runs
+    (measured), so a probe taken around the timed runs gives the reader
+    a normalization denominator and a contention flag."""
     import numpy as np
 
-    def calib() -> float:
-        a = np.random.RandomState(0).rand(1200, 1200)
-        t0 = time.perf_counter()
-        for _ in range(4):
-            a = 0.5 * (a @ a) / np.linalg.norm(a)
-        return round(time.perf_counter() - t0, 3)
+    a = np.random.RandomState(0).rand(1200, 1200)
+    t0 = time.perf_counter()
+    for _ in range(4):
+        a = 0.5 * (a @ a) / np.linalg.norm(a)
+    return round(time.perf_counter() - t0, 3)
 
-    calib_before = calib()
 
-    # Warmup: JIT/codegen-warm the hot expression families (explode/agg,
-    # shingle hashing, window ranking) at sf0.001 so first-timed queries
-    # measure steady state, not C2 compilation.
+def warm_up(spark) -> None:
+    """JIT/codegen-warm the hot expression families (explode/agg,
+    shingle hashing, window ranking) at sf0.001 so first-timed queries
+    measure steady state, not C2 compilation."""
+    import __spark_entry__ as entrymod
+
     entrymod.entry(spark).count()
     warm = entrymod.queries()
     for wq in ("doc_fingerprints", "bigram_counts", "top_orders_per_customer"):
@@ -172,6 +134,50 @@ def main() -> None:
             warm[wq](spark, "/root/testdata/sf0.001").count()
         except Exception:
             pass
+
+
+def run_one(spark, fn, sf_dir: str) -> tuple[float, int, int]:
+    """One timed run of ``fn(spark, sf_dir)``: (wall seconds, row count,
+    generated classes compiled). The timing spans plan build plus
+    execution to a count() materialization.
+
+    The compile count matters because a re-run finds the first run's
+    classes in the session's codegen cache, so a retry's timing can
+    come from a compile-free run.
+
+    Operators persist intra-query intermediates (shingle/band/edge
+    relations) for within-plan reuse and intentionally leave unpersist
+    to the harness (release_cached/clearCache): dropping the cache after
+    every run, failed ones included, keeps 300+ queries' cached blocks
+    from evicting each other and from leaking cached subplans into
+    later queries, and makes timings independent of run order.
+    """
+    from training_etl_demo_2_spark.session import codegen_compiles
+
+    c0 = codegen_compiles(spark)
+    t0 = time.perf_counter()
+    try:
+        n = fn(spark, sf_dir).count()
+        dt = round(time.perf_counter() - t0, 3)
+        return dt, n, codegen_compiles(spark) - c0
+    finally:
+        spark.catalog.clearCache()
+
+
+def main() -> None:
+    import __spark_entry__ as entrymod
+    from training_etl_demo_2_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    try:
+        sf_val = float(sf)
+    except ValueError:
+        sf_val = sf
+
+    spark = get_spark(app_name="bench")
+    calib_before = calib()
+    warm_up(spark)
 
     # Calib-aware sweep (round-6 lesson: every round burned adjudication
     # time separating host contention from real regressions — a 2.7x
@@ -201,25 +207,6 @@ def main() -> None:
     # the whole run before any summary printed, zeroing the round's bench
     # artifact): a failing query records an error entry and the sweep
     # keeps timing the rest.
-    #
-    # Each run also counts the generated classes it compiled: a re-run
-    # finds the first run's classes in the session's codegen cache, so
-    # a retry's timing can come from a compile-free run.
-    def run_one(fn) -> tuple[float, int, int]:
-        c0 = codegen_compiles(spark)
-        t0 = time.perf_counter()
-        n = fn(spark, sf_dir).count()
-        dt = round(time.perf_counter() - t0, 3)
-        compiled = codegen_compiles(spark) - c0
-        # Operators persist intra-query intermediates (shingle/band/edge
-        # relations) for within-plan reuse and intentionally leave
-        # unpersist to the harness (release_cached/clearCache): dropping
-        # the cache between queries keeps 300+ queries' cached blocks
-        # from evicting each other and makes per-query timings
-        # independent of sweep order.
-        spark.catalog.clearCache()
-        return dt, n, compiled
-
     registry = entrymod.queries()
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -237,7 +224,7 @@ def main() -> None:
             segment = []
             seg_probe = p
         try:
-            timings[name], n, compiles[name] = run_one(fn)
+            timings[name], n, compiles[name] = run_one(spark, fn, sf_dir)
         except Exception as exc:  # noqa: BLE001 — sweep must survive
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name][:120]}", file=sys.stderr)
@@ -281,7 +268,7 @@ def main() -> None:
                 break
             before = calib()
             try:
-                dt, _, compiled = run_one(registry[nm])
+                dt, _, compiled = run_one(spark, registry[nm], sf_dir)
             except Exception:  # noqa: BLE001 — keep the original timing
                 continue
             stamp = max(before, calib())
@@ -338,18 +325,8 @@ def main() -> None:
     # stdout tail window that clips the (large) per-query line still
     # ends with a complete, parseable summary line, and a head-biased
     # parser finds one up front too.
-    #
-    # Round-10 lesson: the single full per-query line (~12 KB at 389
-    # queries) outgrew the driver's bounded stdout tail, so PERF came
-    # back with per_query empty and the round lost its per-query and
-    # scaling adjudication. Additions-only fix: re-emit the per-query
-    # timings as several <=4 KB chunk lines immediately before the
-    # final compact summary line, so any tail window that captures the
-    # last few lines captures the complete per-query table too.
     print(json.dumps(compact))
     print(json.dumps(full))
-    for line in chunk_per_query_lines(timings, sf_val):
-        print(json.dumps(line))
     print(json.dumps(compact))
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH.json"), "w") as f:

@@ -1,4 +1,5 @@
-"""Unit tests for bench.py's prior-run regression net (no Spark).
+"""Unit tests for bench.py's prior-run regression net (no Spark) and
+for its timed run's cache hygiene (shared Spark session).
 
 Round-7 gap this closes: the driver's r07 bench stamped a 4x transient
 (q4_order_priority 3.76s vs 0.91s committed) as calib-clean because the
@@ -14,9 +15,11 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import adjudicate_regressions, load_prior_ref  # noqa: E402
+from bench import adjudicate_regressions, load_prior_ref, run_one  # noqa: E402
 
 
 def test_adjudicate_noise_vs_reproduced():
@@ -75,26 +78,16 @@ def test_load_prior_ref_prefers_committed_blob(tmp_path):
     assert src == "HEAD:BENCH.json"
 
 
-def test_chunk_per_query_lines_bounded_and_lossless():
-    from bench import chunk_per_query_lines
+def test_run_one_clears_cache_when_the_query_fails(spark, sf_dir):
+    # a failing query's persisted relations must not outlive its run:
+    # left in the CacheManager, later queries of a sweep would pick up
+    # its cached subplans
+    from pyspark.sql import functions as F
 
-    queries = {f"query_name_number_{i:03d}": round(0.1 + i * 0.013, 3)
-               for i in range(389)}
-    lines = chunk_per_query_lines(queries, 0.1)
-    assert all(len(json.dumps(line)) <= 4000 for line in lines)
-    assert len(lines) > 1  # 389 queries cannot fit one 4 KB line
-    merged: dict[str, float] = {}
-    for line in lines:
-        assert line["metric"] == "per_query_wall_seconds"
-        assert line["n_chunks"] == len(lines)
-        merged.update(line["queries"])
-    assert merged == queries
+    def persist_then_fail(spark, sf_dir):
+        cached = spark.range(10).persist()
+        return cached.where(F.expr("assert_true(id < 0) IS NULL"))
 
-
-def test_chunk_per_query_lines_single_small_table():
-    from bench import chunk_per_query_lines
-
-    queries = {"a": 1.0, "b": 2.0}
-    lines = chunk_per_query_lines(queries, 0.001)
-    assert len(lines) == 1
-    assert lines[0]["queries"] == queries
+    with pytest.raises(Exception):
+        run_one(spark, persist_then_fail, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
