@@ -34,7 +34,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-CALIB_IDLE_S = 0.21  # matmul probe seconds on an idle host
+CALIB_WARM_PROBES = 3  # matmul probes around the warm-up; fastest = idle
 CALIB_FACTOR = 1.5  # probe > CALIB_FACTOR x idle marks a query contended
 CALIB_RETRIES = 2  # re-timing passes over flagged queries
 CALIB_RETRY_S = 150.0  # wall-clock budget for all re-timing passes
@@ -136,14 +136,33 @@ def warm_up(spark) -> None:
             pass
 
 
-def run_one(spark, fn, sf_dir: str) -> tuple[float, int, int]:
+def warm_up_calibrated(spark) -> tuple[list[float], float, float]:
+    """``warm_up`` between CALIB_WARM_PROBES matmul probes (one before,
+    the rest after): (probes, idle baseline, contention threshold).
+
+    The idle baseline is this run's fastest probe, not a constant: the
+    probe's time depends on the host (0.21 s idle on 32 cores; every
+    probe of one 4-core sweep read 0.41-0.96 s, so a 32-core constant
+    stamped every query contended). A baseline from the run itself
+    flags contention that comes and goes during the sweep.
+    """
+    probes = [calib()]
+    warm_up(spark)
+    probes += [calib() for _ in range(CALIB_WARM_PROBES - 1)]
+    idle = min(probes)
+    return probes, idle, round(idle * CALIB_FACTOR, 3)
+
+
+def run_one(spark, fn, sf_dir: str) -> tuple[float, int, int, int]:
     """One timed run of ``fn(spark, sf_dir)``: (wall seconds, row count,
-    generated classes compiled). The timing spans plan build plus
-    execution to a count() materialization.
+    generated classes compiled, JIT milliseconds). The timing spans plan
+    build plus execution to a count() materialization.
 
     The compile count matters because a re-run finds the first run's
     classes in the session's codegen cache, so a retry's timing can
-    come from a compile-free run.
+    come from a compile-free run. The JIT milliseconds are the HotSpot
+    compilers' time over the same span (every compiler thread of the
+    JVM, so also what earlier runs queued).
 
     Operators persist intra-query intermediates (shingle/band/edge
     relations) for within-plan reuse and intentionally leave unpersist
@@ -152,14 +171,14 @@ def run_one(spark, fn, sf_dir: str) -> tuple[float, int, int]:
     from evicting each other and from leaking cached subplans into
     later queries, and makes timings independent of run order.
     """
-    from training_etl_demo_2_spark.session import codegen_compiles
+    from training_etl_demo_2_spark.session import codegen_compiles, jit_ms
 
-    c0 = codegen_compiles(spark)
+    c0, j0 = codegen_compiles(spark), jit_ms(spark)
     t0 = time.perf_counter()
     try:
         n = fn(spark, sf_dir).count()
         dt = round(time.perf_counter() - t0, 3)
-        return dt, n, codegen_compiles(spark) - c0
+        return dt, n, codegen_compiles(spark) - c0, jit_ms(spark) - j0
     finally:
         spark.catalog.clearCache()
 
@@ -176,20 +195,19 @@ def main() -> None:
         sf_val = sf
 
     spark = get_spark(app_name="bench")
-    calib_before = calib()
-    warm_up(spark)
+    probes, calib_idle, calib_thresh = warm_up_calibrated(spark)
 
     # Calib-aware sweep (round-6 lesson: every round burned adjudication
     # time separating host contention from real regressions — a 2.7x
     # phantom on embedding_near_pairs in r6, line_dedup in r5). The
     # matmul probe is interleaved every PROBE_EVERY queries; each query's
     # calib context is the MAX of the probes bracketing its segment, and
-    # any query whose context exceeds CALIB_FACTOR x the idle baseline is
-    # automatically re-timed with tight per-query probes, keeping the
-    # measurement with the cleaner stamp. BENCH.json then carries a
-    # per-query calib stamp a reader can trust without cross-run forensics.
+    # any query whose context exceeds CALIB_FACTOR x the idle baseline
+    # (the fastest warm-up probe) is automatically re-timed with tight
+    # per-query probes, keeping the measurement with the cleaner stamp.
+    # BENCH.json then carries a per-query calib stamp a reader can trust
+    # without cross-run forensics.
     PROBE_EVERY = 10
-    calib_thresh = round(CALIB_IDLE_S * CALIB_FACTOR, 3)
 
     # Prior-run regression net (round-7 lesson: the driver's r07 run
     # stamped a 4x-transient q4_order_priority as "clean" — contention
@@ -212,8 +230,8 @@ def main() -> None:
     errors: dict[str, str] = {}
     calibs: dict[str, float] = {}
     compiles: dict[str, int] = {}  # of the run whose timing was kept
-    probes: list[float] = [calib_before]
-    seg_probe = calib_before
+    jits: dict[str, int] = {}  # JIT ms of the run whose timing was kept
+    seg_probe = probes[-1]
     segment: list[str] = []
     for i, (name, fn) in enumerate(registry.items()):
         if i and i % PROBE_EVERY == 0:
@@ -224,7 +242,9 @@ def main() -> None:
             segment = []
             seg_probe = p
         try:
-            timings[name], n, compiles[name] = run_one(spark, fn, sf_dir)
+            timings[name], n, compiles[name], jits[name] = run_one(
+                spark, fn, sf_dir
+            )
         except Exception as exc:  # noqa: BLE001 — sweep must survive
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name][:120]}", file=sys.stderr)
@@ -268,7 +288,7 @@ def main() -> None:
                 break
             before = calib()
             try:
-                dt, _, compiled = run_one(spark, registry[nm], sf_dir)
+                dt, _, compiled, jit = run_one(spark, registry[nm], sf_dir)
             except Exception:  # noqa: BLE001 — keep the original timing
                 continue
             stamp = max(before, calib())
@@ -281,7 +301,7 @@ def main() -> None:
                     stamp <= calib_thresh and calibs[nm] <= calib_thresh
                 )
                 if (stamp < calibs[nm] and not both_clean) or dt < timings[nm]:
-                    timings[nm], compiles[nm] = dt, compiled
+                    timings[nm], compiles[nm], jits[nm] = dt, compiled, jit
                 calibs[nm] = min(stamp, calibs[nm])
 
     regressions = adjudicate_regressions(
@@ -306,8 +326,8 @@ def main() -> None:
         "sf": sf_val,
         # single-thread matmul seconds before/after the sweep:
         # normalize cross-run comparisons on a noisy shared host
-        "calib_matmul_s": [calib_before, probes[-1]],
-        "calib_idle_s": CALIB_IDLE_S,
+        "calib_matmul_s": [probes[0], probes[-1]],
+        "calib_idle_s": calib_idle,
         "calib_threshold_s": calib_thresh,
         "n_calib_contended": n_contended,
         "regress_factor": REGRESS_FACTOR,
@@ -318,7 +338,7 @@ def main() -> None:
         ),
     }
     full = {**compact, "queries": timings, "errors": errors,
-            "calib": calibs, "codegen_compiles": compiles,
+            "calib": calibs, "codegen_compiles": compiles, "jit_ms": jits,
             "calib_probes": probes,
             "regressions": regressions}
     # Compact line FIRST and LAST, full per-query line in between: a

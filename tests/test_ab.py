@@ -1,9 +1,11 @@
 """tools/ab.py: the verdict rule (no Spark), the equality gate that
-refuses to time arms whose rows differ, and the exit code for a query
-or arm that cannot be resolved."""
+refuses to time arms whose rows differ, the untimed warm-up of the
+timed plan, and the exit code for a query or arm that cannot be
+resolved."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -88,3 +90,26 @@ def test_rows_mismatch_exits_1_before_timing(
     monkeypatch.setattr(ab.bench, "calib", no_timing)
     assert ab.main(["word_count", "ab_arm_limit1:arm"]) == 1
     assert "results differ" in capsys.readouterr().out
+
+
+def test_timed_plan_is_warmed_untimed_before_the_pairs(tmp_path, monkeypatch):
+    calls = []
+
+    def run_one(spark, fn, sf_dir):  # the n-th call takes n seconds
+        calls.append(fn)
+        return float(len(calls)), 1, 0, 0
+
+    monkeypatch.setattr(ab, "get_spark", lambda **_: None)
+    monkeypatch.setattr(ab, "mismatch", lambda *_: None)
+    monkeypatch.setattr(ab.bench, "warm_up", lambda spark: None)
+    monkeypatch.setattr(ab.bench, "calib", lambda: 0.2)
+    monkeypatch.setattr(ab.bench, "run_one", run_one)
+    out = tmp_path / "ab.json"
+    assert ab.main(["word_count", "os:getcwd", str(out)]) == 0
+    report = json.loads(out.read_text())
+    # calls 1 and 2 warm A (the registry entry) and B; only the pairs'
+    # calls are recorded
+    assert [fn is os.getcwd for fn in calls[:2]] == [False, True]
+    assert len(calls) == 2 + 2 * ab.PAIRS
+    timed = sorted(report["A"]["times"] + report["B"]["times"])
+    assert timed == [float(n) for n in range(3, len(calls) + 1)]

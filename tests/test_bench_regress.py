@@ -1,5 +1,6 @@
-"""Unit tests for bench.py's prior-run regression net (no Spark) and
-for its timed run's cache hygiene (shared Spark session).
+"""Unit tests for bench.py's prior-run regression net and its
+contention threshold (no Spark), and for its timed run's cache hygiene
+and JIT counter (shared Spark session).
 
 Round-7 gap this closes: the driver's r07 bench stamped a 4x transient
 (q4_order_priority 3.76s vs 0.91s committed) as calib-clean because the
@@ -19,6 +20,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from bench import adjudicate_regressions, load_prior_ref, run_one  # noqa: E402
 
 
@@ -91,3 +93,26 @@ def test_run_one_clears_cache_when_the_query_fails(spark, sf_dir):
     with pytest.raises(Exception):
         run_one(spark, persist_then_fail, sf_dir)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_idle_baseline_is_the_fastest_warm_up_probe(monkeypatch):
+    # probes of a 4-core host: every one is above the 0.315 s threshold a
+    # 32-core idle constant gave, so that constant stamped every query
+    # contended; the run's own fastest probe does not
+    probes = iter([0.61, 0.42, 0.47])
+    order = []
+    monkeypatch.setattr(bench, "calib", lambda: order.append("p") or next(probes))
+    monkeypatch.setattr(bench, "warm_up", lambda spark: order.append("w"))
+    got, idle, thresh = bench.warm_up_calibrated(None)
+    assert got == [0.61, 0.42, 0.47] and order == ["p", "w", "p", "p"]
+    assert idle == 0.42
+    assert thresh == round(0.42 * bench.CALIB_FACTOR, 3) == 0.63
+    assert 0.61 <= thresh  # the slowest warm-up probe reads clean
+
+
+def test_run_one_reports_jit_milliseconds(spark, sf_dir):
+    from training_etl_demo_2_spark.session import jit_ms
+
+    _, n, _, jit = run_one(spark, lambda spark, _: spark.range(1000), sf_dir)
+    assert n == 1000 and 0 <= jit <= jit_ms(spark)
+    assert jit_ms(spark) > 0  # the counter sees the JVM's compiles

@@ -10,16 +10,21 @@ on a time-shared host.
 
 1. Equality, before any timing: each arm runs once untimed and its
    column set, then its rows (through check_oracle's canonical form),
-   must match. This run is also the arm's own warm-up.
-2. Timing: PAIRS pairs, alternating which arm runs first, each run
+   must match.
+2. Warm-up: each arm runs once more untimed through bench.run_one. The
+   equality run's collect() plans different code from the timed
+   count(), so without this the first timed pair still compiles
+   generated classes and is the slowest pair.
+3. Timing: PAIRS pairs, alternating which arm runs first, each run
    through bench.run_one (count() materialization, cache cleared after
    it), with bench.calib() probes before and after.
-3. Verdict (``verdict`` below): ``faster`` when B wins at least nine
+4. Verdict (``verdict`` below): ``faster`` when B wins at least nine
    tenths of the pairs and median(A) - median(B) > IQR(A); ``slower``
    in the mirror case; otherwise ``no difference``.
 
 Prints one compact summary line; the full report (per-arm times,
-median, quartiles, codegen compiles) goes to OUT.json when given.
+median, quartiles, codegen compiles, JIT milliseconds) goes to OUT.json
+when given.
 Exits 0 after timing, 1 when the arms' rows differ, and 2, before Spark
 starts, on an unregistered query or an arm that cannot be imported.
 """
@@ -105,12 +110,14 @@ def mismatch(spark, arms: dict, sf_dir: str) -> str | None:
 
 
 def time_pairs(spark, arms: dict, sf_dir: str) -> dict[str, dict]:
-    runs = {arm: {"times": [], "codegen_compiles": []} for arm in arms}
+    runs = {arm: {"times": [], "codegen_compiles": [], "jit_ms": []}
+            for arm in arms}
     for i in range(PAIRS):
         for arm in ("A", "B") if i % 2 == 0 else ("B", "A"):
-            dt, _, compiled = bench.run_one(spark, arms[arm], sf_dir)
+            dt, _, compiled, jit = bench.run_one(spark, arms[arm], sf_dir)
             runs[arm]["times"].append(dt)
             runs[arm]["codegen_compiles"].append(compiled)
+            runs[arm]["jit_ms"].append(jit)
     for r in runs.values():
         r["q1"], r["median"], r["q3"] = quartiles(r["times"])
     return runs
@@ -140,6 +147,8 @@ def main(argv: list[str]) -> int:
     if why:
         print(f"{query} vs {spec}: results differ, not timed: {why}")
         return 1
+    for fn in arms.values():  # compile the timed count() plan untimed
+        bench.run_one(spark, fn, sf_dir)
     calib_before = bench.calib()
     runs = time_pairs(spark, arms, sf_dir)
     calib_after = bench.calib()

@@ -36,6 +36,53 @@ session config that matters at 100 TB:
   cannot change it. A vanilla session handed to
   ``__spark_entry__.entry(spark)`` by its caller keeps Spark's 100
   entries.
+* **C2 thresholds raised tenfold** — HotSpot compiles a hot method
+  first with C1 and then, once it crosses the tier-4 thresholds (JDK
+  17: 5,000 invocations, or 600 invocations and 15,000 invocations plus
+  loop back-edges, or 40,000 back-edges in one frame), again with the
+  optimizing C2. A session of short queries pushes many planner, py4j
+  and generated-class methods just past those counts,
+  and most of them then run only a handful more times, so C2's work is
+  never paid back. Per-thread CPU of the JVM over five passes of the
+  benchmark's 11 ``query_sweep`` queries at sf0.001 (4 cores, a fixed
+  number of compiler threads, two sessions per arm): at the default
+  thresholds the first pass spent 24.5-26.0 s in C2 threads and
+  4.3-4.7 s in C1 threads out of 43.1-46.4 s, passes 2-5 spent
+  2.9-6.9 s in C2 out of 6.3-12.1 s; at ``C2_THRESHOLDS`` (all four
+  times 10) C2 took 6.9-8.0 s of a 25.0-28.6 s first pass and 1.0-2.7 s
+  of 5.3-9.1 s later, while C1 and GC stayed the same. Sized with
+  perfbench (``--seconds 1``) on a 4-core host, seeds 11-15, the arms
+  of one seed back to back in rotating order, every run correct with
+  0 failed; medians of ``first_pass_cpu_s`` / ``pass_cpu_s`` in
+  seconds:
+
+  ========  ====================  ====================
+  arm       ``query_sweep``       ``reference_etl``
+  ========  ====================  ====================
+  default   32.7 / 5.45           15.9 / 2.76
+  x3        28.8 / 5.35           16.0 / 2.41
+  x10       23.9 / 4.69           11.7 / 2.44
+  x30       20.9 / 4.95           12.6 / 2.49
+  ========  ====================  ====================
+
+  x30 saves more of the first ``query_sweep`` pass but leaves later
+  passes and both ``reference_etl`` figures worse than x10; peak RSS,
+  set-up and the operation tail stayed within noise. The saving is
+  CPU, not latency: code runs longer in C1 before C2 takes it, and on
+  4 cores the compiler threads had run on otherwise idle cores, so
+  perfbench's ungated wall time of a later pass rose from 3.80 to
+  4.37 s on ``query_sweep`` and from 1.36 to 1.50 s on
+  ``reference_etl`` (medians of 10 pairs; x3 left it at 3.87 s), and
+  passes 2-5 of the per-thread runs took 6.8-10.9 s against 3.8-8.4 s
+  of wall time. Rejected: C1 only (``-XX:TieredStopAtLevel=1``) halves
+  the first pass but makes ``reference_etl``'s later passes 37 % dearer
+  in CPU (3.90 / 3.70 s against 2.85 / 2.65 s). The flags are
+  launch-time JVM options, placed before
+  ``SPARK_GRAFT_JAVA_OPTS`` so a flag repeated there wins. A vanilla
+  session handed to ``__spark_entry__.entry(spark)`` keeps HotSpot's
+  defaults, and executors of a real cluster
+  (``spark.executor.extraJavaOptions``) are not tuned: no cluster
+  traffic was measured.
 """
 
 from __future__ import annotations
@@ -53,6 +100,28 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 202 and 215 MB. So 1,000 keeps most of the reuse a larger cache would
 # find, for 8 MB of Metaspace.
 CODEGEN_CACHE_MAX_ENTRIES = 1000
+
+# HotSpot's tier-4 (C2) compile thresholds for the driver JVM: JDK 17's
+# defaults (5000 / 600 / 15000 / 40000) times 10, sized by the A/B in
+# the module docstring.
+C2_THRESHOLDS = {
+    "Tier4InvocationThreshold": 50000,
+    "Tier4MinInvocationThreshold": 6000,
+    "Tier4CompileThreshold": 150000,
+    "Tier4BackEdgeThreshold": 400000,
+}
+
+
+def default_driver_mem(mem_total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    half of the host's physical memory, at most 24g. Under ParallelGC the
+    JVM's RSS climbs toward the heap ceiling over a long session (10 to
+    14 GB under the test suite with a 24g ceiling), so a ceiling above
+    physical memory ends in the kernel's OOM killer, not in a Java
+    OutOfMemoryError."""
+    if mem_total_bytes is None:
+        mem_total_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(24 * 1024, mem_total_bytes // (2 * 1024 * 1024))}m"
 
 
 def get_spark(
@@ -74,8 +143,12 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
         )
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-    java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem())
+    # The C2 thresholds go first: a flag repeated in the env options wins.
+    java_opts = " ".join(
+        [f"-XX:{flag}={n}" for flag, n in C2_THRESHOLDS.items()]
+        + [os.environ.get("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC")]
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -84,7 +157,8 @@ def get_spark(
         # Spark's 1g default heap OOMs real workloads. Measured here:
         # G1 (default) costs ~20-45% wall time on big heaps for this
         # short-task mix; ParallelGC at 24g is as fast as G1 at 1g with
-        # 24x the headroom. Both are launch-time settings (pre-JVM).
+        # 24x the headroom. Both, and the C2 thresholds, are launch-time
+        # settings (pre-JVM).
         .config("spark.driver.memory", driver_mem)
         .config("spark.driver.extraJavaOptions", java_opts)
         # Adaptive execution: coalesce post-shuffle partitions, split skewed
@@ -123,6 +197,13 @@ def codegen_compiles(spark: SparkSession) -> int:
     count."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jit_ms(spark: SparkSession) -> int:
+    """Milliseconds this JVM's HotSpot compilers (C1 and C2, every
+    compiler thread) have spent compiling so far."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return int(mf.getCompilationMXBean().getTotalCompilationTime())
 
 
 # ---------------------------------------------------------------------------
