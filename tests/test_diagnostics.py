@@ -4,6 +4,7 @@ distributed-rank helper they ride on)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from training_etl_demo_2_spark.operators import (
@@ -15,34 +16,64 @@ from training_etl_demo_2_spark.operators import (
 
 
 # ---------------------------------------------------------------------------
-# distrank.with_global_order
+# distrank.with_global_order / distrank.ntile
 # ---------------------------------------------------------------------------
 
 
 def test_global_order_rank_and_prefix_sum(spark):
-    rows = [(i, (i * 37) % 11 + 1) for i in range(50)]
-    df = spark.createDataFrame(rows, "id long, w long")
-    out, n, wtot = distrank.with_global_order(
-        df, [F.asc("w"), F.asc("id")], weight_col="w"
-    )
-    assert n == 50 and wtot == sum(w for _, w in rows)
-    got = sorted(
-        (r["grank"], r["id"], r["w"], r["cum_before"]) for r in out.collect()
-    )
+    rows = [(i, (i * 37) % 11 + 1, i % 4) for i in range(50)]
+    df = spark.createDataFrame(rows, "id long, w long, v long")
     expect = sorted(rows, key=lambda t: (t[1], t[0]))
-    acc = 0
-    for g, (eid, ew) in enumerate(expect):
-        assert got[g] == (g, eid, ew, acc)
-        acc += ew
-    out.unpersist()
+    for inclusive in (False, True):
+        out, n, totals = distrank.with_global_order(
+            df, [F.asc("w"), F.asc("id")], weights=["w", "v"],
+            inclusive=inclusive,
+        )
+        assert n == 50
+        assert totals == {"w": sum(r[1] for r in rows), "v": sum(r[2] for r in rows)}
+        got = sorted(
+            (r["grank"], r["id"], r["cum_w"], r["cum_v"]) for r in out.collect()
+        )
+        acc_w = acc_v = 0
+        for g, (eid, ew, ev) in enumerate(expect):
+            if inclusive:
+                acc_w, acc_v = acc_w + ew, acc_v + ev
+            assert got[g] == (g, eid, acc_w, acc_v)
+            if not inclusive:
+                acc_w, acc_v = acc_w + ew, acc_v + ev
 
 
 def test_global_order_empty_input(spark):
     df = spark.createDataFrame([], "id long, w long")
-    out, n, wtot = distrank.with_global_order(
-        df, [F.asc("w")], weight_col="w"
+    out, n, totals = distrank.with_global_order(
+        df, [F.asc("w")], weights=["w"]
     )
-    assert out is None and n == 0 and wtot == 0
+    assert n == 0 and totals == {"w": 0}
+    assert out.columns == ["id", "w", "pid", "grank", "cum_w"]
+    assert out.count() == 0
+
+
+@pytest.mark.parametrize("n,tiles", [(23, 4), (50, 7), (3, 5), (0, 4)])
+def test_ntile_matches_sql_ntile(spark, n, tiles):
+    """distrank.ntile on the exact rank == Spark SQL ntile(tiles), for
+    n % tiles != 0 (the first n % tiles tiles take one extra row) and
+    for n < tiles (one row per tile)."""
+    df = spark.range(n).select(((F.col("id") * 7) % 5).alias("v"), "id")
+    out, n_rows, _ = distrank.with_global_order(df, ["v", "id"])
+    got = {
+        r["id"]: r["t"]
+        for r in out.select(
+            "id", distrank.ntile(F.col("grank"), n_rows, tiles).alias("t")
+        ).collect()
+    }
+    df.createOrReplaceTempView("ntile_in")
+    want = {
+        r["id"]: r["t"]
+        for r in spark.sql(
+            f"SELECT id, ntile({tiles}) OVER (ORDER BY v, id) AS t FROM ntile_in"
+        ).collect()
+    }
+    assert n_rows == n and got == want
 
 
 # ---------------------------------------------------------------------------

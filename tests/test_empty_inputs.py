@@ -285,3 +285,62 @@ def test_round7_session6_ops_empty(spark, empty_docs, empty_emb):
     t = {"documents": empty_docs, "embeddings": empty_emb}
     assert similarity.quantization_error_curve(t).count() == 0
     assert similarity.lexical_semantic_agreement(t).count() == 1  # one-row zeros
+
+
+# Every consumer of the distributed rank (distrank.with_global_order),
+# run on 0-row copies of every fixture table and compared with its
+# DuckDB twin: an empty relation must flow through the rank exactly as
+# it flows through the twin's single-node window.
+RANK_CONSUMERS = [
+    "customer_value_deciles",
+    "perplexity_band_prune",
+    "zorder_files",
+    "layout_skipping_audit",
+    "forget_user_rewrite_plan",
+    "curriculum_phases",
+    "heaps_law_fit",
+    "spearman_lineitem",
+    "rfm_segments",
+    "token_budget_selection",
+    "quantile_normalize_lengths",
+    "stratified_kfold",
+    "snm_fuzzy_pairs",
+    "striped_shard_plan",
+    "quantile_bottomk_merge",
+    "vocab_coverage_curve",
+    "join_skew_audit",
+]
+
+
+@pytest.fixture(scope="module")
+def empty_sf_dir(tmp_path_factory, sf_dir):
+    """The fixture tables sliced to 0 rows: schemas and physical
+    encodings kept, so every reader path sees what it sees at sf0.001."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("empty_sf")
+    for name in os.listdir(sf_dir):
+        if name.endswith(".parquet"):
+            table = pq.read_table(os.path.join(sf_dir, name))
+            pq.write_table(table.slice(0, 0), str(out / name))
+    return str(out)
+
+
+@pytest.mark.parametrize("name", RANK_CONSUMERS)
+def test_rank_consumer_on_empty_tables_matches_twin(spark, empty_sf_dir, name):
+    import __spark_entry__ as entrymod
+
+    from tools import check_oracle
+
+    con = check_oracle.duck_connect(empty_sf_dir)
+    problems = check_oracle.compare_one(
+        spark,
+        con,
+        name,
+        entrymod.queries()[name],
+        entrymod.oracle_sql()[name],
+        empty_sf_dir,
+    )
+    assert problems == [], problems

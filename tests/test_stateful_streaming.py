@@ -474,57 +474,3 @@ def test_anomaly_stream_multichunk_group(spark, tmp_path):
     want = {r.event_id for r in batch.collect()}
     assert 45 in want and 65 in want
     assert got == want
-
-
-def test_running_totals_tws(spark, sf_dir):
-    """transformWithStateInPandas twin == applyInPandasWithState
-    results. Skipped where the transformWithState protobuf worker
-    protocol has no google.protobuf (this container)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from training_etl_demo_2_spark.streaming.fixture_queries import (
-        read_events_stream_fixture,
-    )
-    from training_etl_demo_2_spark.streaming.stateful import (
-        running_user_totals,
-        running_user_totals_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        def final_rows(make):
-            out = make(read_events_stream_fixture(spark, sf_dir))
-            name = f"tws_{make.__name__}"
-            q = (
-                out.writeStream.format("memory").queryName(name)
-                .outputMode("update").trigger(availableNow=True).start()
-            )
-            q.awaitTermination(180)
-            df = spark.table(name)
-            # update mode re-emits per batch: keep the LAST row per user
-            from pyspark.sql import Window, functions as F
-
-            w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-            return {
-                (r.user_id, r.n_events, r.sum_value)
-                for r in df.withColumn(
-                    "rn", F.row_number().over(w)
-                ).filter("rn = 1").drop("rn").collect()
-            }
-
-        assert final_rows(running_user_totals_tws) == final_rows(
-            running_user_totals
-        )
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -1430,8 +1430,7 @@ def rfm_segments(t: dict[str, DataFrame]) -> DataFrame:
 
     Scale shape: orders collapse to one row per ordering customer
     (groupBy custkey); each score is an exact distributed rank via
-    ``distrank.with_global_order`` (range repartition + per-partition
-    row_number + P-row metadata offsets — no unpartitioned window);
+    ``distrank.with_global_order`` (no unpartitioned window);
     the final cell aggregate is ≤Q³ rows. Customers with no orders
     are out of scope (no RFM without an order). Output: one row per
     populated (r,f,m) cell.
@@ -1474,12 +1473,6 @@ def rfm_segments(t: dict[str, DataFrame]) -> DataFrame:
         ("monetary_c", "m_q"),
     ):
         ranked, n, _ = with_global_order(cur, [metric, "custkey"])
-        if ranked is None:
-            return per.sparkSession.createDataFrame(
-                [],
-                "r_q int, f_q int, m_q int, n_customers long, "
-                "avg_monetary_r2 double",
-            )
         cur = ranked.withColumn(
             score,
             F.floor(F.col("grank") * RFM_Q / F.lit(n)).cast("int"),

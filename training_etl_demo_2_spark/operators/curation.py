@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..cache import tracked_cache, tracked_persist
+from . import distrank
 
 from ..functions import FNV_MOD, rolling_hash
 from .dedup import DEFAULT_NGRAM, near_dup_clusters, shingle_hashes
@@ -383,7 +384,7 @@ def corpus_shuffle(
     equal spans; global rank = (prefix-sum of bucket counts, a
     ``buckets``-row relation joined back by broadcast) + row_number
     within the bucket. Nothing depends on physical partitioning: an
-    earlier formulation used repartitionByRange + spark_partition_id,
+    earlier formulation ranked by range partition (the distrank shape),
     whose RangePartitioner SAMPLES boundaries — recomputing the plan
     resampled different boundaries than the collected counts, yielding
     non-permutation, nondeterministic ranks at corpus sizes where the
@@ -973,41 +974,18 @@ def curriculum_phases(
     are engine-identical. The cut is an EXACT DISTRIBUTED ntile:
     ``ntile(p) OVER (ORDER BY ...)`` would force the whole corpus
     through one unpartitioned-window task, so the global rank comes
-    from ``distrank.with_global_order`` (range repartition on the
-    order key → per-partition row_number offset by P integers of
-    partition metadata — the ``customer_value_deciles`` /
-    ``perplexity_band_prune`` pattern) and the phase is ntile's
-    uneven-division rule as integer arithmetic on that rank: the
-    first ``n % p`` tiles take ``n//p + 1`` rows, the rest ``n//p``
-    — bit-identical to the SQL oracle's ``ntile(p)``.
+    from ``distrank.with_global_order`` and the phase is ntile's
+    uneven-division rule as integer arithmetic on that rank
+    (``distrank.ntile``) — bit-identical to the SQL oracle's
+    ``ntile(p)``.
     """
     from .text import unigram_logprob
-    from . import distrank
 
     scored = unigram_logprob(df).select("doc_id", "avg_logprob")
     ranked, n, _ = distrank.with_global_order(
         scored, [F.desc("avg_logprob"), F.asc("doc_id")]
     )
-    if ranked is None:
-        return scored.select(
-            "doc_id", "avg_logprob", F.lit(0).cast("int").alias("phase")
-        )
-    base, rem = divmod(n, phases)
-    cut = rem * (base + 1)
-    r = F.col("grank")
-
-    def _idiv(col, m: int):
-        # exact integer division on long columns (no double quotient)
-        return ((col - col % m) / m).cast("long")
-
-    if base == 0:
-        ph = r + 1  # n < phases: first n tiles of size 1
-    else:
-        ph = (
-            F.when(r < cut, _idiv(r, base + 1))
-            .otherwise(rem + _idiv(r - cut, base))
-            + 1
-        )
+    ph = distrank.ntile(F.col("grank"), n, phases)
     return ranked.select(
         "doc_id", "avg_logprob", ph.cast("int").alias("phase")
     )
@@ -1320,7 +1298,6 @@ def token_budget_selection(t: dict[str, DataFrame]) -> DataFrame:
     plan literal — no one-row crossJoin, no unpartitioned window.
     Output: the selected docs with rank and running total.
     """
-    from . import distrank
     from .text import text_quality
 
     tq = text_quality(t["documents"]).select(
@@ -1330,26 +1307,18 @@ def token_budget_selection(t: dict[str, DataFrame]) -> DataFrame:
         .cast("long")
         .alias("q_micro"),
     )
-    ranked, _n, total_tokens = distrank.with_global_order(
-        tq,
-        [F.desc("q_micro"), F.asc("doc_id")],
-        weight_col="n_tokens",
+    ranked, _n, totals = distrank.with_global_order(
+        tq, [F.desc("q_micro"), F.asc("doc_id")], weights=["n_tokens"]
     )
-    if ranked is None:
-        return t["documents"].sparkSession.createDataFrame(
-            [],
-            "doc_id long, sel_rank long, q_micro long, n_tokens long, "
-            "cum_tokens long",
-        )
-    budget = total_tokens // TOKEN_BUDGET_DEN
+    budget = totals["n_tokens"] // TOKEN_BUDGET_DEN
     return (
-        ranked.filter(F.col("cum_before") < F.lit(budget))
+        ranked.filter(F.col("cum_n_tokens") < F.lit(budget))
         .select(
             "doc_id",
             (F.col("grank") + 1).alias("sel_rank"),
             "q_micro",
             "n_tokens",
-            (F.col("cum_before") + F.col("n_tokens")).alias("cum_tokens"),
+            (F.col("cum_n_tokens") + F.col("n_tokens")).alias("cum_tokens"),
         )
     )
 
@@ -1409,10 +1378,6 @@ def quantile_normalize_lengths(t: dict[str, DataFrame]) -> DataFrame:
     no single-task global sort); the map is one equi-join on the
     pooled index. Output: one row per doc.
     """
-    from pyspark.sql.window import Window
-
-    from . import distrank
-
     base = t["documents"].select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("x")
     )
@@ -1426,18 +1391,14 @@ def quantile_normalize_lengths(t: dict[str, DataFrame]) -> DataFrame:
         F.count(F.lit(1)).over(w_cnt).cast("long").alias("n_s"),
     )
     pooled, n_total, _ = distrank.with_global_order(
-        base.select(F.col("x").alias("px"), F.col("doc_id").alias("pid")),
-        [F.asc("px"), F.asc("pid")],
+        base.select(F.col("x").alias("px"), "doc_id"),
+        [F.asc("px"), F.asc("doc_id")],
     )
-    if pooled is None:
-        return base.sparkSession.createDataFrame(
-            [], "doc_id long, source string, x long, x_norm long"
-        )
     idx_map = pooled.select(
         (F.col("grank") + 1).alias("pool_idx"), F.col("px").alias("x_norm")
     )
     tgt = F.col("r") * n_total + F.col("n_s") - 1
-    out = (
+    return (
         ranked.withColumn(
             "pool_idx",
             ((tgt - tgt % F.col("n_s")) / F.col("n_s")).cast("long"),
@@ -1445,8 +1406,6 @@ def quantile_normalize_lengths(t: dict[str, DataFrame]) -> DataFrame:
         .join(idx_map, "pool_idx")
         .select("doc_id", "source", "x", "x_norm")
     )
-    pooled.unpersist()
-    return out
 
 
 def quantile_normalize_lengths_sql() -> str:
@@ -1586,7 +1545,6 @@ def stratified_kfold(t: dict[str, DataFrame], k: int = KFOLD_K) -> DataFrame:
     ranks derive from a |langs|-row offset broadcast. Output: the
     (fold, lang) grid with counts.
     """
-    from . import distrank
     from ..functions import rolling_hash
 
     d = t["documents"].select(
@@ -1597,10 +1555,6 @@ def stratified_kfold(t: dict[str, DataFrame], k: int = KFOLD_K) -> DataFrame:
         ).alias("h"),
     )
     ranked, _n, _ = distrank.with_global_order(d, ["lang", "h", "doc_id"])
-    if ranked is None:
-        return d.sparkSession.createDataFrame(
-            [], "fold int, lang string, n_docs long"
-        )
     offs = (
         ranked.groupBy("lang")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -4217,42 +4171,21 @@ def perplexity_band_prune(df: DataFrame) -> DataFrame:
 
     Quartile cuts are RANK-based (rounded-6 score, doc_id tiebreak;
     drop ranks < n//4 and >= n - n//4) — integer rules, no float
-    percentile estimate, engine-identical. The rank itself uses the
-    range-partitioned exact-rank pattern (range repartition on
-    (score, doc_id) -> per-partition counts -> offset + parallel
-    row_number), the same scale shape as ``customer_value_deciles`` —
-    no single-task global window.
+    percentile estimate, engine-identical. The rank itself is the
+    exact distributed rank (``distrank.with_global_order`` on
+    (score, doc_id)) — no single-task global window.
 
     Output: one row per source — (source, n_docs, n_kept, kept_bp,
     tokens_total, tokens_kept).
     """
     from .text import unigram_logprob
 
-    spark = df.sparkSession
     scored = unigram_logprob(df).select("doc_id", "n_tokens", "avg_logprob")
-    nparts = max(1, spark.sparkContext.defaultParallelism)
-    ranged = scored.repartitionByRange(
-        nparts, F.asc("avg_logprob"), F.asc("doc_id")
-    ).withColumn("pid", F.spark_partition_id())
-    ranged.transform(tracked_cache)
-    counts = dict(
-        (int(r["pid"]), int(r["count"]))
-        for r in ranged.groupBy("pid").count().collect()
+    ranked, n, _ = distrank.with_global_order(
+        scored, [F.asc("avg_logprob"), F.asc("doc_id")]
     )
-    n = sum(counts.values())
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    lo = n // 4
-    offset_map = F.create_map(
-        *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-    )
-    w = Window.partitionBy("pid").orderBy(
-        F.asc("avg_logprob"), F.asc("doc_id")
-    )
-    r = (offset_map[F.col("pid")] + F.row_number().over(w) - 1).cast("long")
-    flagged = ranged.select(
+    lo, r = n // 4, F.col("grank")
+    flagged = ranked.select(
         "doc_id",
         "n_tokens",
         ((r >= lo) & (r < n - lo)).cast("long").alias("kept"),

@@ -2741,11 +2741,10 @@ def snm_fuzzy_pairs(
     Scale shape: runs on the distinct value domain (vocabulary-sized —
     the same ER reduction as fuzzy_name_pairs, collapsing 100 TB of
     rows first). The global sort rank comes from
-    ``distrank.with_global_order`` (range repartition + per-partition
-    row_number offset by partition-count metadata), NOT a
-    single-task ``row_number() OVER (ORDER BY name)`` window — the
-    rank is exact and global, so the neighbor join needs no separate
-    boundary-pair pass: a pair straddling two range partitions still
+    ``distrank.with_global_order``, NOT a single-task
+    ``row_number() OVER (ORDER BY name)`` window — the rank is exact
+    and global, so the neighbor join needs no separate boundary-pair
+    pass: a pair straddling two range partitions still
     meets through the rank equi-join. The join itself is an equi-join
     on rank distance ∈ [1, window-1] (each side explodes the bounded
     window, never |names|²).
@@ -2757,10 +2756,6 @@ def snm_fuzzy_pairs(
 
     names = t[table].select(F.col(col).alias("name")).distinct()
     granked, n_names, _ = with_global_order(names, ["name"])
-    if granked is None:
-        return names.sparkSession.createDataFrame(
-            [], "name_a string, name_b string, rank_gap long, dist long"
-        )
     ranked = granked.select(
         "name", (F.col("grank") + 1).alias("rn")
     )

@@ -1,142 +1,100 @@
-"""Exact distributed global rank / prefix sum — the shared scan-parallel
-pattern behind `customer_value_deciles` and `zorder_files`, factored out
-for operators that need a global ordering WITHOUT one giant
+"""Exact distributed global rank and prefix sums — the one definition of
+how an operator ranks rows under a global order WITHOUT one giant
 unpartitioned-window task.
 
 Shape: range-repartition on the order columns (the one shuffle any
-global sort pays), then per-partition `row_number` / running sum inside
-whole-stage codegen, offset by per-partition COUNT/SUM aggregates
+global sort pays), then per-partition ``row_number`` / running sums
+inside whole-stage codegen, offset by per-partition COUNT/SUM aggregates
 (P rows of partition METADATA collected to the driver — never data
 rows). At 1000 executors the collect is ~thousands of integers.
+
+Contract of :func:`with_global_order`: it returns
+``(ranked, n_rows, totals)`` and never ``None``. ``ranked`` is the
+input plus ``pid`` (its range partition), ``grank`` (exact 0-based
+global rank, long) and one ``cum_<w>`` prefix sum per weight column;
+``n_rows`` and ``totals[w]`` are Python ints from the same metadata, so
+callers get "top N" / "X% of the total" bounds as plan literals. On an
+empty input ``ranked`` is an empty relation with the same columns,
+``n_rows == 0`` and every total 0, so downstream aggregates see exactly
+what a single-window SQL twin sees.
+
+The range-exchanged relation is persisted (:func:`cache.tracked_cache`):
+the metadata collect and the rank pass must read the same partitions,
+and RangePartitioner samples its bounds anew on every execution.
+``cache_scope`` or the harness's ``clearCache`` releases it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..cache import tracked_cache
+
+
+def idiv(col: Column, m: int) -> Column:
+    """``col DIV m`` in exact long arithmetic (no double quotient)."""
+    return F.call_function("div", col, F.lit(m))
+
+
+def ntile(rank: Column, n: int, tiles: int) -> Column:
+    """SQL ``ntile(tiles)`` of the row at 0-based ``rank`` among ``n``
+    rows: the first ``n % tiles`` tiles take ``n // tiles + 1`` rows,
+    the rest ``n // tiles``; with ``n < tiles`` row r is tile r + 1."""
+    base, rem = divmod(n, tiles)
+    if base == 0:
+        return rank + 1
+    cut = rem * (base + 1)
+    return (
+        F.when(rank < cut, idiv(rank, base + 1))
+        .otherwise(rem + idiv(rank - cut, base))
+        + 1
+    )
+
+
+def _per_pid(values: dict[int, int]) -> Column:
+    """``values[pid]`` as a long column; the map literal is typed so it
+    still resolves with zero entries (an empty input)."""
+    m = F.create_map(*[F.lit(x) for p in sorted(values) for x in (p, values[p])])
+    return m.cast("map<int,bigint>")[F.col("pid")]
 
 
 def with_global_order(
     df: DataFrame,
     order_cols: list,
-    weight_col: str | None = None,
-    rank_col: str = "grank",
-    cum_col: str = "cum_before",
+    weights: list[str] | tuple[str, ...] = (),
+    inclusive: bool = False,
 ):
-    """Return ``(out_df, n_rows, weight_total)``: ``df`` with an exact
-    0-based global rank column (``rank_col``) under ``order_cols``,
-    and — when ``weight_col`` is given — an EXCLUSIVE global prefix
-    sum of that weight (``cum_col``).  ``n_rows`` / ``weight_total``
-    come free from the same per-partition metadata the offsets need,
-    so callers that want "top N of the global order" or "X% of the
-    global total" get the bound as a plan literal without another
-    pass or a one-row crossJoin.  The result is persisted (two passes
-    share the range-exchange); caller unpersists when done.  Returns
-    ``(None, 0, 0)`` for an empty input.
-    """
-    spark = df.sparkSession
-    nparts = max(1, spark.sparkContext.defaultParallelism)
+    """Rank ``df`` under ``order_cols`` and prefix-sum each column in
+    ``weights`` (``cum_<w>``: EXCLUSIVE of the row itself, or INCLUSIVE
+    with ``inclusive=True``). Returns ``(ranked, n_rows, totals)`` —
+    see the module docstring for the contract."""
+    nparts = max(1, df.sparkSession.sparkContext.defaultParallelism)
     ranged = df.repartitionByRange(nparts, *order_cols).withColumn(
         "pid", F.spark_partition_id()
     )
     ranged.transform(tracked_cache)
-    aggs = [F.count(F.lit(1)).alias("cnt")]
-    if weight_col is not None:
-        aggs.append(F.sum(weight_col).cast("long").alias("wsum"))
-    stats = {
-        int(r["pid"]): r for r in ranged.groupBy("pid").agg(*aggs).collect()
-    }
-    if not stats:
-        ranged.unpersist()
-        return None, 0, 0
-    cnt_off, wt_off = {}, {}
-    acc_c, acc_w = 0, 0
-    for pid in sorted(stats):
-        cnt_off[pid] = acc_c
-        acc_c += int(stats[pid]["cnt"])
-        if weight_col is not None:
-            wt_off[pid] = acc_w
-            acc_w += int(stats[pid]["wsum"])
-    cmap = F.create_map(
-        *[F.lit(x) for pid in sorted(cnt_off) for x in (pid, cnt_off[pid])]
+    # A partition's rank offset is the row count of the partitions
+    # before it, as a weight's offset is their weight sum.
+    stats = ranged.groupBy("pid").agg(
+        F.count(F.lit(1)).alias("grank"),
+        *[F.sum(c).cast("long").alias(c) for c in weights],
     )
+    offsets = {c: {} for c in ["grank", *weights]}
+    totals = dict.fromkeys(offsets, 0)
+    for r in sorted(stats.collect(), key=lambda r: r["pid"]):
+        for c in totals:
+            offsets[c][r["pid"]] = totals[c]
+            totals[c] += r[c] or 0
     w = Window.partitionBy("pid").orderBy(*order_cols)
+    frame = w.rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
     out = ranged.withColumn(
-        rank_col,
-        (cmap[F.col("pid")] + F.row_number().over(w) - 1).cast("long"),
+        "grank",
+        (_per_pid(offsets["grank"]) + F.row_number().over(w) - 1).cast("long"),
     )
-    if weight_col is not None:
-        wmap = F.create_map(
-            *[F.lit(x) for pid in sorted(wt_off) for x in (pid, wt_off[pid])]
-        )
-        wprev = (
-            Window.partitionBy("pid")
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
+    for c in weights:
+        running = F.coalesce(F.sum(c).over(frame).cast("long"), F.lit(0))
         out = out.withColumn(
-            cum_col,
-            (
-                wmap[F.col("pid")]
-                + F.coalesce(
-                    F.sum(weight_col).over(wprev).cast("long"), F.lit(0)
-                )
-            ).cast("long"),
+            f"cum_{c}", (_per_pid(offsets[c]) + running).cast("long")
         )
-    return out, acc_c, acc_w
-
-
-def with_global_prefix_sums(
-    df: DataFrame,
-    order_cols: list,
-    weight_cols: list[str],
-    inclusive: bool = True,
-):
-    """Exact INCLUSIVE (or exclusive) global prefix sums of several
-    weight columns under one global ordering, without an
-    unpartitioned window: same range-repartition + per-partition
-    running sums + per-partition metadata offsets as
-    ``with_global_order``, generalized to N weights in one pass.
-    Returns ``(out_df, totals)`` where ``totals[w]`` is the grand
-    total of each weight (free from the offset metadata). The result
-    is persisted; caller unpersists. ``(None, {})`` on empty input.
-    """
-    spark = df.sparkSession
-    nparts = max(1, spark.sparkContext.defaultParallelism)
-    ranged = df.repartitionByRange(nparts, *order_cols).withColumn(
-        "pid", F.spark_partition_id()
-    )
-    ranged.transform(tracked_cache)
-    aggs = [F.sum(w).cast("long").alias(f"s_{w}") for w in weight_cols]
-    stats = {
-        int(r["pid"]): r for r in ranged.groupBy("pid").agg(*aggs).collect()
-    }
-    if not stats:
-        ranged.unpersist()
-        return None, {}
-    offs: dict[str, dict[int, int]] = {w: {} for w in weight_cols}
-    acc = {w: 0 for w in weight_cols}
-    for pid in sorted(stats):
-        for w in weight_cols:
-            offs[w][pid] = acc[w]
-            acc[w] += int(stats[pid][f"s_{w}"] or 0)
-    out = ranged
-    frame_end = 0 if inclusive else -1
-    for w in weight_cols:
-        wmap = F.create_map(
-            *[F.lit(x) for pid in sorted(offs[w]) for x in (pid, offs[w][pid])]
-        )
-        win = (
-            Window.partitionBy("pid")
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, frame_end)
-        )
-        out = out.withColumn(
-            f"cum_{w}",
-            (
-                wmap[F.col("pid")]
-                + F.coalesce(F.sum(w).over(win).cast("long"), F.lit(0))
-            ).cast("long"),
-        )
-    return out, acc
+    n_rows = totals.pop("grank")
+    return out, n_rows, totals

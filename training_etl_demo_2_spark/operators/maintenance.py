@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..cache import tracked_cache
+from . import distrank
 
 # Compaction: micro-batch files are ~KBs; plan merge groups of ~64 KiB
 # at fixture scale (the production knob is 128 MiB-1 GiB — the planner
@@ -148,60 +149,31 @@ def zorder_files(
     boxes tight in every interleaved dimension at once, where a plain
     sort is tight only in its leading key.
 
-    The global file assignment uses the exact distributed-rank pattern
-    (relational_ext.customer_value_deciles): range-repartition on
-    (z, tiebreak) — the one shuffle a global sort needs anyway — then
-    per-partition COUNTS (partition metadata, not rows) prefix-summed
-    into rank offsets, so ranking runs parallel per partition inside
-    whole-stage codegen instead of through one giant window task.
+    The global file assignment is the exact distributed rank
+    (``distrank.with_global_order``) on (z, tiebreak) — the range
+    shuffle a global sort needs anyway, ranked in parallel per
+    partition instead of through one giant window task — cut into
+    files by exact integer division.
     At 100 TB this is exactly Delta's OPTIMIZE ZORDER BY shape:
     range-partition by curve value, write fixed-size files per range.
     """
     li = t["lineitem"].select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
-    spark = li.sparkSession
-    z = _interleave_bits(F.col("l_partkey"), F.col("l_suppkey"))
-    zt = li.withColumn("z", z)
-    nparts = max(1, spark.sparkContext.defaultParallelism)
-    ranged = zt.repartitionByRange(
-        nparts, F.asc("z"), F.asc("l_orderkey"), F.asc("l_linenumber")
-    ).withColumn("pid", F.spark_partition_id())
-    ranged.transform(tracked_cache)
-    counts = dict(
-        (int(r["pid"]), int(r["count"]))
-        for r in ranged.groupBy("pid").count().collect()
+    zt = li.withColumn("z", _interleave_bits(F.col("l_partkey"), F.col("l_suppkey")))
+    ranked, _n, _ = distrank.with_global_order(
+        zt, [F.asc("z"), F.asc("l_orderkey"), F.asc("l_linenumber")]
     )
-    if not counts:
-        ranged.unpersist()
-        return spark.createDataFrame(
-            [],
-            "file_id long, n_rows long, min_part long, max_part long, "
-            "min_supp long, max_supp long",
-        )
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_map = F.create_map(
-        *[F.lit(v) for pid in sorted(offsets) for v in (pid, offsets[pid])]
+    filed = ranked.withColumn(
+        "file_id", distrank.idiv(F.col("grank"), rows_per_file)
     )
-    w = Window.partitionBy("pid").orderBy(
-        F.asc("z"), F.asc("l_orderkey"), F.asc("l_linenumber")
-    )
-    rn = (offset_map[F.col("pid")] + F.row_number().over(w) - 1).cast("long")
-    filed = ranged.withColumn(
-        "file_id",
-        ((rn - rn % rows_per_file) / rows_per_file).cast("long"),
-    )
-    out = filed.groupBy("file_id").agg(
+    return filed.groupBy("file_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.min("l_partkey").alias("min_part"),
         F.max("l_partkey").alias("max_part"),
         F.min("l_suppkey").alias("min_supp"),
         F.max("l_suppkey").alias("max_supp"),
     )
-    return out
 
 
 def zorder_files_sql(
@@ -266,22 +238,15 @@ def striped_shard_plan(
     (range repartition + per-partition row_number + metadata offsets
     — no single-task sort); everything after is a |S|-row aggregate.
     """
-    from . import distrank
-
     sized = docs.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
     )
-    ranked, n_docs, tok_total = distrank.with_global_order(
-        sized,
-        [F.desc("n_tokens"), F.asc("doc_id")],
-        weight_col="n_tokens",
+    ranked, _n, totals = distrank.with_global_order(
+        sized, [F.desc("n_tokens"), F.asc("doc_id")], weights=["n_tokens"]
     )
-    if ranked is None:
-        return docs.sparkSession.createDataFrame(
-            [], "shard long, n_docs long, tokens_sum long, share_bp long"
-        )
-    out = (
+    tok_total = totals["n_tokens"]
+    return (
         ranked.withColumn("shard", (F.col("grank") % n_shards).cast("long"))
         .groupBy("shard")
         .agg(
@@ -303,8 +268,6 @@ def striped_shard_plan(
             .alias("share_bp"),
         )
     )
-    ranked.unpersist()
-    return out
 
 
 def striped_shard_plan_sql(n_shards: int = SHARD_N) -> str:
@@ -640,8 +603,8 @@ def layout_skipping_audit(
     decision is made on: natural skips nothing, single-key sort skips
     only its own key, z-order skips usefully on both.
 
-    Exactness: file cuts use the exact distributed-rank pattern
-    (zorder_files); predicate bounds derive from the integer key domain
+    Exactness: file cuts use the exact distributed rank
+    (``distrank.with_global_order``, as in zorder_files); predicate bounds derive from the integer key domain
     (width = (max+1) DIV (2·n_preds)); a file is hit iff its [min,max]
     box overlaps the range — all integer comparisons; the skipped
     fraction is an exact basis-point integer.
@@ -654,10 +617,7 @@ def layout_skipping_audit(
     li = t["lineitem"].select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"
     )
-    spark = li.sparkSession
-    z = _interleave_bits(F.col("l_partkey"), F.col("l_suppkey"))
-    zt = li.withColumn("z", z)
-    nparts = max(1, spark.sparkContext.defaultParallelism)
+    zt = li.withColumn("z", _interleave_bits(F.col("l_partkey"), F.col("l_suppkey")))
     layouts = {
         "natural": [F.asc("l_orderkey"), F.asc("l_linenumber")],
         "sorted_partkey": [
@@ -683,31 +643,9 @@ def layout_skipping_audit(
     )
 
     def _file_stats(order_cols) -> DataFrame:
-        ranged = zt.repartitionByRange(nparts, *order_cols).withColumn(
-            "pid", F.spark_partition_id()
-        )
-        ranged.transform(tracked_cache)
-        counts = dict(
-            (int(r["pid"]), int(r["count"]))
-            for r in ranged.groupBy("pid").count().collect()
-        )
-        offsets, acc = {}, 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        offset_map = F.create_map(
-            *[
-                F.lit(v)
-                for pid in sorted(offsets)
-                for v in (pid, offsets[pid])
-            ]
-        )
-        w = Window.partitionBy("pid").orderBy(*order_cols)
-        rn = (offset_map[F.col("pid")] + F.row_number().over(w) - 1).cast(
-            "long"
-        )
-        filed = ranged.withColumn(
-            "file_id", ((rn - rn % rows_per_file) / rows_per_file).cast("long")
+        ranked, _n, _ = distrank.with_global_order(zt, order_cols)
+        filed = ranked.withColumn(
+            "file_id", distrank.idiv(F.col("grank"), rows_per_file)
         )
         # NOT persisted (r11 negative result): both predicate-dimension
         # arms consume this relation, but a persist barrier measured
@@ -860,8 +798,8 @@ def forget_user_rewrite_plan(
     numbers is the case for clustering on the erasure key BEFORE the
     first deletion request arrives, not after.
 
-    Exactness: file cuts use the distributed-rank pattern
-    (zorder_files); every count and the amplification basis points are
+    Exactness: file cuts use the exact distributed rank
+    (``distrank.with_global_order``, as in zorder_files); every count and the amplification basis points are
     exact integers.
 
     Scale shape: one range-repartition + per-partition rank per layout,
@@ -877,39 +815,15 @@ def forget_user_rewrite_plan(
         ),
         (F.col("user_id") % FORGET_BUCKETS).alias("bucket"),
     )
-    spark = ev.sparkSession
-    nparts = max(1, spark.sparkContext.defaultParallelism)
     layouts = {
         "natural": [F.asc("event_id")],
         "user_clustered": [F.asc("bucket"), F.asc("event_id")],
     }
     outs = []
     for name, order_cols in layouts.items():
-        ranged = ev.repartitionByRange(nparts, *order_cols).withColumn(
-            "pid", F.spark_partition_id()
-        )
-        ranged.transform(tracked_cache)
-        counts = dict(
-            (int(r["pid"]), int(r["count"]))
-            for r in ranged.groupBy("pid").count().collect()
-        )
-        offsets, acc = {}, 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        offset_map = F.create_map(
-            *[
-                F.lit(v)
-                for pid in sorted(offsets)
-                for v in (pid, offsets[pid])
-            ]
-        )
-        w = Window.partitionBy("pid").orderBy(*order_cols)
-        rn = (offset_map[F.col("pid")] + F.row_number().over(w) - 1).cast(
-            "long"
-        )
-        filed = ranged.withColumn(
-            "file_id", ((rn - rn % rows_per_file) / rows_per_file).cast("long")
+        ranked, _n, _ = distrank.with_global_order(ev, order_cols)
+        filed = ranked.withColumn(
+            "file_id", distrank.idiv(F.col("grank"), rows_per_file)
         )
         per_file = filed.groupBy("file_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..cache import tracked_cache, tracked_persist
+from . import distrank
 
 
 def q4_order_priority(t: dict[str, DataFrame]) -> DataFrame:
@@ -579,65 +580,19 @@ def customer_value_deciles(t: dict[str, DataFrame]) -> DataFrame:
     exact semantics (equal-depth buckets, ties split by rank order, so
     it matches the ntile SQL oracle bit-for-bit — which value-binning
     on approx_percentile cut points cannot) while staying parallel:
-
-    1. range-repartition on (c_acctbal, c_custkey) — the same one
-       shuffle the window would need, but into P tasks;
-    2. collect per-partition COUNTS (P integers of partition metadata,
-       not rows) and prefix-sum them into rank offsets on the driver;
-    3. global rank = offset[pid] + row_number() OVER (PARTITION BY pid)
-       — a pid-partitioned window, so the rank stage is parallel AND
-       stays inside whole-stage codegen (no Python, no Arrow transfer);
-       decile = ntile's uneven-division rule as integer arithmetic.
+    the global rank on (c_acctbal, c_custkey) comes from
+    ``distrank.with_global_order`` and the decile is ``distrank.ntile``
+    on that rank.
 
     The per-decile agg afterwards is an ordinary 10-group groupBy.
     """
     c = t["customer"].select("c_acctbal", "c_custkey")
-    spark = c.sparkSession
-    out_cols_schema = (
-        "decile int, n_customers long, min_bal double, "
-        "max_bal double, avg_bal double"
+    ranked, n, _ = distrank.with_global_order(
+        c, [F.asc("c_acctbal"), F.asc("c_custkey")]
     )
-    nparts = max(1, spark.sparkContext.defaultParallelism)
-    ranged = c.repartitionByRange(
-        nparts, F.asc("c_acctbal"), F.asc("c_custkey")
-    ).withColumn("pid", F.spark_partition_id())
-    # One shuffle, two passes (counts, then rank+agg) — persist so the
-    # second pass reuses the exchanged partitions instead of re-shuffling.
-    ranged.transform(tracked_cache)
-    counts = dict(
-        (int(r["pid"]), int(r["count"]))
-        for r in ranged.groupBy("pid").count().collect()
-    )
-    n = sum(counts.values())
-    if n == 0:
-        ranged.unpersist()
-        return spark.createDataFrame([], out_cols_schema)
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    base, rem = divmod(n, 10)
-    cut = rem * (base + 1)
-
-    offset_map = F.create_map(
-        *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
-    )
-    w = Window.partitionBy("pid").orderBy(F.asc("c_acctbal"), F.asc("c_custkey"))
-    r = (offset_map[F.col("pid")] + F.row_number().over(w) - 1).cast("long")
-    def _idiv(col, m: int):
-        # exact integer division on long columns (no double quotient)
-        return ((col - col % m) / m).cast("long")
-
-    if base == 0:
-        dec = r + 1  # n < 10: first n buckets of size 1
-    else:
-        dec = (
-            F.when(r < cut, _idiv(r, base + 1))
-            .otherwise(rem + _idiv(r - cut, base))
-            + 1
-        )
-    tiled = ranged.select(
-        dec.cast("int").alias("decile"), F.col("c_acctbal")
+    tiled = ranked.select(
+        distrank.ntile(F.col("grank"), n, 10).cast("int").alias("decile"),
+        F.col("c_acctbal"),
     )
     return (
         tiled.groupBy("decile")

@@ -1425,15 +1425,7 @@ def quantile_bottomk_merge(t: dict[str, DataFrame]) -> DataFrame:
     )
     est = targets.join(sample.select("vr", F.col("c").alias("est_c")), "vr")
 
-    ranked, n, _ = with_global_order(
-        base.select("c", "rid"), ["c", "rid"]
-    )
-    if ranked is None:
-        return ev.sparkSession.createDataFrame(
-            [],
-            "q_bp long, sketch_rows long, est_c long, exact_c long, "
-            "abs_err_c long, mismatched_rows long",
-        )
+    ranked, n, _ = with_global_order(base.select("c", "rid"), ["c", "rid"])
     exact_targets = {
         q: max(1, (q * n + 9999) // 10000) for q in QSK_Q_BP
     }

@@ -320,8 +320,7 @@ def vocab_coverage_curve(
     relation, a broadcast join against the tiny k-list, and a k-keyed
     aggregate; the corpus total rides in as a broadcast 1-row
     aggregate. The vocabulary rank is the exact DISTRIBUTED rank
-    (``distrank.with_global_order``: range repartition + per-partition
-    row_number + partition-count metadata offsets) — a global
+    (``distrank.with_global_order``) — a global
     ``row_number() OVER (ORDER BY cnt DESC)`` window would funnel the
     whole vocabulary relation through one task.
 
@@ -337,10 +336,6 @@ def vocab_coverage_curve(
     )
     tot = tf.agg(F.sum("cnt").cast("long").alias("total"))
     granked, _n, _ = with_global_order(tf, [F.desc("cnt"), F.asc("term")])
-    if granked is None:
-        return df.sparkSession.createDataFrame(
-            [], "k long, n_terms long, covered_tokens long, coverage_bp long"
-        )
     # rk stays long: an int cast would silently overflow past ~2.1e9
     # distinct terms, corrupting the k-threshold join below fixture
     # scale claims but above what a 100 TB corpus vocabulary can hit.
@@ -2066,15 +2061,14 @@ def heaps_law_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
     buys few new types.
 
     Every doc contributes one curve point. Exactness: both cumulative
-    sums are exact integers from the distributed prefix-sum helper
-    (``distrank.with_global_prefix_sums`` — range repartition +
-    per-partition running sums + metadata offsets; NO unpartitioned
-    window); each point's (ln N_i, ln V_i) is nano-rounded to
-    integers, the OLS moments are exact decimal(38,0) integer sums
-    (order-invariant), and the slope/intercept/r² enter doubles once
-    through one shared expression sequence. Output: one row.
+    sums are exact integers from the distributed prefix sums of
+    ``distrank.with_global_order`` (NO unpartitioned window); each
+    point's (ln N_i, ln V_i) is nano-rounded to integers, the OLS
+    moments are exact decimal(38,0) integer sums (order-invariant),
+    and the slope/intercept/r² enter doubles once through one shared
+    expression sequence. Output: one row.
     """
-    from .distrank import with_global_prefix_sums
+    from .distrank import with_global_order
 
     toks = F.filter(_tokens(text_col), lambda t: t != "")
     per_doc = df.select("doc_id", F.size(toks).alias("n_tok"))
@@ -2089,13 +2083,9 @@ def heaps_law_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
         per_doc.join(firsts, "doc_id", "left")
         .withColumn("n_new", F.coalesce(F.col("n_new"), F.lit(0)))
     )
-    cum, _tot = with_global_prefix_sums(
-        base, [F.col("doc_id")], ["n_tok", "n_new"]
+    cum, _n, _tot = with_global_order(
+        base, [F.col("doc_id")], weights=["n_tok", "n_new"], inclusive=True
     )
-    if cum is None:
-        return df.sparkSession.createDataFrame(
-            [], "n_points long, beta_r6 double, k_r2 double, r2_r6 double"
-        )
     pts = cum.filter(
         (F.col("cum_n_tok") > 0) & (F.col("cum_n_new") > 0)
     ).select(
@@ -2115,7 +2105,6 @@ def heaps_law_fit(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.sum((F.col("x").cast(dec) * F.col("x"))).cast("double").alias("sxx"),
         F.sum((F.col("y").cast(dec) * F.col("y"))).cast("double").alias("syy"),
     )
-    cum.unpersist()
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     sp = n * sxy - sx * sy

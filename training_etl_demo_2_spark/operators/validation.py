@@ -1154,20 +1154,14 @@ def join_skew_audit(t: dict[str, DataFrame]) -> DataFrame:
 
     Scale shape: one groupBy per audited key collapses data rows to
     the key inventory; the inventory's global sort uses the
-    distributed-rank pattern (``distrank.with_global_order`` —
-    range-repartition + per-partition row_number + metadata offsets),
-    so no unpartitioned window ever sees the inventory. n_keys is a
-    plan literal from the same partition metadata, making the top-10
+    distributed rank (``distrank.with_global_order``), so no
+    unpartitioned window ever sees the inventory. n_keys is a plan
+    literal from the same partition metadata, making the top-10
     cut a filter, not a second window. Output: one row per audited
     key.
     """
     from . import distrank
 
-    spark = next(iter(t.values())).sparkSession
-    out_schema = (
-        "key_name string, n_rows long, n_keys long, max_cnt long, "
-        "max_share_bp long, top10_share_bp long, gini_bp long"
-    )
     results = []
     for label, tbl, key in SKEW_AUDIT_KEYS:
         counts = (
@@ -1178,8 +1172,6 @@ def join_skew_audit(t: dict[str, DataFrame]) -> DataFrame:
         ranked, n_keys, _ = distrank.with_global_order(
             counts, [F.asc("cnt"), F.asc("k")]
         )
-        if ranked is None:
-            continue
         top_cut = n_keys - SKEW_TOPN
         agg = ranked.agg(
             F.sum("cnt").cast("long").alias("n_rows"),
@@ -1215,9 +1207,6 @@ def join_skew_audit(t: dict[str, DataFrame]) -> DataFrame:
             .alias("gini_bp"),
         )
         results.append(row)
-        ranked.unpersist()
-    if not results:
-        return spark.createDataFrame([], out_schema)
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
@@ -2649,7 +2638,7 @@ def spearman_lineitem(t: dict[str, DataFrame]) -> DataFrame:
     move a rank correlation. Uses textbook MIDRANKS for ties.
 
     Exactness: a row's midrank needs only its value's tie-group count
-    and the count of smaller values, so 2·midrank = 2·cum_before +
+    and the count of smaller values, so 2·midrank = 2·cum_cnt +
     cnt + 1 is an exact integer from the per-VALUE inventory — no
     global row sort anywhere. Spearman ρ is then Pearson over the
     integer 2·midranks: all sufficient statistics are exact
@@ -2658,11 +2647,11 @@ def spearman_lineitem(t: dict[str, DataFrame]) -> DataFrame:
 
     Scale shape: one inventory groupBy per measure (value-domain
     sized: 50 quantities, 11 discounts; price ~row-count in the worst
-    case) + an equi-join of each inventory back on its value (the
-    standard rank-via-inventory shape — no unpartitioned window, no
-    global sort); one final aggregate. Output: one row per pair.
+    case) whose exclusive prefix count is ``distrank.with_global_order``
+    over the values (no unpartitioned window), equi-joined back on its
+    value; one final aggregate. Output: one row per pair.
     """
-    from .distrank import with_global_prefix_sums
+    from .distrank import with_global_order
 
     li = t["lineitem"].selectExpr(
         *[f"{expr} AS {name}" for name, expr in _SPEAR_MEASURES]
@@ -2671,15 +2660,7 @@ def spearman_lineitem(t: dict[str, DataFrame]) -> DataFrame:
     out = li
     for m in names:
         inv = li.groupBy(m).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        ranked, _tot = with_global_prefix_sums(
-            inv, [m], ["cnt"], inclusive=False
-        )
-        if ranked is None:
-            return li.sparkSession.createDataFrame(
-                [],
-                "n long, rho_qty_price_c double, rho_qty_disc_pct double, "
-                "rho_price_c_disc_pct double",
-            )
+        ranked, _n, _tot = with_global_order(inv, [m], weights=["cnt"])
         inv2 = ranked.select(
             m,
             (2 * F.col("cum_cnt") + F.col("cnt") + 1)

@@ -139,9 +139,7 @@ def get_spark(
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
-        )
+        shuffle_partitions = cpus
 
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_mem())
     # The C2 thresholds go first: a flag repeated in the env options wins.

@@ -353,67 +353,6 @@ def stream_to_partitioned_lake(
 
 
 # ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-
-def running_user_totals_tws(stream: DataFrame) -> DataFrame:
-    """`running_user_totals` on Spark 4's transformWithStateInPandas —
-    the successor API to applyInPandasWithState: typed state handles
-    (value/list/map state), timers, TTL, and RocksDB-backed state out
-    of the box. Semantics here are IDENTICAL to the
-    applyInPandasWithState twin above (one (n, s) accumulator per
-    user, update-mode emission), so either API can serve the same
-    query.
-
-    ENVIRONMENT NOTE: the transformWithState Python driver worker
-    speaks a protobuf protocol; this container ships no
-    `google.protobuf`, so the operator is exercised by
-    `tests/test_stateful_streaming.py::test_running_totals_tws` only
-    where protobuf is importable (skipped here, like the media codec
-    stubs). The applyInPandasWithState twin carries the tested
-    semantics; this function is the migration template.
-
-    Requires `spark.sql.streaming.stateStore.providerClass` =
-    RocksDBStateStoreProvider (set by the caller before starting the
-    query).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.state = handle.getValueState("totals", "n long, s double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            st = self.state.get()
-            n, s = (st[0], st[1]) if st else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self.state.update((n, s))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(s, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# ---------------------------------------------------------------------------
 # streaming CUSUM drift alarm
 # ---------------------------------------------------------------------------
 
