@@ -117,13 +117,6 @@ ADHOC_RECURSIVE_REACH_SQL = """
 """
 
 
-def _sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from training_etl_demo_2_spark.io import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(ADHOC_RECURSIVE_REACH_SQL)
-
-
 # LATERAL correlated subquery (top-1-per-group without a window):
 # one SQL text, two engines — Spark's LateralJoin and DuckDB agree.
 ADHOC_LATERAL_TOP_CUSTOMER_SQL = """
@@ -139,26 +132,15 @@ ADHOC_LATERAL_TOP_CUSTOMER_SQL = """
 """
 
 
-def _sql_lateral_top_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from training_etl_demo_2_spark.io import register_views
+def _sql(text: str) -> Callable[[SparkSession, str], DataFrame]:
+    """Registry entry for SQL text that runs verbatim on Spark: the
+    fixture tables are registered as views, then ``spark.sql(text)``."""
 
-    register_views(spark, sf_dir)
-    return spark.sql(ADHOC_LATERAL_TOP_CUSTOMER_SQL)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _io.register_views(spark, sf_dir)
+        return spark.sql(text)
 
-
-def _sql_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from training_etl_demo_2_spark.io import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(ADHOC_NATION_REVENUE_SQL)
-
-
-def _sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from training_etl_demo_2_spark.io import register_views
-    from training_etl_demo_2_spark.operators.relational_ext import GROUPING_SETS_SQL
-
-    register_views(spark, sf_dir)
-    return spark.sql(GROUPING_SETS_SQL)
+    return run
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -182,7 +164,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top10_words": _q(lambda t: wordcount.top_k_words(t["documents"], 10)),
         # --- SQL surface (the Athena phase, reqdef.yaml:69-73): the exact
         #     same SQL text runs on spark.sql and on the DuckDB oracle
-        "sql_nation_revenue": _sql_passthrough,
+        "sql_nation_revenue": _sql(ADHOC_NATION_REVENUE_SQL),
         # --- reference job B enrichment (§2.1 S7, F3-F5)
         "sink_word_items": _q(_sink_items),
         # --- north-star: text analysis (§2.12)
@@ -412,7 +394,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scrub_pii": _q(lambda t: text.scrub_pii(t["documents"])),
         "q8_market_share": _q(relational_ext.q8_market_share),
         "q15_top_suppliers": _q(relational_ext.q15_top_suppliers),
-        "sql_grouping_sets": _sql_grouping_sets,
+        "sql_grouping_sets": _sql(relational_ext.GROUPING_SETS_SQL),
         "event_value_percentiles": _q(relational_ext.event_value_percentiles),
         "distinct_customers_by_priority": _q(
             relational.distinct_customers_by_priority
@@ -505,7 +487,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Spark-4 VARIANT twin of events_props_stats (shared oracle):
         # parse_json + variant_get vs from_json with declared schema
         "events_props_variant": _q(relational_ext.events_props_variant),
-        "sql_lateral_top_customer": _sql_lateral_top_customer,
+        "sql_lateral_top_customer": _sql(ADHOC_LATERAL_TOP_CUSTOMER_SQL),
         "stream_user_totals": fixture_queries.stream_user_totals,
         "cms_join_estimate": _q(
             lambda t: sketches.cms_join_size_estimate(
@@ -528,7 +510,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curriculum_phases": _q(
             lambda t: curation.curriculum_phases(t["documents"])
         ),
-        "sql_recursive_reachability": _sql_recursive_reach,
+        "sql_recursive_reachability": _sql(ADHOC_RECURSIVE_REACH_SQL),
         "revenue_trailing_7d": _q(relational_ext.revenue_trailing_7d),
         "events_hourly_forecast": _q(relational_ext.events_hourly_forecast),
         "orders_measures_unpivot": _q(relational_ext.orders_measures_unpivot),

@@ -62,6 +62,33 @@ ALWAYS = [
     "stream_click_attribution",
     "stream_click_funnel_loss",
     "stream_funnel_two_sided",
+    # twins and engines on the shared vector-search stages (one top-k
+    # tail, one exact re-rank, one LSH probe, one unit-quantized
+    # prelude, one Lloyd chain, one recall fold) and the one survival
+    # risk set
+    "ann_brute_topk",
+    "ann_brute_topk_pandas",
+    "ann_filtered_topk",
+    "ann_lsh_topk",
+    "ann_ivf_topk",
+    "ann_pq_topk",
+    "semantic_dedup",
+    "hybrid_rrf_topk",
+    "kmeans_silhouette",
+    "kmeans_elbow_curve",
+    "ivf_nprobe_curve",
+    "ivf_cell_balance",
+    "lsh_recall_curve",
+    "ann_recall_vs_dim",
+    "lsh_probe_curve",
+    "ann_ndcg_eval",
+    "ivf_ndcg_eval",
+    "ann_mrr_eval",
+    "ivf_mrr_eval",
+    "knn_label_agreement",
+    "knn_label_suspects",
+    "kaplan_meier_churn",
+    "nelson_aalen_churn",
 ]
 
 

@@ -5,6 +5,7 @@ state continuation."""
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -98,7 +99,8 @@ def test_pack_stream_state_spans_micro_batches(spark, tmp_path):
     d = str(tmp_path / "stream_src")
     os.makedirs(d, exist_ok=True)
     cols = ["doc_id", "text", "lang", "source"]
-    for name, rows in (("b1", rows1), ("b2", rows2)):
+    now = int(time.time())
+    for age, (name, rows) in zip((20, 10), (("b1", rows1), ("b2", rows2))):
         tbl = pa.table(
             {c: [r[i] for r in rows] for i, c in enumerate(cols)},
             schema=pa.schema(
@@ -110,7 +112,12 @@ def test_pack_stream_state_spans_micro_batches(spark, tmp_path):
                 ]
             ),
         )
-        pq.write_table(tbl, os.path.join(d, f"{name}.parquet"))
+        path = os.path.join(d, f"{name}.parquet")
+        pq.write_table(tbl, path)
+        # The file source takes files in modification-time order; two
+        # files written in the same millisecond come in listing order,
+        # so pin b1 before b2.
+        os.utime(path, (now - age, now - age))
 
     schema = spark.read.parquet(os.path.join(d, "b1.parquet")).schema
     src = (

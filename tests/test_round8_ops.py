@@ -591,7 +591,7 @@ def test_wasserstein_hypothesis_differential(spark):
 def test_lsh_probe_curve_monotone(tables):
     """More probes can only ADD candidates, so candidate volume and
     recall are non-decreasing in the radius; radius 1 must match the
-    production lsh_topk (multiprobe=True) recall shape."""
+    production lsh_topk (the radius-1 probe) recall shape."""
     from training_etl_demo_2_spark.operators import similarity
 
     out = {r["radius"]: r for r in similarity.lsh_probe_curve(

@@ -47,13 +47,24 @@ def test_lsh_recall_against_brute(tables):
 
 
 def test_lsh_multiprobe_supersets_single_probe(tables):
-    """Multi-probe may only ADD candidates: its result per query must
-    contain at least the single-probe hits (same planes, wider probes)."""
-    exact = _topk_sets(similarity.brute_topk(tables["embeddings"], k=5))
-    single = _topk_sets(
-        similarity.lsh_topk(tables["embeddings"], k=5, multiprobe=False)
-    )
-    multi = _topk_sets(similarity.lsh_topk(tables["embeddings"], k=5))
+    """Multi-probe may only ADD candidates: the shared candidate builder
+    at radius 1 (lsh_topk's probe) returns every radius-0 (single-probe)
+    pair, so its re-ranked top-5 holds at least the single-probe hits
+    (same planes, wider probes)."""
+    emb = tables["embeddings"]
+    buckets = similarity.lsh_buckets(emb)
+    cand = {
+        r: similarity._lsh_candidates(emb, buckets, "vec_id < 20", r)
+        for r in (0, 1)
+    }
+    pairs = {
+        r: {(x.query_id, x.neighbor_id) for x in c.collect()}
+        for r, c in cand.items()
+    }
+    assert pairs[0] and pairs[0] <= pairs[1]
+    exact = _topk_sets(similarity.brute_topk(emb, k=5))
+    single = _topk_sets(similarity._refine_topk(emb, cand[0], 5))
+    multi = _topk_sets(similarity._refine_topk(emb, cand[1], 5))
     s_hits = m_hits = total = 0
     for q, rows in exact.items():
         truth = {n for _, n, _ in rows}

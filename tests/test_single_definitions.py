@@ -1,0 +1,67 @@
+"""Source-scan guard: each shared vector-search stage and the one
+distributed rank keep a single definition under ``operators/``.
+
+No Spark: the test reads the operator sources, collapses whitespace and
+counts each pinned definition. A pasted second copy of a stage (the
+re-rank tail, the Lloyd update, the LSH plane table, the quantized
+prelude, the engine's exact re-rank join) fails here before it can
+drift from the first.
+"""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import pytest
+
+OPERATORS = (
+    Path(__file__).resolve().parents[1] / "training_etl_demo_2_spark" / "operators"
+)
+
+# name -> regex over whitespace-collapsed source; each must occur once
+SINGLE = {
+    # the twin top-k tail: the rank clause of a (query_id, neighbor_id,
+    # sim) relation, whether ranked on a sim column or on the cosine
+    "twin rank clause": (
+        r"PARTITION BY (?:\w+\.)?query_id ORDER BY "
+        r"(?:sim|round\(list_cosine_similarity\([^)]*\), ?6\)) DESC, "
+        r"(?:\w+\.)?neighbor_id ASC"
+    ),
+    "twin Lloyd update": re.escape("coalesce(m.m, c.c)"),
+    "twin LSH plane table": re.escape("planes(tbl, bit, p) AS (VALUES"),
+    "twin unit-quantized prelude": re.escape("nrm AS MATERIALIZED"),
+    "engine exact re-rank join": re.escape(".join(F.broadcast(q"),
+}
+
+
+def _sources() -> dict[str, str]:
+    return {
+        p.name: re.sub(r"\s+", " ", p.read_text())
+        for p in sorted(OPERATORS.glob("*.py"))
+    }
+
+
+@pytest.mark.parametrize("name", sorted(SINGLE))
+def test_stage_has_one_definition(name):
+    pattern = re.compile(SINGLE[name])
+    where = {
+        f: len(pattern.findall(src))
+        for f, src in _sources().items()
+        if pattern.search(src)
+    }
+    assert sum(where.values()) == 1, f"{name}: {where}"
+
+
+def test_only_distrank_ranks_by_range():
+    """Exact global ranks live in ``distrank.py``: no other operator
+    repartitions by range or reads ``spark_partition_id``, apart from
+    ``wordcount``'s salt."""
+    allowed = {
+        "repartitionByRange": {"distrank.py"},
+        "spark_partition_id": {"distrank.py", "wordcount.py"},
+    }
+    for call, files in allowed.items():
+        users = {f for f, src in _sources().items() if call in src}
+        assert users <= files, f"{call} outside distrank: {sorted(users - files)}"
+        assert "distrank.py" in users, call

@@ -527,6 +527,78 @@ def funnel_latency_sql(stages: tuple = FUNNEL_STAGES) -> str:
 KM_CHURN_DAYS = 7
 
 
+def _churn_risk_set(events: DataFrame, churn_days: int) -> DataFrame:
+    """The duration relation of the survival estimators (Kaplan-Meier
+    and Nelson-Aalen): one row per whole-day user lifetime
+    (last − first event date) with ``n_at`` users of that duration,
+    ``n_events`` of them churned (last event more than ``churn_days``
+    before the observation edge, the ONE-ROW max-ts aggregate; the
+    rest are right-censored) and ``n_risk``, the users whose duration
+    is at least this one (total − running count below)."""
+    from pyspark.sql import Window
+
+    spans = events.groupBy("user_id").agg(
+        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
+    )
+    edge = events.agg(F.max("ts").alias("edge_ts"))
+    per_user = spans.crossJoin(F.broadcast(edge)).select(
+        F.datediff(F.to_date("last_ts"), F.to_date("first_ts")).alias(
+            "duration_days"
+        ),
+        (
+            F.col("last_ts")
+            < F.col("edge_ts") - F.expr(f"INTERVAL {churn_days} DAYS")
+        )
+        .cast("int")
+        .alias("churned"),
+    )
+    by_dur = per_user.groupBy("duration_days").agg(
+        F.count(F.lit(1)).cast("long").alias("n_at"),
+        F.sum("churned").cast("long").alias("n_events"),
+    )
+    return by_dur.withColumn(
+        "n_risk",
+        F.sum("n_at")
+        .over(
+            Window.orderBy("duration_days").rowsBetween(
+                Window.currentRow, Window.unboundedFollowing
+            )
+        )
+        .cast("long"),
+    )
+
+
+def _churn_risk_set_cte(churn_days: int) -> str:
+    """Twin of ``_churn_risk_set``: the CTE chain spans, edge,
+    per_user, by_dur, ending at ``risked(duration_days, n_at,
+    n_events, n_risk)``."""
+    return f"""spans AS (
+        SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts
+        FROM events GROUP BY 1
+    ),
+    edge AS (SELECT max(ts) AS edge_ts FROM events),
+    per_user AS (
+        SELECT datediff('day', CAST(first_ts AS DATE),
+                        CAST(last_ts AS DATE)) AS duration_days,
+               CAST(last_ts < edge_ts - INTERVAL {churn_days} DAY AS INT)
+                   AS churned
+        FROM spans CROSS JOIN edge
+    ),
+    by_dur AS (
+        SELECT duration_days,
+               CAST(count(*) AS BIGINT) AS n_at,
+               CAST(sum(churned) AS BIGINT) AS n_events
+        FROM per_user GROUP BY 1
+    ),
+    risked AS (
+        SELECT duration_days, n_at, n_events,
+               CAST(sum(n_at) OVER (ORDER BY duration_days
+                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
+                    AS BIGINT) AS n_risk
+        FROM by_dur
+    )"""
+
+
 def kaplan_meier_churn(
     events: DataFrame, churn_days: int = KM_CHURN_DAYS
 ) -> DataFrame:
@@ -549,35 +621,8 @@ def kaplan_meier_churn(
     """
     from pyspark.sql import Window
 
-    spans = events.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-    )
-    edge = events.agg(F.max("ts").alias("edge_ts"))
-    per_user = spans.crossJoin(F.broadcast(edge)).select(
-        F.datediff(F.to_date("last_ts"), F.to_date("first_ts")).alias(
-            "duration_days"
-        ),
-        (
-            F.col("last_ts")
-            < F.col("edge_ts") - F.expr(f"INTERVAL {churn_days} DAYS")
-        )
-        .cast("int")
-        .alias("churned"),
-    )
-    by_dur = per_user.groupBy("duration_days").agg(
-        F.count(F.lit(1)).cast("long").alias("n_at"),
-        F.sum("churned").cast("long").alias("n_events"),
-    )
+    risked = _churn_risk_set(events, churn_days)
     w_ord = Window.orderBy("duration_days")
-    # n_risk(t): everyone whose duration >= t = total - running count(< t)
-    risked = by_dur.withColumn(
-        "n_risk",
-        (
-            F.sum("n_at").over(
-                w_ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-            )
-        ).cast("long"),
-    )
     f = 1.0 - F.col("n_events").cast("double") / F.col("n_risk")
     ln_nano = F.when(
         F.col("n_events") < F.col("n_risk"),
@@ -607,31 +652,10 @@ def kaplan_meier_churn(
 
 
 def kaplan_meier_churn_sql(churn_days: int = KM_CHURN_DAYS) -> str:
+    """Twin of kaplan_meier_churn: the shared duration relation and
+    the identical nano ln lattice."""
     return f"""
-    WITH spans AS (
-        SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts
-        FROM events GROUP BY 1
-    ),
-    edge AS (SELECT max(ts) AS edge_ts FROM events),
-    per_user AS (
-        SELECT date_diff('day', CAST(first_ts AS DATE), CAST(last_ts AS DATE))
-                   AS duration_days,
-               CASE WHEN last_ts < edge_ts - INTERVAL {churn_days} DAY
-                    THEN 1 ELSE 0 END AS churned
-        FROM spans CROSS JOIN edge
-    ),
-    by_dur AS (
-        SELECT duration_days, count(*) AS n_at, sum(churned) AS n_events
-        FROM per_user GROUP BY 1
-    ),
-    risked AS (
-        SELECT duration_days, n_at, n_events,
-               CAST(sum(n_at) OVER (
-                   ORDER BY duration_days
-                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING
-               ) AS BIGINT) AS n_risk
-        FROM by_dur
-    ),
+    WITH {_churn_risk_set_cte(churn_days)},
     scored AS (
         SELECT duration_days, n_events, n_risk,
                CASE WHEN n_events < n_risk
@@ -2212,7 +2236,8 @@ def nelson_aalen_churn(
     the HAZARD (instantaneous churn pressure) is the decision input
     (where in the lifecycle do we lose people fastest?), plus the
     Fleming-Harrington survival exp(−H) that dominates KM at small
-    risk sets. Sharing the duration relation with KM makes the two
+    risk sets. Sharing the duration relation with KM
+    (``_churn_risk_set``) makes the two
     curves directly comparable row for row.
 
     Exactness: per-duration d/n and d/n² terms are nano-rounded to
@@ -2226,32 +2251,8 @@ def nelson_aalen_churn(
     """
     from pyspark.sql import Window
 
-    spans = events.groupBy("user_id").agg(
-        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
-    )
-    edge = events.agg(F.max("ts").alias("edge_ts"))
-    per_user = spans.crossJoin(F.broadcast(edge)).select(
-        F.datediff(F.to_date("last_ts"), F.to_date("first_ts")).alias(
-            "duration_days"
-        ),
-        (
-            F.col("last_ts")
-            < F.col("edge_ts") - F.expr(f"INTERVAL {churn_days} DAYS")
-        )
-        .cast("int")
-        .alias("churned"),
-    )
-    by_dur = per_user.groupBy("duration_days").agg(
-        F.count(F.lit(1)).cast("long").alias("n_at"),
-        F.sum("churned").cast("long").alias("n_events"),
-    )
+    risked = _churn_risk_set(events, churn_days)
     w_ord = Window.orderBy("duration_days")
-    risked = by_dur.withColumn(
-        "n_risk",
-        F.sum("n_at")
-        .over(w_ord.rowsBetween(Window.currentRow, Window.unboundedFollowing))
-        .cast("long"),
-    )
     nano = lambda e: F.floor(e * 1e9 + F.lit(0.5)).cast("long")
     d = F.col("n_events").cast("double")
     nn = F.col("n_risk").cast("double")
@@ -2293,31 +2294,7 @@ def nelson_aalen_churn_sql(churn_days: int = KM_CHURN_DAYS) -> str:
     """Twin of nelson_aalen_churn: identical duration relation and
     nano hazard lattice."""
     return f"""
-    WITH spans AS (
-        SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts
-        FROM events GROUP BY 1
-    ),
-    edge AS (SELECT max(ts) AS edge_ts FROM events),
-    per_user AS (
-        SELECT datediff('day', CAST(first_ts AS DATE),
-                        CAST(last_ts AS DATE)) AS duration_days,
-               CAST(last_ts < edge_ts - INTERVAL {churn_days} DAY AS INT)
-                   AS churned
-        FROM spans CROSS JOIN edge
-    ),
-    by_dur AS (
-        SELECT duration_days,
-               CAST(count(*) AS BIGINT) AS n_at,
-               CAST(sum(churned) AS BIGINT) AS n_events
-        FROM per_user GROUP BY 1
-    ),
-    risked AS (
-        SELECT duration_days, n_events,
-               CAST(sum(n_at) OVER (ORDER BY duration_days
-                    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-                    AS BIGINT) AS n_risk
-        FROM by_dur
-    ),
+    WITH {_churn_risk_set_cte(churn_days)},
     terms AS (
         SELECT duration_days, n_risk, n_events,
                CAST(floor(CAST(n_events AS DOUBLE) / n_risk * 1e9 + 0.5)

@@ -1,5 +1,35 @@
 """DuckDB oracle-SQL twins for text.py and similarity.py operators.
-Generated from the same constants as the Spark implementations."""
+Generated from the same constants as the Spark implementations.
+
+Shared ANN and k-means CTEs: every vector-search twin is
+filter-and-refine (a candidate generator, then one exact cosine
+re-rank and one deterministic top-k), and each stage has one SQL
+definition here, used by the twins in this module and by the
+``*_sql`` twins in ``similarity.py``:
+
+* ``_ranked_topk_sql``: the top-k tail over any relation with
+  ``(query_id, neighbor_id, sim)``, ranked (sim desc, neighbor asc)
+  like ``similarity._ranked_topk``; adds ``rnk``;
+* ``_refine_topk_sql``: the exact round-6 cosine re-rank of a
+  ``(query_id, neighbor_id)`` candidate relation against ``v``, fed to
+  the tail;
+* ``brute_topk_sql``: the exact brute-force ranking, also the ground
+  truth of every recall, NDCG and MRR twin;
+* ``_lsh_cte``: ``v``, the seeded plane table ``planes``, ``buckets``
+  and, per probe radius r, ``qb{r}``/``cand{r}`` (``lsh_topk_sql`` is
+  its radius-1 arm, ``lsh_probe_curve_sql`` takes every radius);
+* ``_unit_quant_cte``: the unit-quantized prelude ``elems`` … ``init``
+  of the exact-integer IVF and PQ recurrences;
+* ``_ivf_chain_cte``: the IVF Lloyd chain, ending at ``ranked_cells``;
+* ``_kmeans_cte``: ``elems`` and one double-precision Lloyd chain
+  ``cent0_{k}`` … ``final_{k}`` per k (``distributed_kmeans_sql``,
+  ``kmeans_silhouette_sql``, ``kmeans_elbow_sql``).
+
+As in ``oracle.py``, the twins share constants with the engine, never
+text: the engine ranks with a window over a broadcast join and buckets
+in ``mapInPandas``, while these CTEs rank with ``row_number()`` and
+bucket with ``list_dot_product`` over a VALUES plane table.
+"""
 
 from __future__ import annotations
 
@@ -231,6 +261,36 @@ def tfidf_top_terms_sql(k: int = 3) -> str:
 # --- similarity -----------------------------------------------------------
 
 
+def _ranked_topk_sql(rel: str, k: int) -> str:
+    """The ranked top-k tail of every ANN twin: rank the rows of
+    ``rel`` (a relation with ``query_id``, ``neighbor_id``, ``sim`` and
+    any further columns) per query on (sim desc, neighbor asc), the
+    total order of ``similarity._ranked_topk``, and keep the top ``k``.
+    Adds ``rnk`` after ``rel``'s columns."""
+    return f"""SELECT * FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
+        ) AS rnk
+        FROM {rel}
+    ) WHERE rnk <= {k}"""
+
+
+def _refine_topk_sql(cand: str, k: int) -> str:
+    """Exact re-rank of the ``(query_id, neighbor_id)`` candidate
+    relation ``cand``: double cosine of the raw embeddings from ``v``
+    (which the caller defines), rounded to 6, then the top-k tail."""
+    return _ranked_topk_sql(
+        f"""(
+        SELECT c.query_id, c.neighbor_id,
+               round(list_cosine_similarity(qv.e, cv.e), 6) AS sim
+        FROM {cand} c
+        JOIN v qv ON qv.vec_id = c.query_id
+        JOIN v cv ON cv.vec_id = c.neighbor_id
+    )""",
+        k,
+    )
+
+
 def brute_topk_sql(k: int = 5, query_pred: str = "vec_id < 20") -> str:
     return f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -239,15 +299,8 @@ def brute_topk_sql(k: int = 5, query_pred: str = "vec_id < 20") -> str:
                round(list_cosine_similarity(q.e, c.e), 6) AS sim
         FROM (SELECT * FROM v WHERE {query_pred}) q
         JOIN v c ON q.vec_id <> c.vec_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
-               ) AS rnk
-        FROM pairs
     )
-    SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {k}
+    {_ranked_topk_sql("pairs", k)}
     """
 
 
@@ -261,15 +314,8 @@ def filtered_topk_sql(k: int = 5, query_pred: str = "vec_id < 20") -> str:
                round(list_cosine_similarity(q.e, c.e), 6) AS sim
         FROM (SELECT * FROM v WHERE {query_pred}) q
         JOIN v c ON q.label = c.label AND q.vec_id <> c.vec_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
-               ) AS rnk
-        FROM pairs
     )
-    SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {k}
+    {_ranked_topk_sql("pairs", k)}
     """
 
 
@@ -302,13 +348,7 @@ def _knn_winner_cte(k: int, query_mod: int) -> str:
               ORDER BY vec_id LIMIT {KNN_MAX_QUERIES}) q
         JOIN v c ON q.vec_id <> c.vec_id
     ),
-    topk AS (
-        SELECT * FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
-            ) AS rnk FROM pairs
-        ) WHERE rnk <= {k}
-    ),
+    topk AS ({_ranked_topk_sql("pairs", k)}),
     votes AS (
         SELECT query_id, q_label, n_label, count(*) AS cnt
         FROM topk GROUP BY 1, 2, 3
@@ -350,22 +390,25 @@ def knn_label_suspects_sql(k: int = 10, query_mod: int = 10) -> str:
     """
 
 
-def lsh_topk_sql(k: int = 5, query_pred: str = "vec_id < 20", dim: int = 64) -> str:
-    """Twin of similarity.lsh_topk (multiprobe on): the seeded
-    hyperplanes are data-INDEPENDENT constants (similarity._planes,
+def _lsh_cte(radii: tuple[int, ...], query_pred: str, dim: int) -> str:
+    """``v``, ``planes``, ``buckets`` and, per probe radius r,
+    ``qb{r}(query_id, tbl, bucket)`` and ``cand{r}(query_id,
+    neighbor_id)``: the twin of similarity.lsh_buckets and
+    similarity._lsh_candidates. The seeded hyperplanes are
+    data-INDEPENDENT constants (similarity._planes,
     RandomState(LSH_SEED)), so they materialize as DOUBLE[] literals —
     the same constants-as-SQL technique as the MinHash twin in
-    oracle.py. Bucket = sum of sign-bit * 2^bit per table; multiprobe
-    explodes each query bucket into itself plus its nbits hamming-1
-    neighbors (xor); candidates join on (table, bucket); exact cosine
-    re-rank rounds to 6 like the Spark side.
+    oracle.py. Bucket = sum of sign-bit * 2^bit per table; radius r
+    explodes each query bucket into every bucket within hamming
+    distance r (xor with similarity._probe_masks(r)); candidates join
+    on (table, bucket).
 
     Shortest-repr float literals round-trip to the identical IEEE
     double, so the only cross-engine divergence channel is summation
     order inside the 64-term dot product flipping a sign at |dot| ~
     1e-13 — probability ~1e-12 per dot on N(0,1) planes, verified
     empirically at sf0.001/0.01/0.1."""
-    from .similarity import LSH_NBITS, LSH_TABLES, _planes
+    from .similarity import LSH_NBITS, LSH_TABLES, _planes, _probe_masks
 
     planes = _planes(dim)
     rows = []
@@ -374,11 +417,22 @@ def lsh_topk_sql(k: int = 5, query_pred: str = "vec_id < 20", dim: int = 64) -> 
             vec = ", ".join(repr(float(x)) for x in planes[t, b])
             rows.append(f"({t}, {b}, [{vec}]::DOUBLE[])")
     plane_values = ",\n        ".join(rows)
-    probes = ", ".join(
-        ["b.bucket"] + [f"xor(b.bucket, {1 << j})" for j in range(LSH_NBITS)]
-    )
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    arms = []
+    for r in radii:
+        masks = ", ".join(f"xor(b.bucket, {m})" for m in _probe_masks(r))
+        arms.append(f"""qb{r} AS (
+        SELECT b.vec_id AS query_id, b.tbl, pr.bucket
+        FROM buckets b, unnest([{masks}]) AS pr(bucket)
+        WHERE b.vec_id IN (SELECT vec_id FROM v WHERE {query_pred})
+    ),
+    cand{r} AS (
+        SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
+        FROM qb{r} q
+        JOIN buckets c ON q.tbl = c.tbl AND q.bucket = c.bucket
+        WHERE q.query_id <> c.vec_id
+    )""")
+    probe_arms = ",\n    ".join(arms)
+    return f"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
     planes(tbl, bit, p) AS (VALUES
         {plane_values}
     ),
@@ -390,33 +444,55 @@ def lsh_topk_sql(k: int = 5, query_pred: str = "vec_id < 20", dim: int = 64) -> 
         FROM v CROSS JOIN planes pl
         GROUP BY v.vec_id, pl.tbl
     ),
-    q_buckets AS (
-        SELECT b.vec_id AS query_id, b.tbl, pr.bucket
-        FROM buckets b, unnest([{probes}]) AS pr(bucket)
-        WHERE b.vec_id IN (SELECT vec_id FROM v WHERE {query_pred})
-    ),
-    cand AS (
-        SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
-        FROM q_buckets q
-        JOIN buckets c ON q.tbl = c.tbl AND q.bucket = c.bucket
-        WHERE q.query_id <> c.vec_id
-    ),
-    pairs AS (
-        SELECT cand.query_id, cand.neighbor_id,
-               round(list_cosine_similarity(qv.e, cv.e), 6) AS sim
-        FROM cand
-        JOIN v qv ON qv.vec_id = cand.query_id
-        JOIN v cv ON cv.vec_id = cand.neighbor_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
-               ) AS rnk
-        FROM pairs
-    )
-    SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {k}
+    {probe_arms}"""
+
+
+def lsh_topk_sql(k: int = 5, query_pred: str = "vec_id < 20", dim: int = 64) -> str:
+    """Twin of similarity.lsh_topk: the radius-1 arm of ``_lsh_cte``
+    (each query bucket plus its nbits hamming-1 neighbours), then the
+    exact cosine re-rank."""
+    return f"""
+    WITH {_lsh_cte((1,), query_pred, dim)}
+    {_refine_topk_sql("cand1", k)}
     """
+
+
+def _unit_quant_cte(n_init: int, sub: int = 0) -> str:
+    """The unit-quantized prelude of the exact-integer IVF and PQ
+    recurrences, the twin of similarity._quantize_unit on the sample:
+    ``elems`` (one row per component), ``q0`` (floor(x·Q)), ``nrm``
+    (Σq²), ``nq(vec_id, dim, nq)`` (floor(q·Q/√Σq²), 0 for a zero
+    vector), ``smp`` (the IVF_SAMPLE lowest vec_ids), ``snq`` (their
+    ``nq`` rows) and ``init(vec_id, cid)`` (the sample's ``n_init``
+    lowest vec_ids, numbered from 0). ``sub`` > 0 adds the PQ subspace
+    ``s = dim // sub`` to ``nq``."""
+    from .similarity import IVF_QUANT, IVF_SAMPLE
+
+    q = IVF_QUANT
+    s_col = f"q0.dim // {sub} AS s, " if sub else ""
+    return f"""elems AS MATERIALIZED (
+        SELECT vec_id, t.i - 1 AS dim, embedding[t.i]::DOUBLE AS val
+        FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
+    ),
+    q0 AS MATERIALIZED (
+        SELECT vec_id, dim, CAST(floor(val * {q}) AS BIGINT) AS qv
+        FROM elems
+    ),
+    nrm AS MATERIALIZED (SELECT vec_id, sum(qv * qv) AS n2 FROM q0 GROUP BY vec_id),
+    nq AS MATERIALIZED (
+        SELECT q0.vec_id, q0.dim, {s_col}
+               CASE WHEN nrm.n2 = 0 THEN 0
+                    ELSE CAST(floor((q0.qv * {q})::DOUBLE
+                                    / sqrt(nrm.n2::DOUBLE)) AS BIGINT)
+               END AS nq
+        FROM q0 JOIN nrm USING (vec_id)
+    ),
+    smp AS MATERIALIZED (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {IVF_SAMPLE}),
+    snq AS MATERIALIZED (SELECT nq.* FROM nq JOIN smp USING (vec_id)),
+    init AS MATERIALIZED (
+        SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cid
+        FROM (SELECT vec_id FROM smp ORDER BY vec_id LIMIT {n_init})
+    )"""
 
 
 def _ivf_chain_cte(n_centroids: int) -> str:
@@ -430,9 +506,9 @@ def _ivf_chain_cte(n_centroids: int) -> str:
     trained codebook and the per-vector cell ranking agree bit-for-bit
     with similarity._ivf_centroids / ivf_assign. Ends at
     ``ranked_cells (vec_id, cid, rn)``: rn-ranked (sim desc, cid asc)
-    cells per vector. Consumed by ivf_topk_sql and
-    semantic_dedup_sql."""
-    from .similarity import IVF_ITERS, IVF_QUANT, IVF_SAMPLE
+    cells per vector. Consumed by ivf_topk_sql, semantic_dedup_sql and
+    similarity.ivf_cell_balance_sql."""
+    from .similarity import IVF_ITERS, IVF_QUANT
 
     q = IVF_QUANT
     steps = []
@@ -477,29 +553,7 @@ def _ivf_chain_cte(n_centroids: int) -> str:
     )"""
         )
     chain = ",\n    ".join(steps)
-    return f"""elems AS MATERIALIZED (
-        SELECT vec_id, t.i - 1 AS dim, embedding[t.i]::DOUBLE AS val
-        FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-    ),
-    q0 AS MATERIALIZED (
-        SELECT vec_id, dim, CAST(floor(val * {q}) AS BIGINT) AS qv
-        FROM elems
-    ),
-    nrm AS MATERIALIZED (SELECT vec_id, sum(qv * qv) AS n2 FROM q0 GROUP BY vec_id),
-    nq AS MATERIALIZED (
-        SELECT q0.vec_id, q0.dim,
-               CASE WHEN nrm.n2 = 0 THEN 0
-                    ELSE CAST(floor((q0.qv * {q})::DOUBLE
-                                    / sqrt(nrm.n2::DOUBLE)) AS BIGINT)
-               END AS nq
-        FROM q0 JOIN nrm USING (vec_id)
-    ),
-    smp AS MATERIALIZED (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {IVF_SAMPLE}),
-    snq AS MATERIALIZED (SELECT nq.* FROM nq JOIN smp USING (vec_id)),
-    init AS MATERIALIZED (
-        SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cid
-        FROM (SELECT vec_id FROM smp ORDER BY vec_id LIMIT {n_centroids})
-    ),
+    return f"""{_unit_quant_cte(n_centroids)},
     cent0 AS MATERIALIZED (
         SELECT i.cid, s.dim, s.nq AS c FROM init i JOIN snq s USING (vec_id)
     ),
@@ -541,23 +595,57 @@ def ivf_topk_sql(
         FROM qprobe p JOIN cells c USING (cell)
         WHERE p.query_id <> c.vec_id
     ),
-    v AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    pairs AS (
-        SELECT cand.query_id, cand.neighbor_id,
-               round(list_cosine_similarity(qv.e, cv.e), 6) AS sim
-        FROM cand
-        JOIN v qv ON qv.vec_id = cand.query_id
-        JOIN v cv ON cv.vec_id = cand.neighbor_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
-               ) AS rnk
-        FROM pairs
-    )
-    SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {k}
+    v AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
+    {_refine_topk_sql("cand", k)}
     """
+
+
+def _kmeans_cte(ks: tuple[int, ...], iters: int, top: int = 1) -> str:
+    """``elems(vec_id, dim, val)`` and, per k in ``ks``, the
+    double-precision Lloyd chain of similarity._lloyd_relations unrolled
+    as ``cent0_{k}`` (the k lowest vec_ids), ``a{i}_{k}`` (assignment,
+    d2 asc then cid asc), ``cent{i+1}_{k}`` (member mean; an emptied
+    cluster keeps its centroid) and ``final_{k}(vec_id, cid, d2, rn)``,
+    each vector's ``top`` nearest centroids after the last update. The
+    arms of several k share the one ``elems``."""
+
+    def assign(i: int, k: int, top: int) -> str:
+        return f"""SELECT vec_id, cid, d2, rn FROM (
+            SELECT vec_id, cid, d2, row_number() OVER (
+                PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn
+            FROM (SELECT e.vec_id, c.cid,
+                         sum((e.val - c.c) * (e.val - c.c)) AS d2
+                  FROM elems e JOIN cent{i}_{k} c ON e.dim = c.dim
+                  GROUP BY e.vec_id, c.cid)
+        ) WHERE rn <= {top}"""
+
+    ctes = [
+        """elems AS (
+        SELECT vec_id, t.i - 1 AS dim, embedding[t.i]::DOUBLE AS val
+        FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
+    )"""
+    ]
+    for k in ks:
+        ctes.append(
+            f"""cent0_{k} AS (
+        SELECT vec_id AS cid, dim, val AS c FROM elems WHERE vec_id < {k}
+    )"""
+        )
+        for i in range(iters):
+            ctes.append(f"a{i}_{k} AS ({assign(i, k, 1)})")
+            ctes.append(
+                f"""cent{i + 1}_{k} AS (
+        SELECT c.cid, c.dim, coalesce(m.m, c.c) AS c
+        FROM cent{i}_{k} c
+        LEFT JOIN (
+            SELECT a.cid, e.dim, avg(e.val) AS m
+            FROM a{i}_{k} a JOIN elems e ON a.vec_id = e.vec_id
+            GROUP BY a.cid, e.dim
+        ) m ON c.cid = m.cid AND c.dim = m.dim
+    )"""
+            )
+        ctes.append(f"final_{k} AS ({assign(iters, k, top)})")
+    return ",\n    ".join(ctes)
 
 
 def bpe_token_counts_sql(n_merges: int = 30, min_count: int = 1) -> str:
@@ -755,10 +843,8 @@ def pq_topk_sql(
     quotient with denominator ≤ 2^12 sits ≥ 2^-12 from any integer, so
     the floor equals numpy's floor_divide; DuckDB's native ``//``
     truncates toward zero and is NOT used)."""
-    from .similarity import IVF_QUANT, IVF_SAMPLE, PQ_ITERS, PQ_K, PQ_M, PQ_REFINE
+    from .similarity import PQ_ITERS, PQ_K, PQ_M, PQ_REFINE
 
-    q = IVF_QUANT
-    sub = dim // PQ_M
     steps = []
     for i in range(PQ_ITERS):
         steps.append(
@@ -797,29 +883,7 @@ def pq_topk_sql(
         )
     chain = ",\n    ".join(steps)
     return f"""
-    WITH elems AS MATERIALIZED (
-        SELECT vec_id, t.i - 1 AS dim, embedding[t.i]::DOUBLE AS val
-        FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-    ),
-    q0 AS MATERIALIZED (
-        SELECT vec_id, dim, CAST(floor(val * {q}) AS BIGINT) AS qv
-        FROM elems
-    ),
-    nrm AS MATERIALIZED (SELECT vec_id, sum(qv * qv) AS n2 FROM q0 GROUP BY vec_id),
-    nq AS MATERIALIZED (
-        SELECT q0.vec_id, q0.dim, q0.dim // {sub} AS s,
-               CASE WHEN nrm.n2 = 0 THEN 0
-                    ELSE CAST(floor((q0.qv * {q})::DOUBLE
-                                    / sqrt(nrm.n2::DOUBLE)) AS BIGINT)
-               END AS nq
-        FROM q0 JOIN nrm USING (vec_id)
-    ),
-    smp AS MATERIALIZED (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {IVF_SAMPLE}),
-    snq AS MATERIALIZED (SELECT nq.* FROM nq JOIN smp USING (vec_id)),
-    init AS MATERIALIZED (
-        SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cid
-        FROM (SELECT vec_id FROM smp ORDER BY vec_id LIMIT {PQ_K})
-    ),
+    WITH {_unit_quant_cte(PQ_K, sub=dim // PQ_M)},
     cent0 AS MATERIALIZED (
         SELECT x.s, i.cid, x.dim, x.nq AS c
         FROM init i JOIN snq x USING (vec_id)
@@ -854,22 +918,8 @@ def pq_topk_sql(
             ) AS arnk FROM adc
         ) WHERE arnk <= {PQ_REFINE}
     ),
-    v AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    pairs AS (
-        SELECT sl.query_id, sl.neighbor_id,
-               round(list_cosine_similarity(qv.e, cv.e), 6) AS sim
-        FROM shortlist sl
-        JOIN v qv ON qv.vec_id = sl.query_id
-        JOIN v cv ON cv.vec_id = sl.neighbor_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
-               ) AS rnk
-        FROM pairs
-    )
-    SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {k}
+    v AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
+    {_refine_topk_sql("shortlist", k)}
     """
 
 

@@ -4,7 +4,7 @@ Three tiers:
 
 * ``brute_topk`` — exact cosine top-k, fully relational (zip_with +
   aggregate fold, double precision). The correctness baseline; its
-  DuckDB SQL twin lives in ``oracle_sim.py``. Cost O(|Q|·|N|·d): fine
+  DuckDB SQL twin lives in ``oracle_text.py``. Cost O(|Q|·|N|·d): fine
   for a broadcastable query set, the wrong tool for all-pairs at scale.
 * ``brute_topk_pandas`` — same result via Arrow-batched numpy matrix
   multiply in ``mapInPandas``: the single-op throughput path (BLAS dot
@@ -16,6 +16,13 @@ Three tiers:
   replaces the cross join); recall is tunable via (nbits, L) and
   verified against ``brute_topk`` in tests. Deterministic: planes come
   from a fixed-seed generator.
+
+The approximate tiers (LSH, IVF, PQ) are filter-and-refine, and each
+stage is written once: ``_lsh_candidates`` builds the LSH candidates at
+any probe radius, ``_refine_topk`` is the one exact cosine re-rank of a
+candidate relation, ``_ranked_topk`` the one deterministic top-k, and
+``_recall_bp_fold`` the one recall fold of the operating curves. The
+twins' shared CTEs are listed in ``oracle_text.py``.
 
 All cosine math is done in float64 regardless of the array<float>
 storage type, so engine and oracle agree after round(6).
@@ -198,57 +205,11 @@ def lsh_buckets(emb: DataFrame, dim: int = 64) -> DataFrame:
     return emb.select("vec_id", "embedding").mapInPandas(assign, out_schema)
 
 
-def lsh_topk(
-    emb: DataFrame,
-    k: int = 5,
-    query_pred: str = "vec_id < 20",
-    dim: int = 64,
-    multiprobe: bool = True,
-) -> DataFrame:
-    """ANN top-k: same-bucket candidates over L tables → exact cosine
-    re-rank. The candidate join is (table, bucket)-keyed, so at scale
-    each query only meets ~|N| / 2^nbits · L candidates.
-
-    ``multiprobe`` (default on) also probes every bucket at hamming
-    distance 1 from the query's bucket in each table — the standard
-    multi-probe LSH trick (Lv et al., VLDB 2007): a true neighbor that
-    disagrees on exactly one hyperplane is still found. Per-table hit
-    probability rises from p^nbits to p^nbits + nbits·p^(nbits-1)(1-p),
-    which on this fixture lifts top-5 recall from ~0.7 to ≥0.95 while
-    multiplying only the QUERY side of the candidate join by
-    (nbits+1) — the corpus-side index is untouched, so the scale story
-    (bucket-keyed join, no n² pass) is unchanged.
-
-    The bucket relation feeds BOTH sides of the candidate join (query
-    semi-join + corpus side); the two subtrees differ by projection so
-    exchange reuse can't unify them — persist so the mapInPandas
-    hyperplane pass over the corpus runs once, not twice."""
-    from pyspark import StorageLevel
-
-    buckets = lsh_buckets(emb, dim).transform(tracked_persist)
-    q_buckets = buckets.join(
-        emb.filter(query_pred).select("vec_id"), "vec_id", "semi"
-    ).select(F.col("vec_id").alias("query_id"), "table", "bucket")
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << j)).cast("long")
-                for j in range(LSH_NBITS)
-            ],
-        )
-        q_buckets = q_buckets.select(
-            "query_id", "table", F.explode(probes).alias("bucket")
-        )
-    cand = (
-        q_buckets.join(
-            buckets.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket"),
-            ["table", "bucket"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+def _refine_topk(emb: DataFrame, cand: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank of every candidate-generating ANN tier: the
+    ``(query_id, neighbor_id)`` relation ``cand`` meets the broadcast
+    query vectors and the candidate vectors, is scored with the double
+    cosine rounded to ``ROUND`` and ranked by ``_ranked_topk``."""
     q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
@@ -263,6 +224,72 @@ def lsh_topk(
         )
     )
     return _ranked_topk(pairs, k)
+
+
+def _probe_masks(radius: int, nbits: int = LSH_NBITS) -> list[int]:
+    """XOR masks for all buckets within hamming ``radius`` of the
+    query bucket (popcount(mask) <= radius), ascending for determinism."""
+    return sorted(m for m in range(1 << nbits) if bin(m).count("1") <= radius)
+
+
+def _lsh_candidates(
+    emb: DataFrame, buckets: DataFrame, query_pred: str, radius: int
+) -> DataFrame:
+    """(query_id, neighbor_id): every corpus vector sharing a bucket,
+    in some table, with a bucket within hamming ``radius`` of the
+    query's (``lsh_buckets`` relation ``buckets``; radius 0 is the
+    single probe). Only the query side is exploded, to
+    ``len(_probe_masks(radius))`` probes per table; the corpus-side
+    index is untouched at every radius."""
+    probes = F.array(
+        *[
+            F.col("bucket").bitwiseXOR(F.lit(m)).cast("long")
+            for m in _probe_masks(radius)
+        ]
+    )
+    q_buckets = buckets.join(
+        emb.filter(query_pred).select("vec_id"), "vec_id", "semi"
+    ).select(
+        F.col("vec_id").alias("query_id"), "table", F.explode(probes).alias("bucket")
+    )
+    return (
+        q_buckets.join(
+            buckets.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket"),
+            ["table", "bucket"],
+        )
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
+
+
+def lsh_topk(
+    emb: DataFrame,
+    k: int = 5,
+    query_pred: str = "vec_id < 20",
+    dim: int = 64,
+) -> DataFrame:
+    """ANN top-k: same-bucket candidates over L tables → exact cosine
+    re-rank. The candidate join is (table, bucket)-keyed, so at scale
+    each query only meets ~|N| / 2^nbits · L candidates.
+
+    Multi-probe: each query also probes every bucket at hamming
+    distance 1 from its bucket in each table (``_lsh_candidates`` at
+    radius 1) — the standard multi-probe LSH trick (Lv et al., VLDB
+    2007): a true neighbor that disagrees on exactly one hyperplane is
+    still found. Per-table hit probability rises from p^nbits to
+    p^nbits + nbits·p^(nbits-1)(1-p), which on this fixture lifts
+    top-5 recall from ~0.7 to ≥0.95 while multiplying only the QUERY
+    side of the candidate join by (nbits+1) — the corpus-side index is
+    untouched, so the scale story (bucket-keyed join, no n² pass) is
+    unchanged. ``lsh_probe_curve`` measures the other radii.
+
+    The bucket relation feeds BOTH sides of the candidate join (query
+    semi-join + corpus side); the two subtrees differ by projection so
+    exchange reuse can't unify them — persist so the mapInPandas
+    hyperplane pass over the corpus runs once, not twice."""
+    buckets = lsh_buckets(emb, dim).transform(tracked_persist)
+    return _refine_topk(emb, _lsh_candidates(emb, buckets, query_pred, 1), k)
 
 
 IVF_CENTROIDS = 16
@@ -449,20 +476,7 @@ def ivf_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    pairs = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND).alias("sim"),
-        )
-    )
-    return _ranked_topk(pairs, k)
+    return _refine_topk(emb, cand, k)
 
 
 # ---------------------------------------------------------------------------
@@ -648,20 +662,7 @@ def pq_topk(
         .filter(F.col("arnk") <= refine)
         .select("query_id", "neighbor_id")
     )
-    q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    refined = (
-        shortlist.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND).alias("sim"),
-        )
-    )
-    return _ranked_topk(refined, k)
+    return _refine_topk(emb, shortlist, k)
 
 
 NEAR_PAIRS_BLOCK_ROWS = 2048
@@ -1056,12 +1057,13 @@ def hybrid_rrf_topk(
 def hybrid_rrf_topk_sql(
     k: int = RRF_TOPK, list_k: int = RRF_LIST_K, c: int = RRF_C
 ) -> str:
+    from .oracle_text import brute_topk_sql
     from .text import bm25_topk_sql
 
     return f"""
     WITH dense AS (
         SELECT neighbor_id AS doc_id, rnk AS rnk_dense
-        FROM ({ORACLE_BRUTE_TOPK_TEMPLATE.format(k=list_k, query_pred="vec_id = 0")})
+        FROM ({brute_topk_sql(k=list_k, query_pred="vec_id = 0")})
     ),
     sparse0 AS ({bm25_topk_sql(k=list_k)}),
     sparse AS (
@@ -1080,27 +1082,6 @@ def hybrid_rrf_topk_sql(
     SELECT doc_id, rrf, rnk_dense, rnk_sparse
     FROM fused ORDER BY rrf DESC, doc_id ASC LIMIT {k}
     """
-
-
-# the brute-topk oracle body, parameterized (mirrors
-# oracle_text.brute_topk_sql but inlinable as a subquery)
-ORACLE_BRUTE_TOPK_TEMPLATE = """
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    pairs AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(list_cosine_similarity(q.e, c.e), 6) AS sim
-        FROM (SELECT * FROM v WHERE {query_pred}) q
-        JOIN v c ON q.vec_id <> c.vec_id
-    ),
-    ranked AS (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (
-                   PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC
-               ) AS rnk
-        FROM pairs
-    )
-    SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {k}
-"""
 
 
 def label_centroid_stats(emb: DataFrame) -> DataFrame:
@@ -1291,44 +1272,16 @@ def _lloyd_relations(
 
 
 def distributed_kmeans_sql(k: int = KMEANS_K, iters: int = KMEANS_ITERS) -> str:
-    """Unrolled-CTE twin: the identical recurrence as cent0..centN."""
-    assign = (
-        "SELECT vec_id, cid, d2 FROM ("
-        "SELECT vec_id, cid, d2, row_number() OVER ("
-        "PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn "
-        "FROM (SELECT e.vec_id, c.cid, sum((e.val - c.c) * (e.val - c.c)) AS d2 "
-        "FROM elems e JOIN cent{i} c ON e.dim = c.dim "
-        "GROUP BY e.vec_id, c.cid)) WHERE rn = 1"
-    )
-    steps = []
-    for i in range(iters):
-        steps.append(f"a{i} AS ({assign.format(i=i)})")
-        steps.append(
-            f"""cent{i + 1} AS (
-        SELECT c.cid, c.dim, coalesce(m.m, c.c) AS c
-        FROM cent{i} c
-        LEFT JOIN (
-            SELECT a.cid, e.dim, avg(e.val) AS m
-            FROM a{i} a JOIN elems e ON a.vec_id = e.vec_id
-            GROUP BY a.cid, e.dim
-        ) m ON c.cid = m.cid AND c.dim = m.dim
-    )"""
-        )
-    chain = ",\n    ".join(steps)
+    """Unrolled-CTE twin: the identical recurrence as cent0..centN
+    (oracle_text._kmeans_cte)."""
+    from .oracle_text import _kmeans_cte
+
     return f"""
-    WITH elems AS (
-        SELECT vec_id, t.i - 1 AS dim, embedding[t.i]::DOUBLE AS val
-        FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-    ),
-    cent0 AS (
-        SELECT vec_id AS cid, dim, val AS c FROM elems WHERE vec_id < {k}
-    ),
-    {chain},
-    final AS ({assign.format(i=iters)})
+    WITH {_kmeans_cte((k,), iters)}
     SELECT cid AS cluster_id,
            CAST(count(*) AS BIGINT) AS n_members,
            round(sum(d2), 6) AS inertia
-    FROM final
+    FROM final_{k}
     GROUP BY cid
     """
 
@@ -2335,45 +2288,16 @@ def kmeans_silhouette_sql(k: int = KMEANS_K, iters: int = KMEANS_ITERS) -> str:
     """Twin of kmeans_silhouette: the distributed_kmeans_sql unrolled
     recurrence + a rn ≤ 2 final assignment and the identical nano
     silhouette lattice."""
-    assign = (
-        "SELECT vec_id, cid, d2, rn FROM ("
-        "SELECT vec_id, cid, d2, row_number() OVER ("
-        "PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn "
-        "FROM (SELECT e.vec_id, c.cid, sum((e.val - c.c) * (e.val - c.c)) AS d2 "
-        "FROM elems e JOIN cent{i} c ON e.dim = c.dim "
-        "GROUP BY e.vec_id, c.cid)) WHERE rn <= {top}"
-    )
-    steps = []
-    for i in range(iters):
-        steps.append(f"a{i} AS ({assign.format(i=i, top=1)})")
-        steps.append(
-            f"""cent{i + 1} AS (
-        SELECT c.cid, c.dim, coalesce(m.m, c.c) AS c
-        FROM cent{i} c
-        LEFT JOIN (
-            SELECT a.cid, e.dim, avg(e.val) AS m
-            FROM a{i} a JOIN elems e ON a.vec_id = e.vec_id
-            GROUP BY a.cid, e.dim
-        ) m ON c.cid = m.cid AND c.dim = m.dim
-    )"""
-        )
-    chain = ",\n    ".join(steps)
+    from .oracle_text import _kmeans_cte
+
     return f"""
-    WITH elems AS (
-        SELECT vec_id, t.i - 1 AS dim, embedding[t.i]::DOUBLE AS val
-        FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-    ),
-    cent0 AS (
-        SELECT vec_id AS cid, dim, val AS c FROM elems WHERE vec_id < {k}
-    ),
-    {chain},
-    two AS ({assign.format(i=iters, top=2)}),
+    WITH {_kmeans_cte((k,), iters, top=2)},
     per_vec AS (
         SELECT vec_id,
                min(CASE WHEN rn = 1 THEN cid END) AS own,
                min(CASE WHEN rn = 1 THEN d2 END) AS a2,
                min(CASE WHEN rn = 2 THEN d2 END) AS b2
-        FROM two GROUP BY vec_id
+        FROM final_{k} GROUP BY vec_id
     ),
     scored AS (
         SELECT own,
@@ -3695,51 +3619,18 @@ def kmeans_elbow_sql(
     ks: tuple[int, ...] = KMEANS_ELBOW_KS, iters: int = KMEANS_ITERS
 ) -> str:
     """Twin: the distributed_kmeans recurrence unrolled once per k
-    (CTE names suffixed _k so the arms share one statement and the one
-    elems CTE), total-inertia fold per arm."""
-    assign = (
-        "SELECT vec_id, cid, d2 FROM ("
-        "SELECT vec_id, cid, d2, row_number() OVER ("
-        "PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS rn "
-        "FROM (SELECT e.vec_id, c.cid, "
-        "sum((e.val - c.c) * (e.val - c.c)) AS d2 "
-        "FROM elems e JOIN cent{i}_{k} c ON e.dim = c.dim "
-        "GROUP BY e.vec_id, c.cid)) WHERE rn = 1"
+    (oracle_text._kmeans_cte: CTE names suffixed _k so the arms share
+    one statement and the one elems CTE), total-inertia fold per arm."""
+    from .oracle_text import _kmeans_cte
+
+    union = "\n    UNION ALL\n    ".join(
+        f"SELECT CAST({k} AS BIGINT) AS k, "
+        f"CAST(count(*) AS BIGINT) AS n_vectors, "
+        f"round(sum(d2), 6) AS inertia_r6 FROM final_{k}"
+        for k in ks
     )
-    ctes, arms = [], []
-    for k in ks:
-        ctes.append(
-            f"""cent0_{k} AS (
-        SELECT vec_id AS cid, dim, val AS c FROM elems WHERE vec_id < {k}
-    )"""
-        )
-        for i in range(iters):
-            ctes.append(f"a{i}_{k} AS ({assign.format(i=i, k=k)})")
-            ctes.append(
-                f"""cent{i + 1}_{k} AS (
-        SELECT c.cid, c.dim, coalesce(m.m, c.c) AS c
-        FROM cent{i}_{k} c
-        LEFT JOIN (
-            SELECT a.cid, e.dim, avg(e.val) AS m
-            FROM a{i}_{k} a JOIN elems e ON a.vec_id = e.vec_id
-            GROUP BY a.cid, e.dim
-        ) m ON c.cid = m.cid AND c.dim = m.dim
-    )"""
-            )
-        ctes.append(f"final_{k} AS ({assign.format(i=iters, k=k)})")
-        arms.append(
-            f"SELECT CAST({k} AS BIGINT) AS k, "
-            f"CAST(count(*) AS BIGINT) AS n_vectors, "
-            f"round(sum(d2), 6) AS inertia_r6 FROM final_{k}"
-        )
-    chain = ",\n    ".join(ctes)
-    union = "\n    UNION ALL\n    ".join(arms)
     return f"""
-    WITH elems AS (
-        SELECT vec_id, t.i - 1 AS dim, embedding[t.i]::DOUBLE AS val
-        FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
-    ),
-    {chain}
+    WITH {_kmeans_cte(ks, iters)}
     {union}
     ORDER BY k
     """
@@ -3752,6 +3643,27 @@ def kmeans_elbow_sql(
 RP_CURVE_OUTS = (2, 4, 8)
 RP_CURVE_K = 5
 RP_CURVE_PRED = "vec_id < 16"
+
+
+def _recall_bp_fold(
+    approx: DataFrame, truth: DataFrame, k: int, *head
+) -> DataFrame:
+    """One-row recall fold of an approx top-k against the exact top-k
+    ``truth`` (both ``(query_id, neighbor_id, …)``): the ``head``
+    columns, then ``n_queries`` (distinct queries in ``approx``),
+    ``hits`` and ``recall_bp`` = hits·10^4 / (n_queries·k), rounded
+    half up."""
+    n_q = F.count_distinct("query_id")
+    hit = F.coalesce(F.col("in_truth"), F.lit(0))
+    flags = truth.select("query_id", "neighbor_id", F.lit(1).alias("in_truth"))
+    return approx.join(flags, ["query_id", "neighbor_id"], "left").agg(
+        *head,
+        n_q.cast("long").alias("n_queries"),
+        F.sum(hit).cast("long").alias("hits"),
+        F.floor(F.sum(hit) * 10000.0 / (n_q * k) + F.lit(0.5))
+        .cast("long")
+        .alias("recall_bp"),
+    )
 
 
 def ann_recall_vs_dim(
@@ -3780,13 +3692,7 @@ def ann_recall_vs_dim(
     never corpus x corpus) + one top-k window and one hit-count fold.
     Output: one row per width.
     """
-    from ..functions import cosine
-
-    truth = brute_topk(emb, k, query_pred).select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_truth")
-    )
-    n_q = F.count_distinct("query_id")
-
+    truth = brute_topk(emb, k, query_pred)
     arms = []
     for out in outs:
         signs = _rp_signs(64, out)
@@ -3821,23 +3727,12 @@ def ann_recall_vs_dim(
                 F.round(cosine(F.col("qp"), F.col("cp")), ROUND).alias("sim"),
             )
         )
-        approx = _ranked_topk(pairs, k)
-        hits = approx.join(truth, ["query_id", "neighbor_id"], "left")
         arms.append(
-            hits.agg(
+            _recall_bp_fold(
+                _ranked_topk(pairs, k),
+                truth,
+                k,
                 F.lit(int(out)).cast("long").alias("out_dim"),
-                n_q.cast("long").alias("n_queries"),
-                F.sum(F.coalesce(F.col("in_truth"), F.lit(0)))
-                .cast("long")
-                .alias("hits"),
-                F.floor(
-                    F.sum(F.coalesce(F.col("in_truth"), F.lit(0)))
-                    * 10000.0
-                    / (n_q * k)
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("recall_bp"),
             )
         )
     res = arms[0]
@@ -3853,7 +3748,10 @@ def ann_recall_vs_dim_sql(
 ) -> str:
     """Twin: per width, the VALUES-literal matrix + exact integer
     projection folded to an ordered double list, DuckDB's cosine on
-    the same doubles, same rank/tie-break, same hit fold."""
+    the same doubles, the shared top-k tail and brute truth
+    (oracle_text), same hit fold."""
+    from .oracle_text import _ranked_topk_sql, brute_topk_sql
+
     ctes, arms = [], []
     for out in outs:
         signs = _rp_signs(64, out)
@@ -3879,53 +3777,21 @@ def ann_recall_vs_dim_sql(
         FROM (SELECT * FROM p{out} WHERE {query_pred}) q
         JOIN p{out} c ON q.vec_id <> c.vec_id
     ),
-    ap{out} AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY sim DESC, neighbor_id ASC
-                   ) AS rnk
-            FROM pr{out}
-        ) WHERE rnk <= {k}
-    )""")
-        arms.append(f"""
-    SELECT CAST({out} AS BIGINT) AS out_dim,
+    ap{out} AS ({_ranked_topk_sql(f"pr{out}", k)})""")
+        head = f"""CAST({out} AS BIGINT) AS out_dim,
            (SELECT CAST(count(DISTINCT query_id) AS BIGINT) FROM ap{out})
-               AS n_queries,
-           CAST(coalesce(sum(CASE WHEN t.query_id IS NOT NULL
-                             THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-           CAST(floor(coalesce(sum(CASE WHEN t.query_id IS NOT NULL
-                               THEN 1 ELSE 0 END), 0) * 10000.0
-                / ((SELECT count(DISTINCT query_id) FROM ap{out}) * {k})
-                + 0.5) AS BIGINT) AS recall_bp
-    FROM ap{out} a
-    LEFT JOIN truth t
-      ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id""")
+               AS n_queries"""
+        arms.append(_recall_bp_arm_sql(f"ap{out}", k, head))
     chain = ",\n    ".join(ctes)
     union = "\n    UNION ALL\n    ".join(arms)
     return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    el AS (
+    WITH el AS (
         SELECT vec_id, t.i - 1 AS dim,
                CAST(floor(embedding[t.i]::DOUBLE * 1e9) AS BIGINT) AS qv
         FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
     ),
-    tp AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(list_cosine_similarity(q.e, c.e), 6) AS sim
-        FROM (SELECT * FROM v WHERE {query_pred}) q
-        JOIN v c ON q.vec_id <> c.vec_id
-    ),
     truth AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY sim DESC, neighbor_id ASC
-                   ) AS rnk
-            FROM tp
-        ) WHERE rnk <= {k}
+        SELECT query_id, neighbor_id FROM ({brute_topk_sql(k, query_pred)})
     ),
     {chain}
     {union}
@@ -3938,12 +3804,6 @@ def ann_recall_vs_dim_sql(
 # ---------------------------------------------------------------------------
 
 LSH_PROBE_RADII = (0, 1, 2)
-
-
-def _probe_masks(radius: int, nbits: int = LSH_NBITS) -> list[int]:
-    """XOR masks for all buckets within hamming ``radius`` of the
-    query bucket (popcount(mask) <= radius), ascending for determinism."""
-    return sorted(m for m in range(1 << nbits) if bin(m).count("1") <= radius)
 
 
 def lsh_probe_curve(
@@ -3969,80 +3829,23 @@ def lsh_probe_curve(
 
     Output: (radius, n_probes_per_table, n_candidates, recall_bp).
     """
-    from ..functions import cosine
-
     buckets = lsh_buckets(emb, dim).transform(tracked_persist)
-    truth = brute_topk(emb, k, query_pred).select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_truth")
-    )
-    q_base = buckets.join(
-        emb.filter(query_pred).select("vec_id"), "vec_id", "semi"
-    ).select(F.col("vec_id").alias("query_id"), "table", "bucket")
-    qv = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    n_q = F.count_distinct("query_id")
-
+    truth = brute_topk(emb, k, query_pred)
     arms = []
     for r in radii:
-        masks = _probe_masks(r)
-        probes = F.array(
-            *[F.col("bucket").bitwiseXOR(F.lit(m)).cast("long") for m in masks]
-        )
-        qb = q_base.select(
-            "query_id", "table", F.explode(probes).alias("bucket")
-        )
-        cand = (
-            qb.join(
-                buckets.select(
-                    F.col("vec_id").alias("neighbor_id"), "table", "bucket"
-                ),
-                ["table", "bucket"],
-            )
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id")
-            .distinct()
-        )
-        pairs = (
-            cand.join(F.broadcast(qv), "query_id")
-            .join(cv, "neighbor_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine(F.col("q_emb"), F.col("c_emb")), ROUND).alias(
-                    "sim"
-                ),
-            )
-        )
-        topk = _ranked_topk(pairs, k)
-        scored = topk.join(truth, ["query_id", "neighbor_id"], "left")
-        n_cand = cand.agg(
-            F.count(F.lit(1)).cast("long").alias("nc")
-        )
+        cand = _lsh_candidates(emb, buckets, query_pred, r)
+        n_cand = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
         arms.append(
-            scored.agg(
+            _recall_bp_fold(
+                _refine_topk(emb, cand, k),
+                truth,
+                k,
                 F.lit(int(r)).cast("long").alias("radius"),
-                F.lit(len(masks)).cast("long").alias("n_probes_per_table"),
-                F.sum(F.coalesce(F.col("in_truth"), F.lit(0)))
-                .cast("long")
-                .alias("hits"),
-                F.floor(
-                    F.sum(F.coalesce(F.col("in_truth"), F.lit(0)))
-                    * 10000.0
-                    / (n_q * k)
-                    + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("recall_bp"),
-            ).crossJoin(F.broadcast(n_cand)).select(
-                "radius",
-                "n_probes_per_table",
-                F.col("nc").alias("n_candidates"),
-                "hits",
-                "recall_bp",
+                F.lit(len(_probe_masks(r))).cast("long").alias("n_probes_per_table"),
+            )
+            .crossJoin(F.broadcast(n_cand))
+            .select(
+                "radius", "n_probes_per_table", "n_candidates", "hits", "recall_bp"
             )
         )
     res = arms[0]
@@ -4057,92 +3860,46 @@ def lsh_probe_curve_sql(
     query_pred: str = "vec_id < 20",
     dim: int = 64,
 ) -> str:
-    """Twin: shared plane-literal bucket CTE + brute truth, one probe
-    list per radius, same rank/tie-break and folds."""
-    planes = _planes(dim)
-    rows = []
-    for t in range(LSH_TABLES):
-        for b in range(LSH_NBITS):
-            vec = ", ".join(repr(float(x)) for x in planes[t, b])
-            rows.append(f"({t}, {b}, [{vec}]::DOUBLE[])")
-    plane_values = ",\n        ".join(rows)
+    """Twin: the shared plane-literal bucket CTE with one probe arm per
+    radius (oracle_text._lsh_cte), the shared refine and brute truth,
+    same folds."""
+    from .oracle_text import _lsh_cte, _refine_topk_sql, brute_topk_sql
+
     ctes, arms = [], []
     for r in radii:
-        masks = _probe_masks(r)
-        probes = ", ".join(f"xor(b.bucket, {m})" for m in masks)
-        ctes.append(f"""qb{r} AS (
-        SELECT b.vec_id AS query_id, b.tbl, pr.bucket
-        FROM buckets b, unnest([{probes}]) AS pr(bucket)
-        WHERE b.vec_id IN (SELECT vec_id FROM v WHERE {query_pred})
-    ),
-    cand{r} AS (
-        SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
-        FROM qb{r} q JOIN buckets c
-          ON c.tbl = q.tbl AND c.bucket = q.bucket
-        WHERE c.vec_id <> q.query_id
-    ),
-    top{r} AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT p.query_id, p.neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY p.query_id
-                       ORDER BY round(list_cosine_similarity(qe.e, ce.e),
-                                      6) DESC,
-                                p.neighbor_id ASC
-                   ) AS rnk
-            FROM cand{r} p
-            JOIN v qe ON qe.vec_id = p.query_id
-            JOIN v ce ON ce.vec_id = p.neighbor_id
-        ) WHERE rnk <= {k}
-    )""")
-        arms.append(f"""
-    SELECT CAST({r} AS BIGINT) AS radius,
-           CAST({len(masks)} AS BIGINT) AS n_probes_per_table,
-           (SELECT CAST(count(*) AS BIGINT) FROM cand{r}) AS n_candidates,
-           CAST(coalesce(sum(CASE WHEN t.query_id IS NOT NULL
-                             THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-           CAST(floor(coalesce(sum(CASE WHEN t.query_id IS NOT NULL
-                               THEN 1 ELSE 0 END), 0) * 10000.0
-                / ((SELECT count(DISTINCT query_id) FROM top{r}) * {k})
-                + 0.5) AS BIGINT) AS recall_bp
-    FROM top{r} a
-    LEFT JOIN truth t
-      ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id""")
+        ctes.append(f"top{r} AS ({_refine_topk_sql(f'cand{r}', k)})")
+        head = f"""CAST({r} AS BIGINT) AS radius,
+           CAST({len(_probe_masks(r))} AS BIGINT) AS n_probes_per_table,
+           (SELECT CAST(count(*) AS BIGINT) FROM cand{r}) AS n_candidates"""
+        arms.append(_recall_bp_arm_sql(f"top{r}", k, head))
     chain = ",\n    ".join(ctes)
     union = "\n    UNION ALL\n    ".join(arms)
     return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    planes(tbl, bit, p) AS (VALUES
-        {plane_values}
-    ),
-    buckets AS (
-        SELECT v.vec_id, pl.tbl,
-               CAST(sum(CASE WHEN list_dot_product(v.e, pl.p) > 0
-                             THEN (1::BIGINT << pl.bit) ELSE 0 END)
-                    AS BIGINT) AS bucket
-        FROM v CROSS JOIN planes pl
-        GROUP BY v.vec_id, pl.tbl
-    ),
-    tp AS (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round(list_cosine_similarity(q.e, c.e), 6) AS sim
-        FROM (SELECT * FROM v WHERE {query_pred}) q
-        JOIN v c ON q.vec_id <> c.vec_id
-    ),
+    WITH {_lsh_cte(radii, query_pred, dim)},
     truth AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY query_id ORDER BY sim DESC,
-                                neighbor_id ASC
-                   ) AS rnk
-            FROM tp
-        ) WHERE rnk <= {k}
+        SELECT query_id, neighbor_id FROM ({brute_topk_sql(k, query_pred)})
     ),
     {chain}
     {union}
     ORDER BY radius
     """
+
+
+def _recall_bp_arm_sql(top: str, k: int, head: str) -> str:
+    """One arm of the recall-curve twins: the ``head`` columns, then
+    the hits of the approx top-k relation ``top`` in ``truth`` and the
+    recall in basis points, half-up over n_queries·k (the twin of
+    ``_recall_bp_fold``)."""
+    hits = "coalesce(sum(CASE WHEN t.query_id IS NOT NULL THEN 1 ELSE 0 END), 0)"
+    return f"""
+    SELECT {head},
+           CAST({hits} AS BIGINT) AS hits,
+           CAST(floor({hits} * 10000.0
+                / ((SELECT count(DISTINCT query_id) FROM {top}) * {k})
+                + 0.5) AS BIGINT) AS recall_bp
+    FROM {top} a
+    LEFT JOIN truth t
+      ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id"""
 
 
 # ---------------------------------------------------------------------------

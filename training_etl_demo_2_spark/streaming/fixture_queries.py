@@ -36,40 +36,44 @@ from pyspark.sql import functions as F
 
 from training_etl_demo_2_spark.io import _normalize_ts, load_tables
 
-# Probed file-source schemas per (appId, sf_dir): the on-disk encoding of
-# events.ts has varied across fixture generations (TIMESTAMP(NANOS) read
-# as long via nanosAsLong, vs timestamp[us] read as TIMESTAMP_NTZ), so
-# the stream source schema is derived from a one-time batch read of the
-# same file instead of being hard-coded.
-_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
+# Probed file-source schemas per (appId, sf_dir, table): the on-disk
+# encoding of events.ts has varied across fixture generations
+# (TIMESTAMP(NANOS) read as long via nanosAsLong, vs timestamp[us] read
+# as TIMESTAMP_NTZ), so the stream source schema is derived from a
+# one-time batch read of the same file instead of being hard-coded.
+_SCHEMA_CACHE: dict[tuple[str, str, str], "object"] = {}
 
 
-def read_events_stream_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the fixture events table (the local
-    stand-in for a Kafka topic), with the timestamp normalization
-    applied identically to the batch reader (io.load_tables /
-    io._normalize_ts) — whichever encoding the fixture ships."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    schema = _SCHEMA_CACHE.get(cache_key)
+def _read_stream_fixture(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over one fixture table (the local stand-in
+    for a Kafka topic), its schema probed once per application."""
+    key = (spark.sparkContext.applicationId, sf_dir, table)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         # The stream source requires a declared schema; probe the batch
         # reader's view of the file so the declared types match the
         # physical encoding exactly (a LONG declaration over a
         # timestamp[us] file silently mis-scales every value).
+        path = os.path.join(sf_dir, f"{table}.parquet")
         schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[cache_key] = schema
-    # The fixture is a single file, and the file stream source requires a
-    # directory path: stream the sf_dir with a glob filter selecting just
-    # the events table.
-    stream = (
+        _SCHEMA_CACHE[key] = schema
+    # Each fixture table is a single file, and the file stream source
+    # requires a directory path: stream the sf_dir with a glob filter
+    # selecting just this table.
+    return (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir)
     )
-    return _normalize_ts(stream, "ts")
+
+
+def read_events_stream_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events stream, with the timestamp normalization applied
+    identically to the batch reader (io.load_tables /
+    io._normalize_ts) — whichever encoding the fixture ships."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return _normalize_ts(_read_stream_fixture(spark, sf_dir, "events"), "ts")
 
 
 # Bounded-fixture replays run with a small state-partition count: every
@@ -441,23 +445,6 @@ STREAM_USER_NATION_ORACLE = """
 """
 
 
-def _read_documents_stream_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the fixture documents table (the
-    batch-arrival corpus feed); schema probed from the batch reader,
-    same pattern as the events stream source."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "documents")
-    schema = _SCHEMA_CACHE.get(cache_key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[cache_key] = schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def stream_exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup: the incremental form of
     ``dedup.exact_dedup_groups`` — documents arrive as a stream, state
@@ -474,7 +461,7 @@ def stream_exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions import normalize_text, rolling_hash
 
-    docs = _read_documents_stream_fixture(spark, sf_dir)
+    docs = _read_stream_fixture(spark, sf_dir, "documents")
     agg = (
         docs.select(
             "doc_id", rolling_hash(normalize_text("text")).alias("fp")
@@ -761,7 +748,7 @@ def stream_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch), so update mode needs no final-state selection."""
     from .stateful import pack_stream
 
-    docs = _read_documents_stream_fixture(spark, sf_dir)
+    docs = _read_stream_fixture(spark, sf_dir, "documents")
     out = pack_stream(docs, budget=256, n_groups=8)
     _replay_to_table(out, "gate_stream_pack", output_mode="update")
     return spark.table("gate_stream_pack")
@@ -813,7 +800,7 @@ def stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = banded(corpus, "doc_old", "hb").transform(tracked_persist)
 
     delivery = (
-        _read_documents_stream_fixture(spark, sf_dir)
+        _read_stream_fixture(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 2 == 1)
         .select("doc_id", "text")
     )
@@ -848,7 +835,7 @@ def stream_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions import explode_words
 
-    docs = _read_documents_stream_fixture(spark, sf_dir)
+    docs = _read_stream_fixture(spark, sf_dir, "documents")
     agg = (
         docs.select(explode_words("text", " ").alias("word"))
         .groupBy("word")
@@ -871,7 +858,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.text import gopher_quality_rules
 
-    docs = _read_documents_stream_fixture(spark, sf_dir)
+    docs = _read_stream_fixture(spark, sf_dir, "documents")
     flags = gopher_quality_rules(docs)
     fail = lambda c: F.sum((~F.col(c)).cast("long")).cast("long")
     agg = flags.agg(
@@ -917,7 +904,7 @@ def stream_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.text import blocklist_hits
 
-    docs = _read_documents_stream_fixture(spark, sf_dir)
+    docs = _read_stream_fixture(spark, sf_dir, "documents")
     agg = docs.select(blocklist_hits("text").alias("hits")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum((F.col("hits") > 0).cast("long")).cast("long").alias(
