@@ -45,18 +45,10 @@ def test_second_sweep_cycle_compiles_nothing(spark, sf_dir):
             compiles[name] = codegen_compiles(spark) - before
         return compiles
 
-    # With adaptive execution, the build side of langid_kappa's
-    # broadcast join depends on which of its query stages finishes
-    # first, so about every other call plans (and rightly compiles)
-    # different code. Static plans make every class of the second cycle
-    # one that the first cycle compiled.
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        cycle()
-        assert codegen_compiles(spark) > 0  # the counter sees compiles
-        second = cycle()
-    finally:
-        spark.conf.set(key, prev)
+    # Adaptive execution stays on, as in a vanilla session: every plan
+    # of the list is the same on each call, so every class of the
+    # second cycle is one that the first cycle compiled.
+    cycle()
+    assert codegen_compiles(spark) > 0  # the counter sees compiles
+    second = cycle()
     assert {n: c for n, c in second.items() if c} == {}

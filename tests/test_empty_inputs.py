@@ -328,19 +328,38 @@ def empty_sf_dir(tmp_path_factory, sf_dir):
     return str(out)
 
 
-@pytest.mark.parametrize("name", RANK_CONSUMERS)
-def test_rank_consumer_on_empty_tables_matches_twin(spark, empty_sf_dir, name):
+def _assert_matches_twin(spark, sf_dir, name):
     import __spark_entry__ as entrymod
 
     from tools import check_oracle
 
-    con = check_oracle.duck_connect(empty_sf_dir)
+    con = check_oracle.duck_connect(sf_dir)
     problems = check_oracle.compare_one(
         spark,
         con,
         name,
         entrymod.queries()[name],
         entrymod.oracle_sql()[name],
-        empty_sf_dir,
+        sf_dir,
     )
     assert problems == [], problems
+
+
+@pytest.mark.parametrize("name", RANK_CONSUMERS)
+def test_rank_consumer_on_empty_tables_matches_twin(spark, empty_sf_dir, name):
+    _assert_matches_twin(spark, empty_sf_dir, name)
+
+
+# Ratio and filter queries on the same 0-row tables: a ratio over no
+# rows is NULL on both engines, never DIVIDE_BY_ZERO.
+RATIO_QUERIES = [
+    "dedup_funnel_report",
+    "dictionary_encode_audit",
+    "langid_kappa",
+    "clean_corpus",
+]
+
+
+@pytest.mark.parametrize("name", RATIO_QUERIES)
+def test_ratio_query_on_empty_tables_matches_twin(spark, empty_sf_dir, name):
+    _assert_matches_twin(spark, empty_sf_dir, name)

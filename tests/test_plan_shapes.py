@@ -80,8 +80,6 @@ NESTED_LOOP_OK = {
     # margins × margins grid (|lang|·|source| cells, metadata-sized)
     # plus the ONE-ROW totals broadcast
     "lang_source_chi2",
-    # ONE-ROW totals crossJoins (n_agree/n_total × Σrt·ct)
-    "langid_kappa",
     # |thresholds|×|bins| theta join, both metadata-sized
     "quality_threshold_curve",
     # ONE-ROW basket-count broadcast (the lift denominator's N)
@@ -339,6 +337,19 @@ def test_asof_plan_is_single_exchange_window(plans):
     assert "Window" in p and "Union" in p
     # no join node at all: the as-of is the union+window carry
     assert "Join" not in p
+
+
+def test_langid_kappa_is_one_linear_fold(plans):
+    """The confusion margins fold in two aggregates: no join back of
+    margins onto totals, no persisted confusion relation."""
+    p = plans["langid_kappa"]
+    assert "Join" not in p and "InMemoryTableScan" not in p
+
+
+def test_clean_corpus_filters_quality_in_place(plans):
+    """The quality gate is a filter on the one documents scan; the only
+    semi join is dedup's keep-first."""
+    assert plans["clean_corpus"].count("Join type: LeftSemi") == 1
 
 
 def test_banded_range_join_is_equi_join(plans):

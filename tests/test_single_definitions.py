@@ -1,5 +1,6 @@
-"""Source-scan guard: each shared vector-search stage and the one
-distributed rank keep a single definition under ``operators/``.
+"""Source-scan guard: each shared vector-search stage, the quality
+score and the one distributed rank keep a single definition under
+``operators/``.
 
 No Spark: the test reads the operator sources, collapses whitespace and
 counts each pinned definition. A pasted second copy of a stage (the
@@ -32,6 +33,10 @@ SINGLE = {
     "twin LSH plane table": re.escape("planes(tbl, bit, p) AS (VALUES"),
     "twin unit-quantized prelude": re.escape("nrm AS MATERIALIZED"),
     "engine exact re-rank join": re.escape(".join(F.broadcast(q"),
+    # the composite quality score: text_quality reports it and
+    # clean_corpus filters on it, on each side
+    "engine quality score": re.escape("0.4 * F.least(n_tokens"),
+    "twin quality score": re.escape("0.4 * least(n_tokens"),
 }
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from training_etl_demo_2_spark.operators import text
 
 
@@ -396,6 +398,42 @@ def test_langid_kappa_perfect_and_chance(spark):
     assert r.n == 3
     assert r.p_o == 1.0
     assert r.kappa == 1.0
+
+
+EN = "the of and to in is that it was for"
+KAPPA_CORPORA = {
+    # p_e = 1: kappa's denominator is 0, so kappa is NULL
+    "one_label": [(1, EN, "en"), (2, EN, "en")],
+    # NULL labels count in n but match no label in the margins
+    "nulls": [
+        (1, EN, "en"),
+        (2, "el la de que y en un ser se no", "es"),
+        (3, EN, None),
+        (4, None, "fr"),
+        (5, None, None),
+        (6, "le de un être et à il avoir ne je", "en"),
+    ],
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(KAPPA_CORPORA))
+def test_langid_kappa_matches_twin_on_edge_corpora(spark, corpus):
+    import duckdb
+
+    from training_etl_demo_2_spark.operators.text import (
+        langid_kappa,
+        langid_kappa_sql,
+    )
+
+    rows = KAPPA_CORPORA[corpus]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    got = [tuple(r) for r in langid_kappa(docs).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR, lang VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    assert got == con.sql(langid_kappa_sql()).fetchall()
+    if corpus == "one_label":
+        assert got == [(2, 1.0, 1.0, None)]
 
 
 def test_quality_threshold_curve_monotone(tables):

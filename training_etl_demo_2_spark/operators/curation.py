@@ -3401,16 +3401,14 @@ def cluster_safe_split(
     leaked_pairs), where leaked = verified near-dup pairs whose
     endpoints fall in different splits.
 
-    Scale shape: one LSH pair pass (banded candidates, persisted —
-    consumed by both the closure and the leak count), the iterative
-    min-label closure, then doc-id-keyed label joins and a 2-strategy
-    fold; nothing all-pairs, output 2 rows.
+    Scale shape: one LSH pair pass (banded candidates, persisted by
+    ``minhash_lsh_pairs`` — consumed by both the closure and the leak
+    count), the iterative min-label closure, then doc-id-keyed label
+    joins and a 2-strategy fold; nothing all-pairs, output 2 rows.
     """
     from .dedup import connected_components, minhash_lsh_pairs
 
-    pairs = tracked_persist(
-        minhash_lsh_pairs(df, text_col, threshold=threshold)
-    )
+    pairs = minhash_lsh_pairs(df, text_col, threshold=threshold)
     clusters = connected_components(pairs)
     keyed = (
         df.select("doc_id")

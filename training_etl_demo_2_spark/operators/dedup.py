@@ -3609,11 +3609,12 @@ def dedup_funnel_report(t: dict[str, DataFrame]) -> DataFrame:
                 "tier",
                 "n_docs",
                 "n_tokens",
-                F.expr("CAST(n_docs * 10000 DIV r_docs AS BIGINT)").alias(
-                    "docs_bp"
-                ),
+                # 0 raw docs -> NULL, as in the twin (not DIVIDE_BY_ZERO)
                 F.expr(
-                    "CAST(n_tokens * 10000 DIV r_toks AS BIGINT)"
+                    "CAST(n_docs * 10000 DIV nullif(r_docs, 0) AS BIGINT)"
+                ).alias("docs_bp"),
+                F.expr(
+                    "CAST(n_tokens * 10000 DIV nullif(r_toks, 0) AS BIGINT)"
                 ).alias("tokens_bp"),
             )
         )
@@ -3688,30 +3689,30 @@ def dedup_funnel_report_sql() -> str:
     ),
     spans AS ({remove_duplicate_spans_sql()})
     SELECT 'raw' AS tier, r_docs AS n_docs, r_toks AS n_tokens,
-           CAST(10000 AS BIGINT) AS docs_bp, CAST(10000 AS BIGINT) AS tokens_bp
+           CAST(r_docs * 10000 // r_docs AS BIGINT) AS docs_bp,
+           CAST(r_toks * 10000 // r_toks AS BIGINT) AS tokens_bp
     FROM raw
     UNION ALL
     SELECT 'exact', CAST(count(*) AS BIGINT),
            CAST(sum(len(string_split(d.text, ' '))) AS BIGINT),
-           CAST(count(*) * 10000 // r.r_docs AS BIGINT),
-           CAST(sum(len(string_split(d.text, ' '))) * 10000 // r.r_toks
-               AS BIGINT)
+           CAST(count(*) * 10000 // (SELECT r_docs FROM raw) AS BIGINT),
+           CAST(sum(len(string_split(d.text, ' '))) * 10000
+                // (SELECT r_toks FROM raw) AS BIGINT)
     FROM documents d JOIN exact_keep k ON k.doc_id = d.doc_id
-    CROSS JOIN raw r GROUP BY r.r_docs, r.r_toks
     UNION ALL
     SELECT 'near_dup', CAST(count(*) AS BIGINT),
            CAST(sum(len(string_split(d.text, ' '))) AS BIGINT),
-           CAST(count(*) * 10000 // r.r_docs AS BIGINT),
-           CAST(sum(len(string_split(d.text, ' '))) * 10000 // r.r_toks
-               AS BIGINT)
+           CAST(count(*) * 10000 // (SELECT r_docs FROM raw) AS BIGINT),
+           CAST(sum(len(string_split(d.text, ' '))) * 10000
+                // (SELECT r_toks FROM raw) AS BIGINT)
     FROM documents d JOIN near_keep k ON k.doc_id = d.doc_id
-    CROSS JOIN raw r GROUP BY r.r_docs, r.r_toks
     UNION ALL
     SELECT 'span_dedup', CAST(count(*) AS BIGINT),
            CAST(sum(n_tokens - n_removed) AS BIGINT),
-           CAST(count(*) * 10000 // r.r_docs AS BIGINT),
-           CAST(sum(n_tokens - n_removed) * 10000 // r.r_toks AS BIGINT)
-    FROM spans CROSS JOIN raw r GROUP BY r.r_docs, r.r_toks
+           CAST(count(*) * 10000 // (SELECT r_docs FROM raw) AS BIGINT),
+           CAST(sum(n_tokens - n_removed) * 10000
+                // (SELECT r_toks FROM raw) AS BIGINT)
+    FROM spans
     """
 
 
@@ -3979,9 +3980,9 @@ def cluster_chain_audit(
     """
     d = t["documents"]
     pairs = minhash_lsh_pairs(d, text_col, n, threshold)
-    members = near_dup_clusters(d, text_col, n, threshold).transform(
-        tracked_persist
-    )
+    # near_dup_clusters' closure over these pairs: a second
+    # minhash_lsh_pairs call would persist the same plan twice
+    members = connected_components(pairs).transform(tracked_persist)
     sizes = members.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )

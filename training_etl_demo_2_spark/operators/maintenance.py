@@ -344,9 +344,9 @@ def dictionary_encode_audit(t: dict[str, DataFrame]) -> DataFrame:
     rep = outs[0]
     for o in outs[1:]:
         rep = rep.unionByName(o)
-    ratio = F.col("n_distinct").cast("double") / F.col("n_rows").cast(
-        "double"
-    )
+    # try_divide: a 0-row table gives NULL ratios, as in the twin
+    n_rows = F.col("n_rows").cast("double")
+    ratio = F.try_divide(F.col("n_distinct").cast("double"), n_rows)
     return rep.select(
         "table_name",
         "column_name",
@@ -354,9 +354,7 @@ def dictionary_encode_audit(t: dict[str, DataFrame]) -> DataFrame:
         "n_distinct",
         F.round(ratio, 6).alias("distinct_ratio_r6"),
         F.round(
-            F.col("total_bytes").cast("double")
-            / F.col("n_rows").cast("double"),
-            2,
+            F.try_divide(F.col("total_bytes").cast("double"), n_rows), 2
         ).alias("avg_len_r2"),
         (ratio < DICT_RATIO_MAX).cast("int").alias("dict_recommended"),
     ).orderBy("table_name", "column_name")

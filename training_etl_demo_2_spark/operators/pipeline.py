@@ -6,12 +6,12 @@ the north-star operators exist FOR; registering it as a single query
 proves the pieces compose without materialization barriers between
 stages.
 
-Physical shape at 100 TB: the quality features are narrow per-row
-expressions fused into the scan stage; the dedup keep-first is one
-hash-agg shuffle on the 8-byte content fingerprint plus a semi join
-back — so the whole cleaning pass costs ~1 shuffle of (doc_id, fp)
-pairs over the filtered (smaller) corpus, with blobs/text never
-shuffled (only doc_ids and hashes move).
+Physical shape at 100 TB: the quality score is a narrow per-row
+filter fused into the one scan (no semi join back); the dedup
+keep-first is one hash-agg shuffle on the 8-byte content fingerprint
+plus a semi join back — so the whole cleaning pass costs ~1 shuffle of
+(doc_id, fp) pairs over the filtered (smaller) corpus, with blobs/text
+never shuffled (only doc_ids and hashes move).
 """
 
 from __future__ import annotations
@@ -32,13 +32,7 @@ def clean_corpus(
     keep-first (min doc_id) representative of their normalized-text
     duplicate group among the quality survivors.
     """
-    docs = t["documents"]
-    good_ids = (
-        text.text_quality(docs)
-        .filter(F.col("quality_score") >= min_quality)
-        .select("doc_id")
-    )
-    good = docs.join(good_ids, "doc_id", "semi")
+    good = t["documents"].filter(text.quality_score() >= min_quality)
     survivors = dedup.drop_exact_duplicates(good)
     # no ORDER BY: the surviving-set contract is order-free, and a
     # cosmetic global sort is a full range exchange at scale

@@ -130,9 +130,8 @@ def doc_lang_consistency(
     )
 
 
-def text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Quality features: char/token counts, alpha & punctuation ratios,
-    stopword ratio, and a composite score in [0,1]."""
+def _quality_features(text_col: str) -> tuple[Column, ...]:
+    """Unrounded (n_chars, n_tokens, alpha, punct, stopword ratios)."""
     text = F.col(text_col)
     tokens = _tokens(text_col)
     n_chars = F.length(text)
@@ -142,15 +141,27 @@ def text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     sw = F.array(*[F.lit(w) for w in STOPWORDS_EN])
     n_stop = F.size(F.filter(tokens, lambda t: F.array_contains(sw, t)))
     safe = lambda num, den: F.when(den > 0, num.cast("double") / den).otherwise(0.0)
-    alpha_ratio = safe(n_alpha, n_chars)
-    punct_ratio = safe(n_punct, n_chars)
-    stop_ratio = safe(n_stop, n_tokens)
-    score = (
+    return (n_chars, n_tokens, safe(n_alpha, n_chars), safe(n_punct, n_chars),
+            safe(n_stop, n_tokens))
+
+
+def quality_score(text_col: str = "text") -> Column:
+    """The composite quality score in [0,1], rounded to 6 places: the
+    value ``text_quality`` reports and ``clean_corpus`` filters on."""
+    _, n_tokens, alpha_ratio, punct_ratio, stop_ratio = _quality_features(text_col)
+    return F.round(
         0.4 * F.least(n_tokens.cast("double") / 20.0, F.lit(1.0))
         + 0.3 * alpha_ratio
         + 0.2 * (1.0 - punct_ratio)
-        + 0.1 * F.least(stop_ratio * 5.0, F.lit(1.0))
+        + 0.1 * F.least(stop_ratio * 5.0, F.lit(1.0)),
+        6,
     )
+
+
+def text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Quality features: char/token counts, alpha & punctuation ratios,
+    stopword ratio, and a composite score in [0,1]."""
+    n_chars, n_tokens, alpha_ratio, punct_ratio, stop_ratio = _quality_features(text_col)
     return df.select(
         "doc_id",
         n_chars.alias("n_chars"),
@@ -158,7 +169,7 @@ def text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.round(alpha_ratio, 6).alias("alpha_ratio"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(score, 6).alias("quality_score"),
+        quality_score(text_col).alias("quality_score"),
     )
 
 
@@ -1314,41 +1325,41 @@ def langid_kappa(df: DataFrame, text_col: str = "text") -> DataFrame:
     subtracts the agreement a label-marginal-preserving random
     classifier would get). One row: (n, p_o, p_e, kappa).
 
-    All inputs are exact BIGINT confusion-matrix counts; the expected
-    agreement Σ row_k·col_k stays in exact integer arithmetic (products
-    ≤ N² — fine far past fixture scale; at corpus sizes where N² nears
-    2^63, divide each margin by N in double first) and only the final
-    ratios are doubles. Metadata-sized throughout after the one
-    confusion aggregate.
+    One linear fold: each prediction becomes two label rows,
+    (k=lang_actual, r=1, c=0, agree) and (k=lang_pred, r=0, c=1, 0);
+    a groupBy on k gives each label's margins rt and ct, and one global
+    aggregate gives n = Σrt, n_agree and Σ rt·ct over non-NULL k only
+    (a NULL label matches none, as in an equi-join of the margins). No
+    persist and no join; each map task ships at most |labels| partial
+    rows, so a skewed label mix cannot overload a task. Counts are exact
+    BIGINTs (Σ rt·ct ≤ N²; where N² nears 2^63, divide the margins by
+    N first). A one-label corpus has p_e = 1 and a NULL kappa.
     """
-    from pyspark import StorageLevel
-
-    # three lineage branches (row margins, col margins, totals) consume
-    # the confusion relation — one corpus classification pass, not three
-    conf = language_confusion(df, text_col).transform(tracked_persist)
-    rows = conf.groupBy("lang_actual").agg(F.sum("n").alias("rt"))
-    cols = conf.groupBy("lang_pred").agg(F.sum("n").alias("ct"))
-    margins = rows.join(
-        cols, F.col("lang_actual") == F.col("lang_pred")
-    ).select((F.col("rt") * F.col("ct")).alias("rc"))
-    tot = conf.agg(
-        F.sum("n").alias("n_total"),
-        F.sum(F.when(F.col("lang_actual") == F.col("lang_pred"), F.col("n"))
-              .otherwise(F.lit(0))).alias("n_agree"),
+    margins = (
+        language_id(df, text_col)
+        .selectExpr(
+            "stack(2, lang_actual, 1, 0, if(lang_actual = lang_pred, 1, 0),"
+            " lang_pred, 0, 1, 0) AS (k, r, c, agree)"
+        )
+        .groupBy("k")
+        .agg(F.sum("r").alias("rt"), F.sum("c").alias("ct"),
+             F.sum("agree").alias("ag"))
     )
-    pe_num = margins.agg(F.sum("rc").alias("pe_num"))
+    tot = margins.agg(
+        F.sum("rt").alias("n_total"),
+        F.sum("ag").alias("n_agree"),
+        F.sum(F.when(F.col("k").isNotNull(), F.col("rt") * F.col("ct")))
+        .alias("pe_num"),
+    )
     po = F.col("n_agree").cast("double") / F.col("n_total")
     pe = F.col("pe_num").cast("double") / (
         F.col("n_total").cast("double") * F.col("n_total")
     )
-    return (
-        tot.crossJoin(F.broadcast(pe_num))
-        .select(
-            F.col("n_total").cast("long").alias("n"),
-            F.round(po, 6).alias("p_o"),
-            F.round(pe, 6).alias("p_e"),
-            F.round((po - pe) / (F.lit(1.0) - pe), 6).alias("kappa"),
-        )
+    return tot.select(
+        F.col("n_total").cast("long").alias("n"),
+        F.round(po, 6).alias("p_o"),
+        F.round(pe, 6).alias("p_e"),
+        F.round(F.try_divide(po - pe, F.lit(1.0) - pe), 6).alias("kappa"),
     )
 
 
