@@ -363,3 +363,21 @@ RATIO_QUERIES = [
 @pytest.mark.parametrize("name", RATIO_QUERIES)
 def test_ratio_query_on_empty_tables_matches_twin(spark, empty_sf_dir, name):
     _assert_matches_twin(spark, empty_sf_dir, name)
+
+
+# The three text formula families (written as Spark SQL text) and the
+# folds over them, on the same 0-row tables: no documents means no
+# failures, 0 on both engines.
+TEXT_FAMILY_QUERIES = [
+    "language_id",
+    "doc_lang_consistency",
+    "text_quality",
+    "gopher_quality_rules",
+    "gopher_rule_overlap_matrix",
+    "stream_quality_gate",
+]
+
+
+@pytest.mark.parametrize("name", TEXT_FAMILY_QUERIES)
+def test_text_family_on_empty_tables_matches_twin(spark, empty_sf_dir, name):
+    _assert_matches_twin(spark, empty_sf_dir, name)

@@ -1,6 +1,6 @@
-"""Source-scan guard: each shared vector-search stage, the quality
-score and the one distributed rank keep a single definition under
-``operators/``.
+"""Source-scan guard: each shared vector-search stage, the text formula
+families (quality score, marker argmax, Gopher battery) and the one
+distributed rank keep a single definition under ``operators/``.
 
 No Spark: the test reads the operator sources, collapses whitespace and
 counts each pinned definition. A pasted second copy of a stage (the
@@ -11,6 +11,7 @@ drift from the first.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -34,9 +35,17 @@ SINGLE = {
     "twin unit-quantized prelude": re.escape("nrm AS MATERIALIZED"),
     "engine exact re-rank join": re.escape(".join(F.broadcast(q"),
     # the composite quality score: text_quality reports it and
-    # clean_corpus filters on it, on each side
-    "engine quality score": re.escape("0.4 * F.least(n_tokens"),
+    # clean_corpus filters on it, on each side; the engine's SQL text
+    # writes DOUBLE literals (0.4D), so it cannot match the twin's pin
+    "engine quality score": re.escape("round(0.4D * least("),
     "twin quality score": re.escape("0.4 * least(n_tokens"),
+    # the language-ID marker argmax (language_id, doc_lang_consistency
+    # and every query built on them) and the Gopher rule battery
+    # (gopher_quality_rules, the ensemble vote, the streaming gate)
+    "engine marker argmax": re.escape("= {_BEST} THEN '{lang}'"),
+    "engine Gopher battery": re.escape(
+        '"ok_alpha_words": "n_alpha_words * 5 >= n_words * 4"'
+    ),
 }
 
 
@@ -70,3 +79,17 @@ def test_only_distrank_ranks_by_range():
         users = {f for f, src in _sources().items() if call in src}
         assert users <= files, f"{call} outside distrank: {sorted(users - files)}"
         assert "distrank.py" in users, call
+
+
+def test_twins_import_no_engine_text():
+    """The DuckDB twins share constants with the engine, never its SQL
+    text: ``oracle_text.py`` imports only upper-case names from
+    ``text.py``, none of its ``*_expr`` text helpers."""
+    tree = ast.parse((OPERATORS / "oracle_text.py").read_text())
+    names = {
+        alias.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.module == "text"
+        for alias in node.names
+    }
+    assert names and all(n.lstrip("_").isupper() for n in names), names

@@ -22,9 +22,15 @@ on a time-shared host.
    tenths of the pairs and median(A) - median(B) > IQR(A); ``slower``
    in the mirror case; otherwise ``no difference``.
 
-Prints one compact summary line; the full report (per-arm times,
-median, quartiles, codegen compiles, JIT milliseconds) goes to OUT.json
-when given.
+Counters come first: each timed run records the py4j call commands
+(``c``) its registry call sent while building the plan, and the report
+gives their median per arm ahead of the times. A build count is
+deterministic for a given plan, so it separates a driver-side change
+from host noise before any time is read.
+
+Prints one compact summary line; the full report (per-arm build py4j
+calls, times, median, quartiles, codegen compiles, JIT milliseconds)
+goes to OUT.json when given.
 Exits 0 after timing, 1 when the arms' rows differ, and 2, before Spark
 starts, on an unregistered query or an arm that cannot be imported.
 """
@@ -42,7 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from tools.check_oracle import rows_to_canonical  # noqa: E402
-from training_etl_demo_2_spark.session import get_spark  # noqa: E402
+from training_etl_demo_2_spark.session import Py4jCalls, get_spark  # noqa: E402
 
 PAIRS = 10  # the fewest alternated pairs a speed claim may rest on
 
@@ -109,16 +115,30 @@ def mismatch(spark, arms: dict, sf_dir: str) -> str | None:
     return None
 
 
+def counting_build(fn, calls: list[int]):
+    """``fn``, appending to ``calls`` the py4j call commands that each
+    of its registry calls sends (the plan build, not the action)."""
+    def build(spark, sf_dir):
+        with Py4jCalls() as sent:
+            df = fn(spark, sf_dir)
+        calls.append(sent.n)
+        return df
+    return build
+
+
 def time_pairs(spark, arms: dict, sf_dir: str) -> dict[str, dict]:
-    runs = {arm: {"times": [], "codegen_compiles": [], "jit_ms": []}
-            for arm in arms}
+    runs = {arm: {"build_py4j_calls": [], "times": [], "codegen_compiles": [],
+                  "jit_ms": []} for arm in arms}
     for i in range(PAIRS):
         for arm in ("A", "B") if i % 2 == 0 else ("B", "A"):
-            dt, _, compiled, jit = bench.run_one(spark, arms[arm], sf_dir)
+            build = counting_build(arms[arm], runs[arm]["build_py4j_calls"])
+            dt, _, compiled, jit = bench.run_one(spark, build, sf_dir)
             runs[arm]["times"].append(dt)
             runs[arm]["codegen_compiles"].append(compiled)
             runs[arm]["jit_ms"].append(jit)
     for r in runs.values():
+        calls = r["build_py4j_calls"]
+        r["build_py4j_calls_median"] = statistics.median(calls) if calls else None
         r["q1"], r["median"], r["q3"] = quartiles(r["times"])
     return runs
 
@@ -164,7 +184,10 @@ def main(argv: list[str]) -> int:
         with open(argv[2], "w") as f:
             json.dump(report, f, indent=1)
     print(json.dumps({
-        "query": query, "arm_b": spec, "verdict": report["verdict"],
+        "query": query, "arm_b": spec,
+        "build_py4j_calls_a": runs["A"]["build_py4j_calls_median"],
+        "build_py4j_calls_b": runs["B"]["build_py4j_calls_median"],
+        "verdict": report["verdict"],
         "b_wins": b_won, "median_a": runs["A"]["median"],
         "median_b": runs["B"]["median"],
         "iqr_a": round(runs["A"]["q3"] - runs["A"]["q1"], 3),

@@ -4340,9 +4340,9 @@ def quality_ensemble_gate(df: DataFrame) -> DataFrame:
     sequence both engines) — so the majority vote is bit-identical.
 
     Scale shape: all three gates are PER-ROW expressions (the shared
-    Column builders ``text.gopher_pass_all`` / ``text.quality_logit``
-    / ``text.blocklist_hits``), so the whole vote is computed in ONE
-    projection of one corpus scan — no doc_id re-joins, nothing but
+    builders ``text._gopher_rules`` / ``text.quality_logit`` /
+    ``text.blocklist_hits``), so the whole vote is computed in the
+    projections of one corpus scan — no doc_id re-joins, nothing but
     the |sources|-row fold ever shuffles. (The SQL twin keeps the
     three-CTE join form for readability; DuckDB correctness, not
     DuckDB speed, is its job.)
@@ -4350,11 +4350,11 @@ def quality_ensemble_gate(df: DataFrame) -> DataFrame:
     Output: (source, n_docs, pass_gopher, pass_classifier,
     pass_blocklist, keep_majority, keep_bp).
     """
-    from .text import blocklist_hits, gopher_pass_all, quality_logit
+    from .text import _gopher_rules, blocklist_hits, quality_logit
 
-    voted = df.select(
+    voted = _gopher_rules(df, ["source", "text"]).select(
         "source",
-        gopher_pass_all("text").cast("long").alias("p1"),
+        F.col("pass_all").cast("long").alias("p1"),
         (quality_logit("text") >= 0).cast("long").alias("p2"),
         (blocklist_hits("text") == 0).cast("long").alias("p3"),
     ).withColumn(

@@ -83,11 +83,30 @@ session config that matters at 100 TB:
   defaults, and executors of a real cluster
   (``spark.executor.extraJavaOptions``) are not tuned: no cluster
   traffic was measured.
+* **No Python call-site capture** —
+  ``spark.python.sql.dataFrameDebugging.enabled=false``. PySpark 4
+  wraps every ``Column`` and ``functions`` call so that it records the
+  Python call site for error messages: a stack walk in Python, then the
+  active-session lookup, a conf read and
+  ``PySparkCurrentOrigin.set``/``.clear`` over py4j, five round trips
+  to the JVM on top of the call's own. Measured at sf0.001 on 4 cores,
+  py4j call commands per plan build with capture on → off: ``F.col``
+  6 → 1; ``skewed_user_revenue`` 217 → 107 and ``q12_late_shipments``
+  144 → 54, whose operators did not change. What is lost: the Python file and line
+  of the failing call in a runtime error's query context. Errors raised
+  from SQL text keep their ``== SQL ==`` context. PySpark reads the
+  setting once per process (``pyspark.errors.utils.is_debugging_enabled``)
+  from the first active session, and reads ``False`` if no session is
+  active yet, so the setting goes on the builder: a later
+  ``spark.conf.set`` changes nothing. A vanilla session handed to
+  ``__spark_entry__.entry(spark)`` keeps Spark's default (on); this
+  conf is never set on a caller's session.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -181,6 +200,10 @@ def get_spark(
         .config(
             "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
         )
+        # No Python call-site capture per DataFrame API call; PySpark
+        # reads this once per process, so it must be set before the
+        # first call (see the module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -195,6 +218,35 @@ def codegen_compiles(spark: SparkSession) -> int:
     count."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+class Py4jCalls:
+    """Counts the py4j call commands (``c``) that this thread sends to
+    the JVM inside ``with Py4jCalls() as calls:``; read ``calls.n``.
+    Plan building is driver-side work, and each command is one socket
+    round trip, so the count measures it without the timing noise."""
+
+    def __enter__(self) -> "Py4jCalls":
+        from pyspark import SparkContext
+
+        self.n = 0
+        self._client = SparkContext._gateway._gateway_client
+        self._outer = self._client.__dict__.get("send_command")
+        send, thread = self._client.send_command, threading.get_ident()
+
+        def send_command(command, *args, **kwargs):
+            if command.startswith("c\n") and threading.get_ident() == thread:
+                self.n += 1
+            return send(command, *args, **kwargs)
+
+        self._client.send_command = send_command
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self._outer is None:
+            del self._client.send_command
+        else:
+            self._client.send_command = self._outer
 
 
 def jit_ms(spark: SparkSession) -> int:

@@ -856,19 +856,14 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate over the same rules. This is the monitoring row a
     deployment alerts on when a crawl source goes bad mid-ingest.
     """
-    from ..operators.text import gopher_quality_rules
+    from ..operators.text import GOPHER_RULES, gopher_quality_rules
 
     docs = _read_stream_fixture(spark, sf_dir, "documents")
-    flags = gopher_quality_rules(docs)
-    fail = lambda c: F.sum((~F.col(c)).cast("long")).cast("long")
-    agg = flags.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        fail("ok_word_count").alias("n_fail_word_count"),
-        fail("ok_mean_word_len").alias("n_fail_mean_word_len"),
-        fail("ok_symbol_ratio").alias("n_fail_symbol_ratio"),
-        fail("ok_alpha_words").alias("n_fail_alpha_words"),
-        fail("ok_stopwords").alias("n_fail_stopwords"),
-        F.sum(F.col("pass_all").cast("long")).cast("long").alias("n_pass_all"),
+    agg = gopher_quality_rules(docs).selectExpr(
+        "CAST(count(1) AS BIGINT) AS n_docs",
+        *[f"CAST(sum(CAST(NOT {r} AS BIGINT)) AS BIGINT) AS n_fail_{r[3:]}"
+          for r in GOPHER_RULES],
+        "CAST(sum(CAST(pass_all AS BIGINT)) AS BIGINT) AS n_pass_all",
     )
     _replay_to_table(agg, "gate_stream_quality_gate")
     return spark.table("gate_stream_quality_gate")
