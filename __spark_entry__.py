@@ -1168,7 +1168,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming Gopher gate telemetry (row-local rules, 1-row state)
         "stream_quality_gate": fixture_queries.stream_quality_gate,
         # k-sizing elbow: total inertia per candidate k from ONE
-        # persisted element relation
+        # element relation
         "kmeans_elbow_curve": _q(
             lambda t: similarity.kmeans_elbow_curve(t["embeddings"])
         ),
@@ -1192,7 +1192,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             lambda t: similarity.ann_recall_vs_dim(t["embeddings"])
         ),
         # multi-probe LSH radius curve: candidate volume + recall per
-        # probe radius from ONE persisted bucket relation
+        # probe radius from ONE bucket relation
         "lsh_probe_curve": _q(
             lambda t: similarity.lsh_probe_curve(t["embeddings"])
         ),

@@ -350,13 +350,19 @@ def test_rank_consumer_on_empty_tables_matches_twin(spark, empty_sf_dir, name):
     _assert_matches_twin(spark, empty_sf_dir, name)
 
 
-# Ratio and filter queries on the same 0-row tables: a ratio over no
-# rows is NULL on both engines, never DIVIDE_BY_ZERO.
+# Ratio and filter queries on the same 0-row tables: a ratio (or a
+# sample moment) over no rows is NULL on both engines, never
+# DIVIDE_BY_ZERO or NaN, and a count or sum over no rows is 0.
 RATIO_QUERIES = [
     "dedup_funnel_report",
     "dictionary_encode_audit",
     "langid_kappa",
     "clean_corpus",
+    "ann_recall_vs_dim",
+    "cap_dedup_order_audit",
+    "lsh_probe_curve",
+    "pack_boundary_audit",
+    "event_overdispersion",
 ]
 
 

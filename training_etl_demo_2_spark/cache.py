@@ -28,6 +28,15 @@ release points, and this module implements both:
 scope and asserts the session's CacheManager is empty afterwards — so a
 new persist site that bypasses this module fails CI, not a user's
 week-long session.
+
+A persist is not free: exchange reuse and AQE already share work
+between branches of one plan, and a lazily filled persist read by
+stages that run at the same time is computed more than once. So a
+persist stays only with a row in ``plans/persist_audit.jsonl`` showing
+that the query ran slower without it (a same-session ``tools/ab.py``
+A/B at sf0.1), or with a named correctness reason (the corrupt-record
+reads in ``io.py``, the range partitioning in ``distrank.py``).
+``tests/test_persist_audit.py`` holds every call site to that rule.
 """
 
 from __future__ import annotations

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..cache import tracked_cache
 
 from ..functions import word_ngrams
 
@@ -1006,7 +1005,7 @@ def ab_uplift_bootstrap_ci(t: dict[str, DataFrame]) -> DataFrame:
         F.max((F.col("event_type") == "purchase").cast("long")).alias("conv")
     )
     in_a = (_hll_mix_spark(F.col("uid"), AB_SEED) % 2 == 0).cast("long")
-    pu = per_user.select("uid", "conv", in_a.alias("is_a")).transform(tracked_cache)
+    pu = per_user.select("uid", "conv", in_a.alias("is_a"))
     point = pu.agg(
         F.sum("is_a").cast("long").alias("n_a"),
         (F.count(F.lit(1)) - F.sum("is_a")).cast("long").alias("n_b"),

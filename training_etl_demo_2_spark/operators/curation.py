@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from ..cache import tracked_cache, tracked_persist
 from . import distrank
 
 from ..functions import FNV_MOD, rolling_hash
@@ -1796,7 +1795,6 @@ def stump_cv_eval(t: dict[str, DataFrame]) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("p"),
     )
-    vf = vf.transform(tracked_cache)
     vall = vf.groupBy("v").agg(
         F.sum("n").cast("long").alias("n_all"),
         F.sum("p").cast("long").alias("p_all"),
@@ -2500,9 +2498,7 @@ def mixture_epochs_plan(
     Output: (source, n_tokens, w_bp, requested_tokens, epochs_micro,
     over_cap, granted_tokens).
     """
-    # three consumers (z, the token total, and the plan itself) — persist
-    # the sources-sized weight relation so the corpus pass runs once
-    w = source_mixture_weights(df, alpha, text_col).transform(tracked_persist)
+    w = source_mixture_weights(df, alpha, text_col)
     z = w.agg(F.sum("w_nano").cast("long").alias("z"))
     tot = w.agg(F.sum("n_tokens").cast("long").alias("n_total"))
     req = F.expr(
@@ -2750,22 +2746,19 @@ def pack_boundary_audit(
             "next_id",
         )
     )
+    # no boundaries: 0 counts and NULL bp, as in the twin
     return pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n_boundaries"),
-        F.sum((F.col("source") != F.col("source_b")).cast("long"))
-        .cast("long")
-        .alias("cross_source"),
-        F.sum((F.col("lang") != F.col("lang_b")).cast("long"))
-        .cast("long")
-        .alias("cross_lang"),
+        F.count_if(F.col("source") != F.col("source_b")).alias("cross_source"),
+        F.count_if(F.col("lang") != F.col("lang_b")).alias("cross_lang"),
     ).select(
         "n_boundaries",
         "cross_source",
         "cross_lang",
-        F.expr("(cross_source * 10000) div n_boundaries")
+        F.expr("(cross_source * 10000) div nullif(n_boundaries, 0)")
         .cast("long")
         .alias("cross_source_bp"),
-        F.expr("(cross_lang * 10000) div n_boundaries")
+        F.expr("(cross_lang * 10000) div nullif(n_boundaries, 0)")
         .cast("long")
         .alias("cross_lang_bp"),
     )
@@ -4089,7 +4082,7 @@ def cap_dedup_order_audit(
     def fold(d: DataFrame, name: str) -> DataFrame:
         return d.agg(
             F.count(F.lit(1)).cast("long").alias("docs_kept"),
-            F.sum(ntok).cast("long").alias("tokens_kept"),
+            F.coalesce(F.sum(ntok), F.lit(0)).cast("long").alias("tokens_kept"),
         ).select(F.lit(name).alias("order"), "docs_kept", "tokens_kept")
 
     cap_first = drop_exact_duplicates(rank_capped(df), text_col)

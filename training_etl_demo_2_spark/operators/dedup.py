@@ -430,6 +430,7 @@ def ngram_jaccard_pairs(
     shingle-hash self-join. Exact but O(pairs sharing a shingle); at
     100 TB prefer ``minhash_lsh_pairs`` (adds banding so only bucket
     collisions meet) — this one is the ground-truth/verify path."""
+    # pays: dedup_ngram_jaccard 2.16 s with, 2.49 s without (persist_audit)
     sh = shingle_hashes(df, text_col, n).transform(tracked_persist)
     return (
         _pair_jaccard(sh)
@@ -468,6 +469,7 @@ def ngram_containment_pairs(
     ``bottomk_containment_pairs`` below) and bucket-join on
     those, verifying survivors through this exact scorer.
     """
+    # pays: dedup_containment 2.43 s with, 2.71 s without (persist_audit)
     sh = shingle_hashes(df, text_col, n).transform(tracked_persist)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "h")
@@ -537,8 +539,7 @@ def _shingle_arrays(
 def _token_relation(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, toks): split-token arrays — the shared upstream of every
     word-shingle derivation. Multi-arm curve queries (shingle_n_curve)
-    tracked-persist THIS relation once and derive each n's shingles from
-    it, so the corpus scan + split runs once instead of per arm."""
+    derive each n's shingles from this one relation."""
     return spread_scan(df).select(
         "doc_id", F.split(F.col(text_col), " ").alias("toks")
     )
@@ -663,6 +664,7 @@ def minhash_lsh_pairs(
     # dominant map cost) runs once. MEMORY_AND_DISK: ~input-sized, disk
     # -spillable at 100 TB — persisting the derived relation, never the
     # corpus.
+    # pays: near_dup_clusters 2.32 s with, 2.82 s without (persist_audit)
     hs = _shingle_arrays(df, text_col, n).transform(tracked_persist)
     return _minhash_pairs_from_arrays(hs, threshold)
 
@@ -671,7 +673,7 @@ def _minhash_pairs_from_arrays(hs: DataFrame, threshold: float) -> DataFrame:
     """Banding + bucket join + exact-Jaccard verify from an (already
     persisted) hs-array relation — shared by :func:`minhash_lsh_pairs`
     and the multi-arm curve queries that derive several hs relations
-    from one persisted token scan."""
+    from one token scan."""
     bands = _band_relation(hs)
     left = bands.select(F.col("doc_id").alias("doc_a"), "band", "bk")
     right = bands.select(F.col("doc_id").alias("doc_b"), "band", "bk")
@@ -685,6 +687,7 @@ def _minhash_pairs_from_arrays(hs: DataFrame, threshold: float) -> DataFrame:
     # a typical session — the pairs query itself and the clustering pass
     # built on it — and plan-identical calls cache-hit, so clustering
     # never re-runs banding + verification.
+    # pays: near_dup_triangles 3.88 s with, 9.70 s without (persist_audit)
     return (
         _pair_jaccard_arrays(hs, pairs=candidates)
         .filter(F.col("jaccard") >= threshold)
@@ -770,6 +773,7 @@ def hamming_band_pairs(
     # persist (r10): BOTH sides of the bucket self-join read this
     # relation — without the barrier the upstream fingerprint pass
     # (SimHash bit sums / perceptual-hash Python pass) runs twice
+    # pays: media_near_dups 1.93 s with, 3.22 s without (persist_audit)
     bands = fp.select(
         F.col(id_col).alias("id"),
         F.col(hash_col).alias("fpv"),
@@ -1122,6 +1126,7 @@ def duplicate_spans(
     )
     # both the dup-gram relation and the flag join consume grams: one
     # materialization instead of two explode+hash corpus passes
+    # pays: duplicate_spans 1.75 s with, 2.11 s without (persist_audit)
     grams = grams.transform(tracked_persist)
     dup = (
         grams.select("doc_id", "h")
@@ -1277,12 +1282,12 @@ def pagerank_near_dup_graph(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     # iterative plan reuse: the edge relation feeds every superstep.
-    # deg is attached to the persisted edges ONCE (r10): each superstep
-    # was re-joining deg separately — 2 joins per superstep for a value
+    # deg is attached to the edges ONCE (r10): each superstep was
+    # re-joining deg separately — 2 joins per superstep for a value
     # that never changes. Persisting (src, dst, deg) halves the join
     # count; pr/deg per edge is unchanged arithmetic.
-    edges = edges.transform(tracked_persist)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    # pays: pagerank_near_dups 5.86 s with, 9.03 s without (persist_audit)
     deg_edges = tracked_persist(edges.join(deg, "src"))
     ranks = deg.select(F.col("src").alias("doc_id"), F.lit(1.0).alias("pr"))
     for _ in range(iters):
@@ -1500,6 +1505,7 @@ def hard_negative_pairs(
     aggregate. Output is symmetric-free (doc_a < doc_b) and fully
     deterministic (round-6 jaccard, integer ids).
     """
+    # pays: hard_negative_pairs 2.58 s with, 3.23 s without (persist_audit)
     sh = shingle_hashes(df, text_col, n).transform(tracked_persist)
     return (
         _pair_jaccard(sh, pairs=None)
@@ -1528,10 +1534,9 @@ def lsh_recall_eval(
     # row-local distinct arrays (identical to the old globally-distinct
     # exploded relation), so the corpus is tokenized+hashed once, not
     # twice.
+    # pays: lsh_recall_eval 2.76 s with, 5.14 s without (persist_audit)
     hs = _shingle_arrays(df, text_col, n).transform(tracked_persist)
-    sh = hs.select("doc_id", F.explode("hs").alias("h")).transform(
-        tracked_persist
-    )
+    sh = hs.select("doc_id", F.explode("hs").alias("h"))
     row_sizes = hs.select("doc_id", F.size("hs").cast("long").alias("n"))
     exact = (
         _pair_jaccard(sh, sizes=row_sizes)
@@ -1713,7 +1718,7 @@ def incremental_near_dup(
     """
     cols = ["doc_id", text_col]
     both = incoming.select(*cols).unionByName(corpus.select(*cols))
-    hs = _shingle_arrays(both, text_col, n).transform(tracked_persist)
+    hs = _shingle_arrays(both, text_col, n)
     bands = _band_relation(hs)
     new_bands = bands.join(
         incoming.select("doc_id"), "doc_id", "semi"
@@ -1779,6 +1784,7 @@ def prefix_filter_jaccard_pairs(
 
     fr = Fraction(threshold).limit_denominator(10_000)
     p, q = fr.numerator, fr.denominator
+    # pays: dedup_prefix_filter 3.09 s with, 4.50 s without (persist_audit)
     sh = shingle_hashes(df, text_col, n).transform(tracked_persist)
     cand = _prefix_candidates(sh, p, q)
     return _pair_jaccard(sh, pairs=cand).filter(F.col("jaccard") >= threshold)
@@ -1816,6 +1822,7 @@ def _prefix_candidates(
     # prefix length = sz - ceil(p*sz/q) + 1, all-integer: DIV is exact.
     # both sides of the candidate self-join read the prefix relation —
     # persist it so the dfreq join + double window run once, not twice
+    # pays: dedup_prefix_filter 2.90 s with, 3.34 s without (persist_audit)
     prefix = (
         ranked.filter(
             F.col("pos")
@@ -2211,11 +2218,11 @@ def blocking_quality_eval(
     # ONE persisted shingle-array relation (r10): the band keys and the
     # exploded exact-truth relation both derive from it — one corpus
     # tokenize+hash pass, not two.
+    # pays: blocking_quality_eval 3.06 s with, 5.47 s without (persist_audit)
     hs = _shingle_arrays(d, "text", n).transform(tracked_persist)
-    sh = hs.select("doc_id", F.explode("hs").alias("h")).transform(
-        tracked_persist
-    )
+    sh = hs.select("doc_id", F.explode("hs").alias("h"))
     bands = _band_relation(hs)
+    # pays: blocking_quality_eval 2.92 s with, 3.40 s without (persist_audit)
     cand = (
         bands.select(F.col("doc_id").alias("doc_a"), "band", "bk")
         .join(
@@ -2227,6 +2234,7 @@ def blocking_quality_eval(
         .distinct()
         .transform(tracked_persist)
     )
+    # pays: blocking_quality_eval 2.98 s with, 3.50 s without (persist_audit)
     truth = (
         _pair_jaccard(
             sh, sizes=hs.select("doc_id", F.size("hs").cast("long").alias("n"))
@@ -2377,7 +2385,6 @@ def near_dup_assortativity(
     pairs = minhash_lsh_pairs(d, "text", n, threshold).select(
         "doc_a", "doc_b"
     )
-    pairs = pairs.transform(tracked_persist)
     nodes = pairs.select(F.col("doc_a").alias("doc_id")).unionAll(
         pairs.select(F.col("doc_b").alias("doc_id"))
     )
@@ -2602,10 +2609,9 @@ def bottomk_containment_pairs(
     # shuffle and slice(array_sort(hs), 1, k) replaces the per-doc
     # row_number window (h values are distinct within a doc, so the
     # k smallest array elements ARE the rn <= k window rows).
+    # pays: bottomk_containment 3.58 s with, 7.09 s without (persist_audit)
     hs = _shingle_arrays(d, "text", n).transform(tracked_persist)
-    sh = hs.select("doc_id", F.explode("hs").alias("h")).transform(
-        tracked_persist
-    )
+    sh = hs.select("doc_id", F.explode("hs").alias("h"))
     sizes = hs.select("doc_id", F.size("hs").cast("long").alias("sz"))
     sketch = hs.select(
         F.col("doc_id").alias("doc_a"),
@@ -2635,7 +2641,7 @@ def bottomk_containment_pairs(
             >= cand_est
         )
     )
-    cand = est.select("doc_a", "doc_b").transform(tracked_persist)
+    cand = est.select("doc_a", "doc_b")
     a_sh = sh.select(F.col("doc_id").alias("doc_a"), "h")
     b_sh = sh.select(F.col("doc_id").alias("doc_b"), "h")
     shared = (
@@ -2841,6 +2847,7 @@ def lpa_communities(
     community = the surviving label (a member doc_id).
     """
     pairs = minhash_lsh_pairs(df, text_col, n, threshold)
+    # pays: lpa_communities 3.62 s with, 4.80 s without (persist_audit)
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(
@@ -2988,17 +2995,10 @@ def tfidf_cosine_pairs(
     occ = spread_scan(df).select(
         "doc_id", F.explode(word_ngram_hashes_composed(tokens, n)).alias("h")
     )
-    # tf feeds the weight relation AND both sides of the candidate
-    # self-join; dfreq feeds the weights and the stop-shingle cut —
-    # persist both so the explode+hash scan and its groupBy run once
     tf = occ.groupBy("doc_id", "h").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
-    ).transform(tracked_persist)
-    dfreq = (
-        tf.groupBy("h")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .transform(tracked_persist)
     )
+    dfreq = tf.groupBy("h").agg(F.count(F.lit(1)).cast("long").alias("df"))
     ndocs = df.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     # weight relation (df kept for the hot/non-hot split) feeds norms,
     # the co-shingle join, and the hot maps
@@ -3017,7 +3017,6 @@ def tfidf_cosine_pairs(
                 ).cast("long")
             ).alias("w"),
         )
-        .transform(tracked_persist)
     )
     # scalar squared norm per doc — a (doc_id, n2) relation, never maps
     wdec = F.col("w").cast("decimal(38,0)")
@@ -3284,6 +3283,7 @@ def _verified_signature_pairs(
 
     ONE persisted shingle-array relation feeds the LSH tier and both
     signature sides, so the corpus is tokenized and hashed once."""
+    # pays: minhash_estimate_error 2.22 s with, 2.61 s without (persist_audit)
     hs = _shingle_arrays(df, text_col, n).transform(tracked_persist)
     pairs = _minhash_pairs_from_arrays(hs, threshold)
     sig = hs.select("doc_id", *_signature_cols())
@@ -3387,7 +3387,7 @@ def dedup_quality_regret(t: dict[str, DataFrame]) -> DataFrame:
     # on the SAME members relation (identical max(struct) rule as
     # dedup_representatives) instead of re-deriving clusters — the
     # second union-find / LSH probe pass is gone.
-    members = tracked_persist(near_dup_clusters(d))
+    members = near_dup_clusters(d)
     q = quality_classifier(d).select("doc_id", "quality_prob")
     reps = _elect_representatives(members, d).select(
         "cluster_id", "rep_doc_id"
@@ -3499,16 +3499,16 @@ def jaccard_threshold_curve(
     lo = min(taus)
     # ONE persisted shingle-array relation (r10) feeds the exact AND the
     # LSH tier (see lsh_recall_eval) — one corpus scan, not two.
+    # pays: jaccard_threshold_curve 3.92 s with, 6.87 s without (persist_audit)
     hs = _shingle_arrays(df, text_col, n).transform(tracked_persist)
-    sh = hs.select("doc_id", F.explode("hs").alias("h")).transform(
-        tracked_persist
-    )
+    sh = hs.select("doc_id", F.explode("hs").alias("h"))
     exact = _pair_jaccard(
         sh, sizes=hs.select("doc_id", F.size("hs").cast("long").alias("n"))
     ).filter(F.col("jaccard") >= lo)
     lsh = _minhash_pairs_from_arrays(hs, lo).select(
         "doc_a", "doc_b", F.lit(1).alias("in_lsh")
     )
+    # pays: jaccard_threshold_curve 4.18 s with, 7.00 s without (persist_audit)
     j = exact.join(lsh, ["doc_a", "doc_b"], "left").transform(tracked_persist)
     outs = []
     for tau in taus:
@@ -3625,9 +3625,9 @@ def dedup_funnel_report(t: dict[str, DataFrame]) -> DataFrame:
     )
     rows.append(_fold("exact", d.join(exact_keep, "doc_id", "semi"), ntok))
     # ONE cluster relation (r10): representatives elected inline from
-    # the same persisted members (identical max(struct) rule as
+    # the same members (identical max(struct) rule as
     # dedup_representatives) — no second union-find / LSH probe pass.
-    clusters = tracked_persist(near_dup_clusters(d))
+    clusters = near_dup_clusters(d)
     members = clusters.select("doc_id")
     reps = _elect_representatives(clusters, d).select(
         F.col("rep_doc_id").alias("doc_id")
@@ -3745,9 +3745,7 @@ def minhash_perm_tradeoff(
     |ks| conditional one-row folds over one joined relation.
     Output: (n_perms, n_pairs, mean_exact, mean_est, bias, mae).
     """
-    joined = _verified_signature_pairs(df, text_col, n, threshold).transform(
-        tracked_persist
-    )
+    joined = _verified_signature_pairs(df, text_col, n, threshold)
     outs = [
         joined.agg(
             F.lit(k).cast("long").alias("n_perms"),
@@ -3840,7 +3838,6 @@ def near_dup_source_matrix(
             "doc_a",
             "doc_b",
         )
-        .transform(tracked_persist)
     )
     n_pairs = cells.groupBy("source_a", "source_b").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")
@@ -3982,7 +3979,7 @@ def cluster_chain_audit(
     pairs = minhash_lsh_pairs(d, text_col, n, threshold)
     # near_dup_clusters' closure over these pairs: a second
     # minhash_lsh_pairs call would persist the same plan twice
-    members = connected_components(pairs).transform(tracked_persist)
+    members = connected_components(pairs)
     sizes = members.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
@@ -4429,6 +4426,7 @@ def dedup_edit_distance(
     # candidate (Filter and Project don't share subexpressions). The
     # persisted relation is candidate-sized — tiny next to the text it
     # already carried to one row.
+    # pays: dedup_edit_distance 2.82 s with, 4.32 s without (persist_audit)
     scored = tracked_persist(
         candidates.join(ta, "doc_a")
         .join(tb, "doc_b")
@@ -4484,17 +4482,16 @@ def shingle_n_curve(
     distinct_shingles, pairs_j50, pairs_j80, exact_pairs), exact
     integers (Jaccard rounded-6 like every verify tier).
 
-    Scale shape: ONE persisted token scan (the corpus scan + split —
-    the shared upstream every arm needs) + |ns| banded passes over it
+    Scale shape: ONE token relation (the corpus scan + split — the
+    shared upstream every arm needs) + |ns| banded passes over it
     (row-local signatures, bucket joins, candidate-bounded verify),
     with each arm's hs-array relation persisted and shared between its
-    stats fold and its pair tier; output |ns| rows. Before round 8
-    each arm re-scanned and re-tokenized the corpus twice (stats +
-    pairs): 6 scans for the default 3-arm curve, now 1.
+    stats fold and its pair tier; output |ns| rows.
     """
-    toks = _token_relation(df, text_col).transform(tracked_persist)
+    toks = _token_relation(df, text_col)
     arms = []
     for n in ns:
+        # pays: shingle_n_curve 4.99 s with, 8.20 s without (persist_audit)
         hs = _shingle_arrays_from_tokens(toks, n).transform(tracked_persist)
         # The two count_distincts in one aggregate DO force an Expand
         # that doubles the exploded relation before the shuffle, but

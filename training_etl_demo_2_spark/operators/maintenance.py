@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..cache import tracked_cache
 from . import distrank
 
 # Compaction: micro-batch files are ~KBs; plan merge groups of ~64 KiB
@@ -625,19 +624,9 @@ def layout_skipping_audit(
         ],
         "zorder": [F.asc("z"), F.asc("l_orderkey"), F.asc("l_linenumber")],
     }
-    # persist (r11): the 1-row domain relation is crossJoined into all
-    # six (layout, dim) arms — without the barrier each arm re-runs the
-    # full-table max scan (up to 6 corpus scans for one row of
-    # metadata; broadcast-exchange reuse recovers some arms, the cache
-    # guarantees ONE). Same-session A/B: neutral at sf0.1 (5.98 vs
-    # 5.85 s, within spread — plans/r11_ab_layout_arms.json); kept for
-    # the strictly-fewer-corpus-scans shape at 100 TB (1-row persist,
-    # no memory cost).
-    doms = tracked_cache(
-        zt.agg(
-            F.max("l_partkey").cast("long").alias("max_part"),
-            F.max("l_suppkey").cast("long").alias("max_supp"),
-        )
+    doms = zt.agg(
+        F.max("l_partkey").cast("long").alias("max_part"),
+        F.max("l_suppkey").cast("long").alias("max_supp"),
     )
 
     def _file_stats(order_cols) -> DataFrame:

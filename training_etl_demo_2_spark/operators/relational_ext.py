@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from ..cache import tracked_cache, tracked_persist
 from . import distrank
 
 
@@ -1232,8 +1231,6 @@ def part_affinity(
     """
     import logging
 
-    from pyspark import StorageLevel
-
     # ONE groupBy on the order key produces the distinct sorted basket
     # sets; pair generation then happens MAP-SIDE from each array (a
     # higher-order-function combination expansion, no self-join) — two
@@ -1247,12 +1244,11 @@ def part_affinity(
         t["lineitem"]
         .groupBy(F.col("l_orderkey").alias("okey"))
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .transform(tracked_persist)
     )
     if log_drops:
-        # opt-in diagnostic: one extra action over the persisted basket
-        # relation. Off by default so plan construction stays lazy (the
-        # cap itself is always enforced below).
+        # opt-in diagnostic: one extra action over the basket relation.
+        # Off by default so plan construction stays lazy (the cap
+        # itself is always enforced below).
         n_dropped = all_sets.filter(F.size("parts") > max_basket).count()
         if n_dropped:
             logging.getLogger(__name__).warning(
@@ -1580,7 +1576,6 @@ def dau_mau_stickiness(t: dict[str, DataFrame]) -> DataFrame:
     e = t["events"]
     day = F.date_trunc("day", F.col("ts"))
     pairs = e.select(day.alias("d"), "user_id").distinct()
-    pairs = pairs.transform(tracked_cache)
     dau = pairs.groupBy("d").agg(
         F.count(F.lit(1)).cast("long").alias("dau")
     )

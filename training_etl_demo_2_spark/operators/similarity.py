@@ -288,6 +288,7 @@ def lsh_topk(
     semi-join + corpus side); the two subtrees differ by projection so
     exchange reuse can't unify them — persist so the mapInPandas
     hyperplane pass over the corpus runs once, not twice."""
+    # pays: ann_lsh_topk 1.07 s with, 1.14 s without (persist_audit)
     buckets = lsh_buckets(emb, dim).transform(tracked_persist)
     return _refine_topk(emb, _lsh_candidates(emb, buckets, query_pred, 1), k)
 
@@ -1230,7 +1231,7 @@ def _lloyd_relations(
     after ``iters`` Lloyd updates — the shared core of
     ``distributed_kmeans`` (membership/inertia), ``kmeans_silhouette``
     (cluster-separation grade) and ``kmeans_elbow_curve`` (which passes
-    a shared persisted ``elems``); the twins unroll the identical
+    a shared ``elems``); the twins unroll the identical
     recurrence in SQL.
 
     Deliberately the LAZY unrolled recurrence (r11 negative result):
@@ -1748,19 +1749,11 @@ def mmr_diverse_topk(
     scores combine them through one shared literal pair, ties break by
     vec_id — the oracle's unrolled greedy CTE chain picks identically.
     """
-    from pyspark import StorageLevel
-
     cand = (
         brute_topk(emb, k=n_cand, query_pred=f"vec_id = {query_id}")
         .select(F.col("neighbor_id").alias("vec_id"), F.col("sim").alias("rel"))
     )
-    # C rows; persisted so the corpus-wide retrieval feeding it runs
-    # once across the two actions below (pair sims + rel collect)
-    ce = (
-        cand.join(emb, "vec_id")
-        .select("vec_id", "rel", "embedding")
-        .transform(tracked_persist)
-    )
+    ce = cand.join(emb, "vec_id").select("vec_id", "rel", "embedding")
     a = ce.select(
         F.col("vec_id").alias("a"), F.col("embedding").alias("ea")
     )
@@ -1779,7 +1772,6 @@ def mmr_diverse_topk(
         .collect()
     )
     rel = {r.vec_id: r.rel for r in ce.select("vec_id", "rel").collect()}
-    ce.unpersist()
     sim = {(r.a, r.b): r.sim for r in pair_rows}
 
     selected: list[int] = []
@@ -2819,9 +2811,7 @@ def semdedup_threshold_curve(
 
     Output: (tau, n_pairs, n_docs) ordered by tau.
     """
-    pairs = cosine_near_pairs(
-        t["embeddings"], threshold=min(taus)
-    ).transform(tracked_persist)
+    pairs = cosine_near_pairs(t["embeddings"], threshold=min(taus))
     docmax = (
         pairs.select(F.col("vec_a").alias("v"), "sim")
         .unionByName(pairs.select(F.col("vec_b").alias("v"), "sim"))
@@ -3583,9 +3573,8 @@ def kmeans_elbow_curve(
     first-k seeding and lowest-cid tie-breaks, like every kmeans tier
     here, so each arm is engine-reproducible.
 
-    Scale shape: ONE persisted (vec, dim, val) element relation shared
-    by every arm (the embedding explode — the dominant map cost — runs
-    once, not |ks| times); each arm is the standard fixed-iteration
+    Scale shape: ONE (vec, dim, val) element relation shared by every
+    arm; each arm is the standard fixed-iteration
     recurrence over it (assign = elems ⋈ k·d centroid broadcast-sized
     relation; update = k·d-row mean fold), ending in a 1-row inertia
     fold. Output: |ks| rows (k, n_vectors, inertia_r6).
@@ -3593,13 +3582,12 @@ def kmeans_elbow_curve(
     elems = (
         emb.select("vec_id", F.posexplode("embedding").alias("dim", "val"))
         .withColumn("val", F.col("val").cast("double"))
-        .transform(tracked_persist)
     )
     arms = []
     for k in ks:
         # identical recurrence to distributed_kmeans (via the shared
         # helper, r11 — previously an inline copy), over the shared
-        # persisted element relation
+        # element relation
         _, cent = _lloyd_relations(emb, k, iters, elems=elems)
         final = _assign_dists(elems, cent, top=1)
         arms.append(
@@ -3652,15 +3640,15 @@ def _recall_bp_fold(
     ``truth`` (both ``(query_id, neighbor_id, …)``): the ``head``
     columns, then ``n_queries`` (distinct queries in ``approx``),
     ``hits`` and ``recall_bp`` = hits·10^4 / (n_queries·k), rounded
-    half up."""
+    half up. No queries: 0 hits and a NULL recall, as in the twin."""
     n_q = F.count_distinct("query_id")
-    hit = F.coalesce(F.col("in_truth"), F.lit(0))
+    hits = F.count("in_truth")
     flags = truth.select("query_id", "neighbor_id", F.lit(1).alias("in_truth"))
     return approx.join(flags, ["query_id", "neighbor_id"], "left").agg(
         *head,
         n_q.cast("long").alias("n_queries"),
-        F.sum(hit).cast("long").alias("hits"),
-        F.floor(F.sum(hit) * 10000.0 / (n_q * k) + F.lit(0.5))
+        hits.cast("long").alias("hits"),
+        F.floor(F.try_divide(hits * 10000.0, n_q * k) + F.lit(0.5))
         .cast("long")
         .alias("recall_bp"),
     )
@@ -3820,8 +3808,7 @@ def lsh_probe_curve(
     exact brute-force truth. The radius is THE accuracy/cost knob of
     the index; this measures both sides of the trade on your corpus.
 
-    Shared work: ONE persisted bucket relation (the hyperplane pass —
-    the dominant map cost — runs once, not |radii| times) and ONE
+    Shared work: ONE bucket relation (the hyperplane pass) and ONE
     brute-force truth pass; each arm differs only in the query-side
     probe explode (1, nbits+1, then +C(nbits,2) probes per table —
     the corpus-side index is untouched at every radius, so candidate
@@ -3829,7 +3816,7 @@ def lsh_probe_curve(
 
     Output: (radius, n_probes_per_table, n_candidates, recall_bp).
     """
-    buckets = lsh_buckets(emb, dim).transform(tracked_persist)
+    buckets = lsh_buckets(emb, dim)
     truth = brute_topk(emb, k, query_pred)
     arms = []
     for r in radii:

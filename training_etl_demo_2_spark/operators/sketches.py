@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from ..cache import tracked_cache
 
 # lgConfigK=12 -> 4 KiB sketches, ~1.6% relative standard error.
 LG_K = 12
@@ -601,7 +600,6 @@ def hll_source_overlap(t: dict[str, DataFrame]) -> DataFrame:
     """
     ev = t["events"]
     regs = _hll_registers(ev, F.col("user_id").cast("long"), "event_type")
-    regs.transform(tracked_cache)
     est_t = _hll_fold(regs, "event_type").select(
         "event_type", F.col("est").alias("e")
     )

@@ -10,7 +10,7 @@ shape matters more than adaptivity (benchmark reproducibility).
 
 ``skew_join`` implements the classic two-path plan:
 
-* **hot keys** (detected from a bounded sample, or caller-supplied):
+* **hot keys** (counted exactly, or caller-supplied):
   fact rows get a random-ish but DETERMINISTIC salt in [0, buckets);
   the dim side's hot rows are replicated ``buckets`` times; the join
   key becomes (key, salt) — each hot key's rows spread over ``buckets``
@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..cache import tracked_cache
 
 DEFAULT_BUCKETS = 16
 # Hot-key detection: keys holding more than this fraction of the
@@ -37,38 +36,28 @@ HOT_FRACTION = 1.0 / 32.0
 
 
 def detect_hot_keys(
-    df: DataFrame,
-    key: str,
-    hot_fraction: float = HOT_FRACTION,
-    sample_fraction: float | None = None,
+    df: DataFrame, key: str, hot_fraction: float = HOT_FRACTION
 ) -> list:
     """Keys holding ≥ ``hot_fraction`` of ``df``'s rows.
 
-    Default is an EXACT per-key count: one map-side-combined shuffle of
-    |distinct keys| rows — the same cost class as the join being
-    planned, and immune to storage order (a prefix ``limit`` sample,
-    the round-2 version, hides hot keys clustered late in file order —
-    e.g. a newly-hot key in time-ordered ingest). The threshold is
-    computed against the ACTUAL counted total, never a requested sample
-    size, so small tables don't silently raise the bar.
-
-    ``sample_fraction`` opts into a seeded Bernoulli row sample first
-    (cheaper on very wide scans; the threshold still uses the actual
-    sampled total). Caveat: Spark's sample is deterministic only for a
-    fixed partition layout."""
-    base = df.select(key)
-    if sample_fraction is not None:
-        base = base.sample(fraction=sample_fraction, seed=42)
-    counts = base.groupBy(key).agg(F.count(F.lit(1)).alias("c")).transform(tracked_cache)
-    try:
-        total = counts.agg(F.sum("c")).collect()[0][0] or 0
-        hot = (
-            counts.filter(F.col("c") >= F.lit(float(total) * hot_fraction))
-            .collect()
-        )
-        return [r[0] for r in hot if r[0] is not None]
-    finally:
-        counts.unpersist()
+    An EXACT per-key count: one map-side-combined shuffle of |distinct
+    keys| rows — the same cost class as the join being planned, and
+    immune to storage order (a prefix ``limit`` sample, the round-2
+    version, hides hot keys clustered late in file order — e.g. a
+    newly-hot key in time-ordered ingest). The threshold is computed
+    against the ACTUAL counted total, never a requested sample size, so
+    small tables don't silently raise the bar. ONE action: the counts
+    are filtered against a broadcast one-row total (the part_affinity
+    pattern), so the driver collects only the hot keys."""
+    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("c"))
+    total = counts.agg(F.sum("c").alias("total"))
+    hot = (
+        counts.crossJoin(F.broadcast(total))
+        .filter(F.col("c") >= F.col("total") * F.lit(hot_fraction))
+        .select(key)
+        .collect()
+    )
+    return [r[0] for r in hot if r[0] is not None]
 
 
 def skew_join(
@@ -82,8 +71,8 @@ def skew_join(
     """Equi-join ``fact ⋈ dim`` on ``key`` with hot-key salting.
 
     ``dim`` must be key-unique (a dimension); ``how`` supports inner /
-    left. Hot keys: caller-supplied, else detected from a bounded
-    sample of the fact side. With no hot keys this degenerates to the
+    left. Hot keys: caller-supplied, else counted on the fact side
+    (:func:`detect_hot_keys`). With no hot keys this degenerates to the
     plain join (zero overhead)."""
     if how not in ("inner", "left"):
         raise ValueError(f"skew_join supports inner/left, got {how!r}")

@@ -45,7 +45,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from ..cache import tracked_cache
 
 _TAG = "__asof_tag"
 _TS = "__asof_ts"
@@ -1338,7 +1337,6 @@ def ccf_event_types(
         .cast("long")
         .alias("c"),
     )
-    cen = cen.transform(tracked_cache)
     den = cen.groupBy("event_type").agg(
         F.sum(dec(F.col("c")) * dec(F.col("c"))).alias("den"),
         F.count(F.lit(1)).cast("long").alias("n"),

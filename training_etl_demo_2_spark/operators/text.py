@@ -32,7 +32,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from ..cache import tracked_persist
 
 from ..functions import (
     normalize_text,
@@ -3231,16 +3230,11 @@ def ngram_novelty_curve(
         "doc_id",
         F.explode(word_ngram_hashes_composed(toks, n)).alias("h"),
     )
-    grams = tracked_persist(grams)
 
     mx = df.agg(F.max("doc_id").alias("mx"))
     bucket = F.expr(f"(doc_id * {n_buckets}) div (mx + 1)").alias("bucket")
 
-    occ = (
-        grams.crossJoin(F.broadcast(mx))
-        .select(bucket, "h")
-    )
-    occ = tracked_persist(occ)
+    occ = grams.crossJoin(F.broadcast(mx)).select(bucket, "h")
     per_occ = occ.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n_occ")
     )

@@ -35,8 +35,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..cache import tracked_cache
-
 _NUMERIC_TYPES = ("int", "bigint", "smallint", "tinyint", "float", "double")
 
 ROUND = 2
@@ -1888,7 +1886,6 @@ def isotonic_calibration(tables: dict) -> DataFrame:
     cum = (
         bins.withColumn("cy", F.sum("ysum").over(w).cast("long"))
         .withColumn("cn", F.sum("n").over(w).cast("long"))
-        .transform(tracked_cache)
     )
     j = cum.select(
         F.col("b").alias("jb"),
@@ -3840,7 +3837,8 @@ def event_overdispersion(t: dict[str, DataFrame]) -> DataFrame:
         F.sum("k").cast("long").alias("s"),
         F.sum(dec(F.col("k")) * dec(F.col("k"))).alias("ss"),
     )
-    n = F.col("n").cast("double")
+    # n <= 1 has no sample variance: every moment is NULL, as in the twin
+    n = F.when(F.col("n") > 1, F.col("n").cast("double"))
     s = F.col("s").cast("double")
     ss = F.col("ss").cast("double")
     mean = s / n
@@ -3869,34 +3867,36 @@ def event_overdispersion_sql() -> str:
     agg AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(k) AS BIGINT) AS s,
-               sum(CAST(k AS HUGEINT) * CAST(k AS HUGEINT)) AS ss
+               sum(CAST(k AS HUGEINT) * CAST(k AS HUGEINT)) AS ss,
+               -- n <= 1 has no sample variance: every moment is NULL
+               CASE WHEN count(*) > 1 THEN CAST(count(*) AS DOUBLE) END AS nd
         FROM per
     )
     SELECT n AS n_users, s AS n_events,
-           round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_r6,
-           round((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
+           round(CAST(s AS DOUBLE) / nd, 6) AS mean_r6,
+           round((nd * CAST(ss AS DOUBLE)
                   - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)), 6)
+                 / (nd * (nd - 1.0)), 6)
                AS var_r6,
-           round(((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
+           round(((nd * CAST(ss AS DOUBLE)
                    - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                  / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)))
-                 / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6)
+                  / (nd * (nd - 1.0)))
+                 / (CAST(s AS DOUBLE) / nd), 6)
                AS dispersion_r6,
-           round(((CAST(n AS DOUBLE) - 1.0)
-                  * ((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
+           round(((nd - 1.0)
+                  * ((nd * CAST(ss AS DOUBLE)
                       - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                     / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)))
-                  / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                  - (CAST(n AS DOUBLE) - 1.0))
-                 / sqrt(2.0 * (CAST(n AS DOUBLE) - 1.0)), 6) AS z_r6,
-           CAST(((CAST(n AS DOUBLE) - 1.0)
-                 * ((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
+                     / (nd * (nd - 1.0)))
+                  / (CAST(s AS DOUBLE) / nd)
+                  - (nd - 1.0))
+                 / sqrt(2.0 * (nd - 1.0)), 6) AS z_r6,
+           CAST(((nd - 1.0)
+                 * ((nd * CAST(ss AS DOUBLE)
                      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                    / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)))
-                 / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                 - (CAST(n AS DOUBLE) - 1.0))
-                / sqrt(2.0 * (CAST(n AS DOUBLE) - 1.0)) > 1.959964 AS INT)
+                    / (nd * (nd - 1.0)))
+                 / (CAST(s AS DOUBLE) / nd)
+                 - (nd - 1.0))
+                / sqrt(2.0 * (nd - 1.0)) > 1.959964 AS INT)
                AS overdispersed
     FROM agg
     """

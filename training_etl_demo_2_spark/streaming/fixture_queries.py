@@ -781,7 +781,6 @@ def stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _band_relation,
         _shingle_arrays,
     )
-    from ..cache import tracked_persist
 
     def banded(df: DataFrame, id_alias: str, hs_alias: str) -> DataFrame:
         hs = _shingle_arrays(df, "text", DEFAULT_NGRAM)
@@ -797,7 +796,7 @@ def stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 2 == 0)
         .select("doc_id", "text")
     )
-    index = banded(corpus, "doc_old", "hb").transform(tracked_persist)
+    index = banded(corpus, "doc_old", "hb")
 
     delivery = (
         _read_stream_fixture(spark, sf_dir, "documents")
